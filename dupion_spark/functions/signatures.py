@@ -101,7 +101,7 @@ def minhash_signatures_batch(texts, cfg: DedupConfig) -> np.ndarray:
     pad_char = int(_PAD_CP).to_bytes(4, "little")
     # empty texts encode as ONE pad char so their window never reads the
     # neighbor text's chars — hashing must not depend on batch composition
-    # (the file path and the DataFrame path batch rows differently)
+    # (each input layout batches rows by its own row groups)
     encoded = [(t or "").encode("utf-32-le") or pad_char for t in texts]
     lens = np.array([len(e) // 4 for e in encoded], dtype=np.int64)
     pad_seq = pad_char * (k - 1)
@@ -131,7 +131,8 @@ def minhash_signatures_batch(texts, cfg: DedupConfig) -> np.ndarray:
 
 def minhash_signature(text: str, cfg: DedupConfig) -> np.ndarray:
     """Single-text wrapper over minhash_signatures_batch (same values by
-    construction — the file path and the DataFrame path must agree)."""
+    construction — the per-row oracle and the batched feature pass must
+    agree)."""
     return minhash_signatures_batch([text], cfg)[0]
 
 

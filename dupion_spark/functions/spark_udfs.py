@@ -2,12 +2,12 @@
 
 Per input_hint, no per-row Python UDFs anywhere: every function here is a
 `pandas_udf` receiving Arrow column batches. Each one wraps the shared numpy
-implementations in `dupion_spark.functions.{codec,signatures}` so the Spark
-pipeline and the single-process oracle compute bit-identical values.
+implementations in `dupion_spark.functions.codec` so the Spark pipeline and
+the single-process oracle compute bit-identical values.
 
 Reference lineage: dupion's single expensive scalar is streaming blake3 over
 file bytes (dupion/src/driver/platterwalker.rs:268-344). The graft's expensive
-scalars are decode+SHA-256-of-pixels and the signature functions; everything
+scalars are decode+SHA-256-of-pixels and pair verification; everything
 cheap (byte length, shape keys, band splitting) stays JVM-side in
 `pyspark.sql.functions`.
 """
@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dupion_spark.config import DedupConfig
-from dupion_spark.functions import codec, signatures
+from dupion_spark.functions import codec
 
 
 def make_pixel_sha256_udf():
@@ -48,46 +48,6 @@ def make_pixel_sha256_udf():
         return pd.Series(out)
 
     return pixel_sha256
-
-
-def make_minhash_udf(cfg: DedupConfig):
-    """caption -> int64[minhash_k] MinHash signature over char shingles."""
-
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def minhash(captions: pd.Series) -> pd.Series:
-        # values are mod (2^31-1) — int32 halves the Arrow transfer
-        sigs = signatures.minhash_signatures_batch(list(captions), cfg).astype("int32")
-        return pd.Series(list(sigs.tolist()))
-
-    return minhash
-
-
-def make_pixel_signature_udf(cfg: DedupConfig):
-    """bytes -> struct(simhash long, phash long) over decoded pixel blocks.
-
-    One decode feeds both signatures (decode is the dominant cost)."""
-
-    schema = T.StructType(
-        [
-            T.StructField("simhash", T.LongType()),
-            T.StructField("phash", T.LongType()),
-        ]
-    )
-
-    @F.pandas_udf(schema)
-    def pixel_signature(data: pd.Series) -> pd.DataFrame:
-        decoded = [codec.try_decode_image(bytes(blob)) for blob in data]
-        # same-shape stacks, bit-identical to the per-image path (parity
-        # tests in tests/test_signatures.py)
-        simhashes, phashes = signatures.pixel_signatures_batch(decoded, cfg)
-        return pd.DataFrame(
-            {
-                "simhash": pd.array(simhashes, dtype="Int64"),
-                "phash": pd.array(phashes, dtype="Int64"),
-            }
-        )
-
-    return pixel_signature
 
 
 # CPU bound per comparison, not a memory bound: the suffix automaton below is

@@ -61,14 +61,26 @@ def ensure_oracle_fixture(scale: str = None) -> None:
     materialize(os.path.join(DATA_ROOT, f"synth_{scale}"), SCALE_ROWS[scale])
 
 
-def load_images(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _images_path(sf_dir: str) -> str:
     fdir, _ = _fixture_dir(sf_dir)
-    return spark.read.parquet(os.path.join(fdir, "images.parquet"))
+    return os.path.join(fdir, "images.parquet")
+
+
+def load_images(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return spark.read.parquet(_images_path(sf_dir))
 
 
 def load_partition_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     fdir, _ = _fixture_dir(sf_dir)
     return spark.read.parquet(os.path.join(fdir, "partition_map.parquet"))
+
+
+def _run(spark: SparkSession, sf_dir: str, partition_map: DataFrame | None = None):
+    """The pipeline over the fixture file itself (source_path), so nothing
+    is staged: features and verify read its row groups worker-side."""
+    path = _images_path(sf_dir)
+    return run_pipeline(spark, spark.read.parquet(path), DedupConfig(),
+                        partition_map=partition_map, source_path=path)
 
 
 # ---------------------------------------------------------------------------
@@ -89,24 +101,17 @@ def q_img_exact_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_img_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full near-dup pipeline -> cluster assignments (image_id, cluster_root)."""
-    images = load_images(spark, sf_dir)
-    result = run_pipeline(spark, images, DedupConfig())
-    return result.clusters
+    return _run(spark, sf_dir).clusters
 
 
 def q_img_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster canonical map via senpai election (O6 graft)."""
-    images = load_images(spark, sf_dir)
-    result = run_pipeline(spark, images, DedupConfig())
-    return result.canonical
+    return _run(spark, sf_dir).canonical
 
 
 def q_img_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-partition rollup hashes (A4 graft)."""
-    images = load_images(spark, sf_dir)
-    parts = load_partition_map(spark, sf_dir)
-    result = run_pipeline(spark, images, DedupConfig(), partition_map=parts)
-    return result.rollup
+    return _run(spark, sf_dir, load_partition_map(spark, sf_dir)).rollup
 
 
 def q_img_groups_shadow(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -114,9 +119,7 @@ def q_img_groups_shadow(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule 2 (the reference default)."""
     from dupion_spark.operators.groups import groups_with_shadow_rule
 
-    images = load_images(spark, sf_dir)
-    parts = load_partition_map(spark, sf_dir)
-    result = run_pipeline(spark, images, DedupConfig(), partition_map=parts)
+    result = _run(spark, sf_dir, load_partition_map(spark, sf_dir))
     out = groups_with_shadow_rule(result.clusters, result.shadows, rule=2)
     return out.select(
         "cluster_root", "n_members", "n_shadowed", "n_visible",

@@ -18,20 +18,8 @@ planning time explodes exponentially by round 3.
 
 from __future__ import annotations
 
-import os
-import sys
-import time
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-_DEBUG = os.environ.get("DUPION_CC_DEBUG") == "1"
-
-
-def _dbg(msg: str) -> None:
-    if _DEBUG:
-        print(f"[cc] {msg}", file=sys.stderr, flush=True)
-
 
 def _neighbors(edges: DataFrame) -> DataFrame:
     """Undirected edge list -> both-direction (u, v) adjacency."""
@@ -93,7 +81,6 @@ def connected_components(
     cluster_root is the minimum member id of the component (deterministic).
     Nodes appearing in no edge are NOT returned — callers union singletons via
     `attach_singletons`."""
-    t0 = time.time()
     # LAZY checkpoints throughout: each round's convergence-check collect is
     # the ONE job that materializes (and caches) that round's star outputs —
     # lazy localCheckpoint still truncates the logical plan at first
@@ -109,14 +96,11 @@ def connected_components(
         edges.select("id_l", "id_r").filter(F.col("id_l") != F.col("id_r")).distinct()
     ).localCheckpoint(eager=False)
     prev_sig = _signature(current)  # materializes `current`
-    _dbg(f"initial materialize+signature {prev_sig} {time.time() - t0:.1f}s")
-    for iteration in range(max_iterations):
-        t0 = time.time()
+    for _ in range(max_iterations):
         large = _large_star(current).localCheckpoint(eager=False)
         nxt = _small_star(large).localCheckpoint(eager=False)
         sig = _signature(nxt)  # one job: materializes large, then nxt
         current = nxt
-        _dbg(f"round {iteration} sig={sig} dt={time.time() - t0:.1f}s")
         if sig == prev_sig:
             break
         prev_sig = sig

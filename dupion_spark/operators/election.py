@@ -1,4 +1,4 @@
-"""Canonical ("senpai") election per cluster + export ordering.
+"""Canonical ("senpai") election per cluster.
 
 - election (reference O6, dupion/src/dedup/mod.rs:60-79): dupion elects the
   group representative by argmin over (n_extents ASC, phys_occurrences DESC,
@@ -9,10 +9,6 @@
        image_id ASC)        # deterministic final tiebreak
   as a groupBy argmin over a lexicographic struct (skew-immune; see
   canonical_map docstring).
-
-- export ordering (reference O2, dupion/src/process/mod.rs:8-33): groups
-  sorted by (size DESC, first-member path ASC); members within a group sorted
-  lexicographically (sort_array on the collected list).
 """
 
 from __future__ import annotations
@@ -72,22 +68,4 @@ def canonical_map(clusters: DataFrame, hashes: DataFrame) -> DataFrame:
             "n_members",
             "total_bytes",
         )
-    )
-
-
-def export_groups(clusters: DataFrame, hashes: DataFrame) -> DataFrame:
-    """Multi-member clusters in dupion's export order (O2): biggest first,
-    then first-member id; members sorted within the group."""
-    grouped = (
-        clusters.join(hashes.select("image_id", "byte_len"), "image_id")
-        .groupBy("cluster_root")
-        .agg(
-            F.count(F.lit(1)).alias("n_members"),
-            F.sum("byte_len").alias("total_bytes"),
-            F.sort_array(F.collect_list("image_id")).alias("members"),
-        )
-        .filter(F.col("n_members") > 1)
-    )
-    return grouped.orderBy(
-        F.col("total_bytes").desc(), F.col("members").getItem(0).asc()
     )

@@ -13,9 +13,9 @@ emits only the small feature columns:
     minhash, simhash, phash
 
 This single pass replaces the separate hash + signature UDF stages (bytes
-would otherwise cross the boundary twice). The DataFrame-input path in
-operators/exact + operators/lsh remains the fallback for non-file inputs
-(small fixtures, tests).
+would otherwise cross the boundary twice). It is the only feature path:
+pipeline.run_pipeline stages a DataFrame input to parquet once and then
+reads it here like any other file-backed input.
 
 At cluster scale the same shape holds for Iceberg: plan file scan tasks from
 the manifest, read data files directly in the workers, emit features.
@@ -52,25 +52,22 @@ FEATURE_SCHEMA = T.StructType(
         # row's bytes — lets downstream stages (pair verification) re-fetch
         # payloads worker-side instead of shipping binary columns through
         # joins/Arrow, and `take` exactly the needed rows instead of
-        # materializing whole row groups. Null on the DataFrame-input
-        # fallback path.
+        # materializing whole row groups.
         T.StructField("src_file", T.StringType()),
         T.StructField("src_rg", T.IntegerType()),
         T.StructField("src_pos", T.IntegerType()),
-        # sid: data-derived LONG surrogate id (file_idx<<40 | rg<<20 | pos on
-        # the file path; monotonically_increasing_id on the DataFrame path,
-        # stable because the feature stage is materialized). The LSH band
-        # explode and pair self-joins shuffle and compare sid instead of the
-        # string image_id — 310M string compares in the join condition and
-        # ~40% of the band-row shuffle bytes were id strings. Strings are
-        # restored by a join on the tiny pair output only.
+        # sid: data-derived LONG surrogate id (file_idx<<40 | rg<<20 | pos).
+        # The LSH band explode and pair self-joins shuffle and compare sid
+        # instead of the string image_id — 310M string compares in the join
+        # condition and ~40% of the band-row shuffle bytes were id strings.
+        # Strings are restored by a join on the tiny pair output only.
         T.StructField("sid", T.LongType()),
     ]
 )
 
 
-def _extract_rows(table, cfg: DedupConfig, src_file: str = None,
-                  src_rg: int = None, file_idx: int = None) -> pd.DataFrame:
+def _extract_rows(table, cfg: DedupConfig, src_file: str, src_rg: int,
+                  file_idx: int) -> pd.DataFrame:
     out = {k: [] for k in ("image_id", "byte_len", "byte_sha256", "pixel_sha256",
                            "w", "h", "caption", "minhash", "simhash", "phash")}
     ids = table.column("image_id").to_pylist()
@@ -118,11 +115,8 @@ def _extract_rows(table, cfg: DedupConfig, src_file: str = None,
     frame["src_file"] = src_file
     frame["src_rg"] = pd.Series([src_rg] * len(frame), dtype="Int32")
     frame["src_pos"] = pd.array(np.arange(len(frame)), dtype="Int32")
-    if file_idx is None:
-        frame["sid"] = pd.array([None] * len(frame), dtype="Int64")
-    else:
-        base = (int(file_idx) << 40) | (int(src_rg) << 20)
-        frame["sid"] = pd.array(base + np.arange(len(frame)), dtype="Int64")
+    base = (int(file_idx) << 40) | (int(src_rg) << 20)
+    frame["sid"] = pd.array(base + np.arange(len(frame)), dtype="Int64")
     return frame
 
 
@@ -234,42 +228,4 @@ def signatures_from_features(features: DataFrame, reps: DataFrame) -> DataFrame:
             F.col("image_id").alias("rep_id"), "sid", "w", "h",
             "minhash", "simhash", "phash",
         ).join(rep_ids, "rep_id", "left_semi")
-    )
-
-
-def features_from_dataframe(images: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Fallback for non-file inputs: same feature schema via in-DF UDFs.
-    Pays the (slow) binary Arrow boundary — fine for small/test inputs."""
-    from pyspark.sql import functions as F
-
-    from dupion_spark.functions.spark_udfs import (
-        make_minhash_udf,
-        make_pixel_sha256_udf,
-        make_pixel_signature_udf,
-    )
-
-    pixel_sha256 = make_pixel_sha256_udf()
-    minhash = make_minhash_udf(cfg)
-    pixel_sig = make_pixel_signature_udf(cfg)
-    return images.select(
-        "image_id",
-        F.length("bytes").cast("long").alias("byte_len"),
-        F.sha2("bytes", 256).alias("byte_sha256"),
-        pixel_sha256(F.col("bytes")).alias("pixel_sha256"),
-        "w",
-        "h",
-        F.coalesce(F.col("caption"), F.lit("")).alias("caption"),
-        minhash(F.col("caption")).alias("minhash"),
-        pixel_sig(F.col("bytes")).alias("_px"),
-    ).select(
-        "image_id", "byte_len", "byte_sha256", "pixel_sha256", "w", "h",
-        "caption", "minhash",
-        F.col("_px.simhash").alias("simhash"),
-        F.col("_px.phash").alias("phash"),
-        F.lit(None).cast("string").alias("src_file"),
-        F.lit(None).cast("int").alias("src_rg"),
-        F.lit(None).cast("int").alias("src_pos"),
-        # stable once the feature stage materializes (it is an eager anchor
-        # in the pipeline); the file path derives sid from data instead
-        F.monotonically_increasing_id().alias("sid"),
     )

@@ -34,36 +34,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dupion_spark.config import DedupConfig
-from dupion_spark.functions.spark_udfs import make_minhash_udf, make_pixel_signature_udf
-
-
-def signature_table(images: DataFrame, reps: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Per-representative signatures: rep_id, minhash array, simhash, phash.
-
-    The pandas UDFs run MAP-SIDE over the scan (bytes never shuffle); the
-    representative filter then semi-joins the small post-UDF rows. Computing
-    signatures for every row and discarding non-reps costs decode cycles, but
-    filtering first would shuffle the bytes column corpus-wide — the losing
-    trade (see operators/exact.exact_hash_table). Exact replicas share the
-    rep's signature downstream either way."""
-    minhash = make_minhash_udf(cfg)
-    pixel_sig = make_pixel_signature_udf(cfg)
-    sigs = images.select(
-        F.col("image_id").alias("rep_id"),
-        F.col("w"),
-        F.col("h"),
-        minhash(F.col("caption")).alias("minhash"),
-        pixel_sig(F.col("bytes")).alias("_px"),
-    ).select(
-        "rep_id",
-        "w",
-        "h",
-        "minhash",
-        F.col("_px.simhash").alias("simhash"),
-        F.col("_px.phash").alias("phash"),
-    )
-    rep_ids = reps.filter(F.col("image_id") == F.col("rep_id")).select("rep_id")
-    return sigs.join(rep_ids, "rep_id", "left_semi")
 
 
 # bit 62 of every band key marks a CAPTION (minhash) bucket: it lets one
@@ -383,13 +353,21 @@ def candidate_pairs(
     # identical: an elided branch contributes zero rows by construction.
     hot_is_simhash = F.col("band_key").bitwiseAND(F.lit(SIMHASH_BIT)) != 0
     hot_classes = hot.agg(
+        F.count(F.lit(1)).alias("n_hot"),
         F.count(F.when(is_caption, 1)).alias("n_capt"),
         F.count(F.when((~is_caption) & hot_is_simhash, 1)).alias("n_sim"),
         F.count(F.when((~is_caption) & ~hot_is_simhash, 1)).alias("n_pix"),
     ).collect()[0]
-    any_hot = (
-        hot_classes["n_capt"] or hot_classes["n_sim"] or hot_classes["n_pix"]
-    )
+    # the elision is sound only while the three classes partition the hot
+    # keys: a key in none of them (a new key class, a null band_key) would
+    # otherwise skip every over-cap branch and flow into the all-pairs join
+    n_classed = hot_classes["n_capt"] + hot_classes["n_sim"] + hot_classes["n_pix"]
+    if n_classed != hot_classes["n_hot"]:
+        raise AssertionError(
+            f"{hot_classes['n_hot']} over-cap band keys but {n_classed} "
+            "fall in a known key class (caption/simhash/phash)"
+        )
+    any_hot = hot_classes["n_hot"] > 0
 
     # the all-pairs self-join joins the SAME materialized plan to itself
     # (aliases, not two differently-projected copies), so both join sides

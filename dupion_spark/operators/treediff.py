@@ -7,9 +7,7 @@ translate each path A/x -> B/x, probe, compare hashes, classify:
   0 (UNIQ)  — differs / present on one side only
 
 Grafted: compare two partitions (or two table snapshots) keyed by rel_name.
-The row-level classification is the full-outer join + CASE; the partition-
-level SUPR/DUPS verdict is the rollup of row statuses (min/agg), mirroring
-find_diff's recursive classification.
+The row-level classification is the full-outer join + CASE.
 """
 
 from __future__ import annotations
@@ -37,40 +35,4 @@ def diff_rows(side_a: DataFrame, side_b: DataFrame, key: str = "rel_name",
             .otherwise(F.lit(0))
             .alias("status"),
         )
-    )
-
-
-def diff_json(diff: DataFrame) -> str:
-    """P3 JSON diff printer (output/treediff.rs:141-159): serialize the row
-    diff with the reference's UNIQ/SUPR/DUPS idents. Presentation step (the
-    reference writes to stdout) — collect only bounded diffs; export the
-    diff_rows table for corpus-scale outputs."""
-    import json
-
-    ident = {2: "DUPS", 1: "SUPR", 0: "UNIQ"}
-    rows = sorted(diff.collect(), key=lambda r: r[0])
-    return json.dumps(
-        {f"{ident[r['status']]} {r[0]}": " " for r in rows}, indent=1
-    )
-
-
-def diff_verdict(diff: DataFrame) -> DataFrame:
-    """Partition-level classification from row statuses (J2 rollup):
-    DUPS if every row matches, SUPR if one side covers the other
-    (only matches + one-side-only rows, with at least one match), else UNIQ."""
-    agg = diff.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum((F.col("status") == 2).cast("int")).alias("n_equal"),
-        F.sum((F.col("status") == 1).cast("int")).alias("n_oneside"),
-        F.sum((F.col("status") == 0).cast("int")).alias("n_differ"),
-    )
-    return agg.select(
-        "n_rows",
-        "n_equal",
-        "n_oneside",
-        "n_differ",
-        F.when(F.col("n_equal") == F.col("n_rows"), F.lit("DUPS"))
-        .when((F.col("n_differ") == 0) & (F.col("n_equal") > 0), F.lit("SUPR"))
-        .otherwise(F.lit("UNIQ"))
-        .alias("verdict"),
     )

@@ -4,10 +4,10 @@ The expensive compare of the staged design (the graft's analog of dupion's
 full blake3 re-read in pass 2, driver/platterwalker.rs:188-374): runs ONLY on
 pairs that survived LSH banding.
 
-Scale notes: the two payload joins (attach bytes/caption for each side) are
-sort-merge joins on image_id; pairs are orders of magnitude fewer than rows,
-so each join shuffles the pair table plus a semi-join-pruned slice of the
-image table. The verify UDF receives Arrow batches bounded by
+Scale notes: gather_payloads reads only the candidate-endpoint payloads
+from the input files; the two payload joins (attach bytes/caption for each
+side) are then sort-merge joins on image_id over that candidate-sized slice,
+never the corpus. The verify UDF receives Arrow batches bounded by
 spark.sql.execution.arrow.maxRecordsPerBatch so executor memory stays bounded
 (two decoded images per pair in flight per row)."""
 
@@ -154,45 +154,25 @@ def verified_edges_from_files(
     pairs: DataFrame, features: DataFrame, cfg: DedupConfig,
     gather_metrics: dict | None = None,
 ) -> DataFrame:
-    """Worker-side pair verification — the scale path for file-backed inputs:
-    gather_payloads fetches only the candidate-endpoint payloads straight
-    from storage (no corpus re-scan, no corpus shuffle), then the compact
-    slice runs through the same join+UDF verify as the DataFrame path."""
+    """Worker-side pair verification: gather_payloads fetches only the
+    candidate-endpoint payloads straight from storage (no corpus re-scan, no
+    corpus shuffle), then the compact slice runs through the join+UDF core
+    in verified_edges. The gather output is materialized once because both
+    payload joins read it."""
     payload = gather_payloads(pairs, features, gather_metrics).localCheckpoint(
         eager=False
     )
-    # the gather output is ALREADY pruned to pair endpoints — re-running the
-    # semi-join (and checkpointing the pruned copy a second time) would
-    # double-write the candidate payload bytes through the single local disk
-    return verified_edges(pairs, payload, cfg, payload_pruned=True)
+    return verified_edges(pairs, payload, cfg)
 
 
 def verified_edges(
-    pairs: DataFrame, images: DataFrame, cfg: DedupConfig,
-    payload_pruned: bool = False,
+    pairs: DataFrame, payload: DataFrame, cfg: DedupConfig,
 ) -> DataFrame:
-    """pairs(id_l, id_r, band_src) x images -> verified edge table
-    (id_l, id_r, band_src, psnr, lcs_len, passed).
+    """pairs(id_l, id_r, band_src) x payload(image_id, bytes, caption) ->
+    verified edge table (id_l, id_r, band_src, psnr, lcs_len, passed).
 
-    payload_pruned: the caller guarantees `images` is already restricted to
-    pair endpoints (and materialized) — skip the endpoint semi-join."""
-    payload = images.select("image_id", "bytes", "caption")
-    # prune the payload to ids that appear in any pair before joining — at
-    # 10^12 rows this keeps the shuffled image slice proportional to the
-    # candidate set, not the corpus. NO forced broadcast: the id set is all
-    # endpoints of all candidate pairs, which at corpus scale can be billions
-    # of rows — a broadcast hint would OOM the driver. AQE converts the
-    # semi-join to broadcast automatically whenever the set IS small. The
-    # payload is then MATERIALIZED once, because the plan below references it
-    # twice (left and right side) and re-executing the semi-join scan twice
-    # doubles the corpus reads.
-    if not payload_pruned:
-        ids = pairs.select(F.col("id_l").alias("image_id")).unionByName(
-            pairs.select(F.col("id_r").alias("image_id"))
-        ).distinct()
-        payload = payload.join(ids, "image_id", "left_semi")
-        payload = payload.localCheckpoint(eager=False)
-
+    `payload` is joined as given, once per pair side: callers pass a slice
+    already restricted to pair endpoints (gather_payloads)."""
     left = payload.select(
         F.col("image_id").alias("id_l"),
         F.col("bytes").alias("bytes_l"),

@@ -21,7 +21,13 @@ run. Run `python -m dupion_spark.pipeline` for a quick local demo.
 
 from __future__ import annotations
 
+import atexit
+import glob
+import os
+import shutil
+import tempfile
 from dataclasses import dataclass
+from hashlib import sha256
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -53,6 +59,60 @@ class PipelineResult:
     metrics_table: DataFrame      # (metric, stage, value) — A7 metrics table
 
 
+def _stage_input(
+    spark: SparkSession, images: DataFrame, checkpoint_dir: str | None
+) -> str:
+    """Write a DataFrame input's (image_id, bytes, caption) to parquet once
+    and return the directory, so it runs the file-backed path.
+
+    Under a checkpoint root the copy lives at <root>/input@<fp16>, where
+    fp16 names the content: one JVM-side pass of count plus an
+    order-insensitive xor of xxhash64(image_id, bytes, caption), so a
+    payload edit under an unchanged id and length still renames it. A
+    complete copy with the same name is reused as is; its files keep their
+    (size, mtime_ns), so a rerun over the same rows resumes every stage.
+    Copies of other content are removed. Without a root the copy goes to a
+    temporary directory removed at interpreter exit (local mode: the
+    executors must see the driver's filesystem).
+
+    The blob column is written without dictionary encoding (a dictionary
+    page holds every payload and defeats the page-selective verify gather,
+    operators/verify.gather_payloads), in defaultParallelism files so the
+    feature stage keeps one task per row group."""
+    if checkpoint_dir:
+        row = images.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.coalesce(
+                F.bit_xor(F.xxhash64("image_id", "bytes", "caption")), F.lit(0)
+            ).alias("h"),
+        ).collect()[0]
+        fp16 = sha256(f"{row['n']}:{row['h']}".encode()).hexdigest()[:16]
+        out = os.path.join(checkpoint_dir, f"input@{fp16}")
+        for stale in glob.glob(os.path.join(checkpoint_dir, "input@*")):
+            if stale != out:
+                shutil.rmtree(stale, ignore_errors=True)
+        if os.path.exists(os.path.join(out, "_SUCCESS")):
+            return out
+    else:
+        out = tempfile.mkdtemp(prefix="dupion-input-")
+        atexit.register(shutil.rmtree, out, ignore_errors=True)
+    # range-partitioned on row position, so the copy keeps the input order
+    # and its sids (file, row group, row) sort like the input rows: star
+    # hubs (min sid of an over-cap bucket) stay the first member in input
+    # order, whatever the input's partitioning
+    (
+        images.select("image_id", "bytes", "caption",
+                      F.monotonically_increasing_id().alias("_pos"))
+        .repartitionByRange(spark.sparkContext.defaultParallelism, "_pos")
+        .sortWithinPartitions("_pos")
+        .drop("_pos")
+        .write.mode("overwrite")
+        .option("parquet.enable.dictionary", "false")
+        .parquet(out)
+    )
+    return out
+
+
 def run_pipeline(
     spark: SparkSession,
     images: DataFrame,
@@ -61,36 +121,24 @@ def run_pipeline(
     checkpoint_dir: str | None = None,
     source_path: str | None = None,
 ) -> PipelineResult:
-    """source_path: optional parquet file/dir holding the SAME rows as
-    `images`. When given, per-image feature extraction reads the payloads
-    directly in the Python workers (one task per parquet row group) instead
-    of shipping the binary column through the JVM->Arrow boundary — measured
-    ~60 MB/s aggregate for binary transfer in this environment, so direct
-    storage reads are the scale path (operators/features.py)."""
+    """images: the input rows (image_id, bytes, caption).
+
+    source_path: optional parquet file/dir holding the SAME rows as
+    `images`; when given, `images` itself is not read. Per-image feature
+    extraction and pair verification read the payloads directly in the
+    Python workers (one task per parquet row group) instead of shipping the
+    binary column through the JVM->Arrow boundary — measured ~60 MB/s
+    aggregate for binary transfer in this environment (operators/features.py).
+    Without source_path, `images` is staged to parquet once (_stage_input)
+    and then read the same way, so every input takes one feature path and
+    one verify path."""
     cfg = cfg or DedupConfig()
+    if not source_path:
+        source_path = _stage_input(spark, images, checkpoint_dir)
     # root-stage input fingerprint: a resumed run over changed input data must
     # NOT reuse checkpointed stages (dupion's (ctime,size) validation, F5).
-    # File-backed inputs fingerprint by (name, size, mtime); DataFrame inputs
-    # by a one-pass count + order-insensitive CONTENT hash — id alone is not
-    # enough (a payload/caption edit under an unchanged id must invalidate the
-    # chain, matching the reference's (ctime,size) content validation). One
-    # pass, no shuffle: length(bytes) stands in for the payload so the hash
-    # stays cheap; a same-id same-length byte flip is caught by the file path
-    # (mtime) — the DataFrame path is the small-fixture/test path.
     # (Computed only when checkpointing is on — no manifests, no fingerprint.)
-    input_fp = ""
-    if checkpoint_dir:
-        if source_path:
-            input_fp = fingerprint_files(source_path)
-        else:
-            row = images.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(
-                    F.bit_xor(F.xxhash64("image_id", F.length("bytes"), "caption")),
-                    F.lit(0),
-                ).alias("h"),
-            ).collect()[0]
-            input_fp = f"df:{row['n']}:{row['h']}"
+    input_fp = fingerprint_files(source_path) if checkpoint_dir else ""
     mgr = CheckpointManager(spark, checkpoint_dir, cfg, input_fingerprint=input_fp)
 
     # Per-row incremental resume (the reference's defining cache behavior:
@@ -116,8 +164,6 @@ def run_pipeline(
         )
 
     def _features() -> DataFrame:
-        if not source_path:
-            return features_op.features_from_dataframe(images, cfg)
         current = file_fingerprints(source_path)
         prior = mgr.prior_manifest("features")
         if prior and prior.get("files") and prior.get("config_hash") == cfg.config_hash():
@@ -200,12 +246,7 @@ def run_pipeline(
 
     # signatures has two consumers — bands, and the pairs stage's id_map
     # projection (sid -> rep_id). Both read the same cheap column slice of
-    # the MATERIALIZED feature anchor, so no extra barrier is needed; but the
-    # sid column's stability across those two re-derivations depends on feats
-    # being an eager checkpoint (the DataFrame path derives sid via
-    # monotonically_increasing_id, which is only stable over a materialized
-    # source — the file path derives sid from data and has no such coupling).
-    # features' barrier=True above is therefore load-bearing for sid.
+    # the MATERIALIZED feature anchor, so no extra barrier is needed.
     sigs = mgr.stage(
         "signatures",
         lambda: features_op.signatures_from_features(feats, reps),
@@ -277,19 +318,16 @@ def run_pipeline(
                 mgr.extra_lineage.append(
                     ("verified_edges", "pairs_verified", fresh_pairs.count())
                 )
-        if source_path:
-            # features carry (file, row group) payload locators: verify reads
-            # payloads worker-side — pair bytes never cross the Arrow boundary
-            out = verify.verified_edges_from_files(
-                fresh_pairs, feats, cfg, gather_metrics=gather_acc
-            )
-        else:
-            out = verify.verified_edges(fresh_pairs, images, cfg)
+        # features carry (file, row group) payload locators: verify reads
+        # payloads worker-side — pair bytes never cross the Arrow boundary
+        out = verify.verified_edges_from_files(
+            fresh_pairs, feats, cfg, gather_metrics=gather_acc
+        )
         return out.unionByName(cached) if cached is not None else out
 
     gather_acc: dict = {}
     edges = mgr.stage("verified_edges", _verify, ["pairs", "features"])
-    if gather_acc:
+    if gather_acc:  # empty when the stage resumed: no gather ran
         # decompress-volume accounting for the page-selective gather
         # (operators/verify.gather_payloads): bytes_total = what whole-chunk
         # reads would have decompressed, bytes_read = what the page walk paid

@@ -223,7 +223,6 @@ class CheckpointManager:
         name: str,
         build: Callable[[], DataFrame],
         parents: list[str] | None = None,
-        materialize: bool = True,
         barrier: bool | str = True,
         manifest_extra: Callable[[], dict] | None = None,
     ) -> DataFrame:
@@ -285,25 +284,22 @@ class CheckpointManager:
 
         df = build()
         snapshot_id = int(time.time() * 1000)
-        if materialize:
-            if self.catalog:
-                # Iceberg backend: stage snapshot via the catalog; the table's
-                # own snapshot id goes into the manifest (resumable lineage)
-                ident = self._table_ident(name)
-                df.writeTo(ident).using("iceberg").createOrReplace()
-                df = self.spark.read.table(ident)
-                snap = self.spark.sql(
-                    f"SELECT snapshot_id FROM {ident}.snapshots "
-                    "ORDER BY committed_at DESC LIMIT 1"
-                ).collect()
-                if snap:
-                    snapshot_id = int(snap[0][0])
-            else:
-                df.write.mode("overwrite").parquet(data_path)
-                df = self.spark.read.parquet(data_path)
-            rows = df.count()
+        if self.catalog:
+            # Iceberg backend: stage snapshot via the catalog; the table's
+            # own snapshot id goes into the manifest (resumable lineage)
+            ident = self._table_ident(name)
+            df.writeTo(ident).using("iceberg").createOrReplace()
+            df = self.spark.read.table(ident)
+            snap = self.spark.sql(
+                f"SELECT snapshot_id FROM {ident}.snapshots "
+                "ORDER BY committed_at DESC LIMIT 1"
+            ).collect()
+            if snap:
+                snapshot_id = int(snap[0][0])
         else:
-            rows = -1
+            df.write.mode("overwrite").parquet(data_path)
+            df = self.spark.read.parquet(data_path)
+        rows = df.count()
         wall_ms = int((time.time() - start) * 1000)
         manifest = dict(expected, rows=rows, wall_ms=wall_ms,
                         snapshot_id=snapshot_id, table_format=self.table_format,
@@ -312,7 +308,7 @@ class CheckpointManager:
             manifest.update(manifest_extra())
         with open(manifest_path, "w") as fh:
             json.dump(manifest, fh, sort_keys=True)
-        if materialize and not self.catalog:
+        if not self.catalog:
             # the new version is committed — retire prior versions (they were
             # only kept so an incremental build could read them during write)
             self._gc_stage_dirs(name, keep=os.path.basename(data_path))

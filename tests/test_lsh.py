@@ -105,6 +105,18 @@ def test_overcap_bucket_is_actually_overcap(spark):
     assert sizes == 22 > CFG.max_band_bucket
 
 
+def test_overcap_key_outside_known_classes_raises(spark):
+    """The hot-branch elision routes over-cap buckets by three key classes
+    (caption, simhash, phash). An over-cap key in none of them, here a null
+    band_key, must fail loudly instead of flowing into the all-pairs join."""
+    from pyspark.sql import functions as F
+
+    bands = lsh.band_table(spark.createDataFrame(_rows(), SIG_SCHEMA), CFG)
+    unclassed = bands.withColumn("band_key", F.lit(None).cast("long"))
+    with pytest.raises(AssertionError, match="known key class"):
+        lsh.candidate_pairs(bands.unionByName(unclassed), CFG)
+
+
 # --- no-Spark property tests of the recall guarantees ----------------------
 # Replicate the band/probe/sub-band key math in plain python and check the
 # pigeonhole claims the pipeline's docstrings make, over random pairs.

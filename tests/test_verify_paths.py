@@ -1,6 +1,7 @@
-"""The worker-side verify path (verified_edges_from_files) must produce the
-same edges and final clusters as the DataFrame payload-join path — they are
-the same operator with different payload transports."""
+"""Worker-side verification (verified_edges_from_files) is the one verify
+path: a DataFrame input is staged to parquet by run_pipeline and must give
+the same edges, clusters and canonical rows as a source_path run over the
+same rows."""
 
 from __future__ import annotations
 
@@ -26,6 +27,7 @@ def source_dir(images_df, tmp_path_factory):
 
 
 def test_worker_side_verify_matches_dataframe_path(spark, images_df, source_dir):
+    """The same rows as a DataFrame input and as a source_path input."""
     cfg = DedupConfig()
     via_files = run_pipeline(
         spark, spark.read.parquet(source_dir), cfg, source_path=source_dir
@@ -49,6 +51,10 @@ def test_worker_side_verify_matches_dataframe_path(spark, images_df, source_dir)
         (r["image_id"], r["cluster_root"]) for r in via_df.clusters.collect()
     )
     assert clusters_files == clusters_df
+
+    canonical_files = sorted(tuple(r) for r in via_files.canonical.collect())
+    canonical_df = sorted(tuple(r) for r in via_df.canonical.collect())
+    assert canonical_files == canonical_df
 
     # gather accounting must be present and consistent. At this tiny scale
     # candidates touch most pages, so the density cutoff legitimately routes
@@ -89,8 +95,8 @@ def test_payload_joins_never_broadcast_blob_side(spark, images_df):
     edges = verify.verified_edges(pairs, images_df, cfg)
     plan = edges._jdf.queryExecution().executedPlan().toString()
     # both payload joins present as sort-merge; the blob side is never a
-    # broadcast build (the endpoint SEMI-join staying broadcast is fine and
-    # expected — it carries ids only, never bytes)
+    # broadcast build (a broadcast semi-join would carry ids only, never
+    # bytes, so it stays allowed)
     assert plan.count("SortMergeJoin") >= 2, plan
     for line in plan.splitlines():
         if "BroadcastHashJoin" in line:
