@@ -27,6 +27,7 @@ from dupion_spark.sources.synth_media import (
     PAIR_MAX_VIDEOS_PER_HASH,
     PAIR_MIN_SHARED,
     RESIZE_HW,
+    codec_image_count,
     materialize_media,
 )
 
@@ -153,7 +154,7 @@ def q_media_codec_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, _, n_images = _media_counts(sf_dir)
     images = _media_fan_out(
         spark.read.parquet(os.path.join(fdir, "codec_images.parquet")), "image_id",
-        n_images // 2,
+        codec_image_count(n_images),
     )
     sha = make_pixel_sha256_udf()
     return images.select(

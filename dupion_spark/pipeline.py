@@ -9,14 +9,18 @@ The staged dataflow (SURVEY.md §3.1 "Spark shape"):
       ├─ bands:   LSH band explode → band_key
       ├─ pairs:   bucketed self-join (+ chain-links for hot buckets)
       ├─ edges:   PSNR/LCS verification of candidate pairs
-      ├─ cc:      large-star/small-star connected components
+      ├─ cc:      connected components (one union-find task when small,
+      │           else large-star/small-star rounds)
       ├─ clusters: rep assignments expanded to all rows + singletons
       ├─ canonical: senpai election per cluster (O6)
       └─ rollup/shadow: per-partition rollup + duplicated-partition shadows
 
-Every stage goes through the CheckpointManager (resume = skip stages whose
-manifest chain matches), and stage/partition lineage + metrics accumulate per
-run. Run `python -m dupion_spark.pipeline` for a quick local demo.
+Every stage goes through the CheckpointManager: under a checkpoint root the
+four persisted stages (features, pairs, verified_edges, clusters) resume when
+their manifest chain matches and the others are rebuilt from them; row counts
+and counters come from the jobs that materialize the stages. Stage/partition
+lineage + metrics accumulate per run. Run `python -m dupion_spark.pipeline`
+for a quick local demo.
 """
 
 from __future__ import annotations
@@ -29,7 +33,7 @@ import tempfile
 from dataclasses import dataclass
 from hashlib import sha256
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from dupion_spark.config import DedupConfig
@@ -147,10 +151,22 @@ def run_pipeline(
     # granularity: the features manifest stores a per-file fingerprint map;
     # when the chain is stale but SOME input files are unchanged, the rebuild
     # reuses their checkpointed feature rows and re-extracts (decodes) ONLY
-    # new/changed files. `incr` carries the unchanged-file set forward so the
-    # verify stage can likewise reuse prior pair verdicts whose endpoints'
-    # content is provably unchanged. At 10^12 rows with daily appends this is
-    # the difference between re-decoding the corpus and decoding the delta.
+    # new/changed files. New and changed files get file indices from the
+    # prior next_file_idx on, so every row with sid >= fresh_sid is fresh
+    # content and every row below it was reused; the verify stage reuses
+    # prior verdicts only between rows below it. At 10^12 rows with daily
+    # appends this is the difference between re-decoding the corpus and
+    # decoding the delta.
+    prior_feats = mgr.prior_manifest("features")
+    incremental = bool(
+        prior_feats and prior_feats.get("files")
+        and prior_feats.get("config_hash") == cfg.config_hash()
+    )
+    next_idx = (
+        int(prior_feats.get("next_file_idx", len(prior_feats["files"])))
+        if incremental else 0
+    )
+    fresh_sid = next_idx << 40  # sid = file_idx<<40 | rg<<20 | pos
     incr: dict = {"reused_files": None, "manifest": {}}
 
     def _files_df(paths) -> DataFrame:
@@ -165,9 +181,8 @@ def run_pipeline(
 
     def _features() -> DataFrame:
         current = file_fingerprints(source_path)
-        prior = mgr.prior_manifest("features")
-        if prior and prior.get("files") and prior.get("config_hash") == cfg.config_hash():
-            prior_files = prior["files"]
+        if incremental:
+            prior_files = prior_feats["files"]
             unchanged = sorted(
                 p for p, fp in current.items()
                 if p in prior_files and prior_files[p]["fp"] == fp
@@ -177,7 +192,6 @@ def run_pipeline(
                 fresh = sorted(set(current) - set(unchanged))
                 # fresh files get indices past every previously-used one so
                 # their derived sids can never collide with reused rows'
-                next_idx = int(prior.get("next_file_idx", len(prior_files)))
                 fresh_idx = [(p, next_idx + i) for i, p in enumerate(fresh)]
                 incr["manifest"] = {
                     "files": {
@@ -202,25 +216,27 @@ def run_pipeline(
         }
         return features_op.extract_features_from_files(spark, source_path, cfg)
 
-    # Barrier policy (see CheckpointManager.stage): eager anchors ONLY where
-    # concurrent AQE stage materialization would otherwise race a lazy
-    # checkpoint (features/reps/pairs/verified_edges); single-ordered-
-    # consumer stages are lazy (hashes/clusters/canonical — the first
-    # consuming job materializes them, no extra barrier) or plain
-    # composition. Each eager checkpoint is ~1s of serial wall, so the
-    # policy trades the minimum barrier count that keeps materialization
-    # race-free.
-    feats = mgr.stage("features", _features,
-                      manifest_extra=lambda: incr["manifest"])
-    # corpus size (one metadata-cheap count on the materialized feature
-    # anchor): reused for the A7 metrics AND as the adaptive band-plan hint
-    n_images = feats.count()
+    # Barrier policy (see CheckpointManager.stage), the same with or without
+    # a checkpoint root; under a root the four persisted stages (features,
+    # pairs, verified_edges, clusters) are written instead, and the write is
+    # their barrier. Eager anchors ONLY where concurrent AQE stage
+    # materialization would otherwise race a lazy checkpoint
+    # (features/reps/pairs/verified_edges); single-ordered-consumer stages
+    # are lazy (hashes/clusters/canonical — the first consuming job
+    # materializes them, no extra barrier) or plain composition. Each eager
+    # checkpoint is ~1s of serial wall, so the policy trades the minimum
+    # barrier count that keeps materialization race-free.
+    feats = mgr.stage(
+        "features", _features, manifest_extra=lambda: incr["manifest"],
+        counters={"rows_reused": F.count_if(F.col("sid") < F.lit(fresh_sid))},
+    )
+    # corpus size, observed in the job that materialized the feature anchor:
+    # reused for the A7 metrics AND as the adaptive band-plan hint
+    n_images = mgr.record("features").rows_out
     if incr["reused_files"] is not None:
         # lineage proof of the incremental rebuild: how many feature rows
         # were reused from the prior checkpoint vs actually re-extracted
-        n_reused = feats.join(
-            _files_df(incr["reused_files"]), "src_file", "left_semi"
-        ).count()
+        n_reused = mgr.record("features").counters["rows_reused"]
         mgr.extra_lineage.append(("features", "rows_reused", n_reused))
         mgr.extra_lineage.append(
             ("features", "rows_recomputed", n_images - n_reused)
@@ -261,30 +277,32 @@ def run_pipeline(
     # materialized pairs table IS the verify input — raw band-collision pairs
     # never hit a barrier or a shuffle. Band rows carry the long surrogate
     # sid; the (sid -> image_id) map restores strings on the pair output.
+    # star-recall exposure counter: pairs whose ONLY provenance is hub-star
+    # links (band_src 'star_*', operators/lsh) are the population exposed to
+    # the documented over-cap star caveat — surfaced per run so saturation
+    # degradation is visible instead of latent.
     pairs = mgr.stage(
         "pairs",
         lambda: lsh.candidate_pairs(
             bands, cfg, id_map=sigs.select("sid", "rep_id"), n_reps=n_images
         ),
         ["bands"],
+        counters={"star_only_pairs": F.count_if(F.col("band_src").startswith("star_"))},
     )
-    # star-recall exposure metric: pairs whose ONLY provenance is hub-star
-    # links (band_src 'star_*', operators/lsh) are the population exposed to
-    # the documented over-cap star caveat — surfaced per run so saturation
-    # degradation is visible instead of latent. One cheap count on the
-    # already-materialized pair anchor.
-    mgr.extra_lineage.append((
-        "pairs", "star_only_pairs",
-        pairs.filter(F.col("band_src").startswith("star_")).count(),
-    ))
+    mgr.extra_lineage.append(
+        ("pairs", "star_only_pairs", mgr.record("pairs").counters["star_only_pairs"])
+    )
 
     def _verify() -> DataFrame:
         # incremental verdict reuse: a prior run's (id_l, id_r) verdict is
-        # valid iff BOTH endpoints come from unchanged input files (content
-        # identical => deterministic verify verdict identical) AND the pair
-        # was regenerated by the CURRENT pair stage (so the edge set equals a
+        # valid iff neither endpoint is fresh content (content identical =>
+        # deterministic verify verdict identical) AND the pair was
+        # regenerated by the CURRENT pair stage (so the edge set equals a
         # from-scratch run's exactly — a stale candidate that no longer
-        # band-collides must not survive). Everything else is re-verified.
+        # band-collides, or one whose endpoint was deleted, must not
+        # survive). One left join of the current pairs onto the valid prior
+        # verdicts, materialized once, splits them; unmatched pairs are
+        # verified.
         fresh_pairs, cached = pairs, None
         prior_manifest = mgr.prior_manifest("verified_edges")
         if (
@@ -294,30 +312,37 @@ def run_pipeline(
         ):
             prior_edges = mgr.prior_output("verified_edges")
             if prior_edges is not None:
-                stable = feats.join(
-                    _files_df(incr["reused_files"]), "src_file", "left_semi"
-                ).select("image_id")
+                fresh_ids = feats.filter(F.col("sid") >= F.lit(fresh_sid)).select(
+                    "image_id"
+                )
                 valid = (
                     prior_edges
-                    .join(stable.withColumnRenamed("image_id", "id_l"),
-                          "id_l", "left_semi")
-                    .join(stable.withColumnRenamed("image_id", "id_r"),
-                          "id_r", "left_semi")
-                    .select("id_l", "id_r", "psnr", "lcs_len", "passed")
-                    .localCheckpoint(eager=False)  # 2 consumers: join + anti
+                    .join(fresh_ids.withColumnRenamed("image_id", "id_l"),
+                          "id_l", "left_anti")
+                    .join(fresh_ids.withColumnRenamed("image_id", "id_r"),
+                          "id_r", "left_anti")
+                    .select("id_l", "id_r", "psnr", "lcs_len", "passed",
+                            F.lit(True).alias("_hit"))
                 )
-                cached = pairs.join(valid, ["id_l", "id_r"]).select(
+                hit = F.col("_hit").isNotNull()
+                obs = Observation()
+                joined = (
+                    pairs.join(valid, ["id_l", "id_r"], "left")
+                    .observe(obs, F.count_if(hit).alias("reused"),
+                             F.count_if(~hit).alias("verified"))
+                    .localCheckpoint(eager=True)
+                )
+                split = obs.get
+                mgr.extra_lineage.append(
+                    ("verified_edges", "pairs_reused", split["reused"])
+                )
+                mgr.extra_lineage.append(
+                    ("verified_edges", "pairs_verified", split["verified"])
+                )
+                cached = joined.filter(hit).select(
                     "id_l", "id_r", "band_src", "psnr", "lcs_len", "passed"
                 )
-                fresh_pairs = pairs.join(
-                    valid.select("id_l", "id_r"), ["id_l", "id_r"], "left_anti"
-                )
-                mgr.extra_lineage.append(
-                    ("verified_edges", "pairs_reused", cached.count())
-                )
-                mgr.extra_lineage.append(
-                    ("verified_edges", "pairs_verified", fresh_pairs.count())
-                )
+                fresh_pairs = joined.filter(~hit).select("id_l", "id_r", "band_src")
         # features carry (file, row group) payload locators: verify reads
         # payloads worker-side — pair bytes never cross the Arrow boundary
         out = verify.verified_edges_from_files(
@@ -379,10 +404,10 @@ def run_pipeline(
         lineage = lineage.unionByName(plin)
 
     # metrics: stage-1 prune ratio (BASELINE.md qualitative metric) + stage rows.
-    # Counted over the checkpointed feature table (one row per input image) —
+    # Counted over the hashes of the feature table (one row per input image) —
     # re-scanning the input source for a count would be a second full-footer
-    # pass at 10^6-file scale. (n_images was counted right after the feature
-    # stage — it also drives the adaptive band plan.)
+    # pass at 10^6-file scale. (n_images was observed with the feature stage —
+    # it also drives the adaptive band plan.)
     n_hashed = hashes.filter(F.col("pixel_sha256").isNotNull()).count()
     metrics = {
         "n_images": n_images,

@@ -3,25 +3,37 @@
 Reference analog: dupion persists its whole VFS arena as a zstd+msgpack cache
 (dupion/src/vfs/deser.rs:232-275), validates each row by (ctime, size)
 (vfs/entry.rs:173-198), and resumes hashing only what changed. The graft's
-equivalent is per-STAGE snapshot tables:
+equivalent is per-stage snapshot tables:
 
-- every stage writes its output as parquet under <root>/<stage>/ plus a
-  manifest JSON carrying {stage, config_hash, parents' manifest hashes,
-  row count, wall_ms}. The manifest hash chains (Merkle-style), so a resumed
-  run reuses a stage iff the config AND the entire upstream chain are
-  byte-identical — dupion's (ctime,size) validation generalized.
-- a `lineage` table (stage, part_key, rows_in, rows_out, wall_ms, snapshot_id,
-  resumed) and a `metrics` table accumulate per run (north_rule: per-partition
-  lineage + metrics tables).
+- every stage computes a manifest hash over {stage, config_hash, parents'
+  manifest hashes} (the root stage also hashes the input fingerprint). The
+  hash chains (Merkle-style), so a resumed run reuses a stage iff the config
+  AND the entire upstream chain are byte-identical — dupion's (ctime,size)
+  validation generalized.
+- only PERSISTED_STAGES write their output as parquet under
+  <root>/<stage>@<hash8>/ plus a manifest JSON carrying the hash inputs, the
+  row count, the stage's observed counters and wall_ms. `features` and
+  `verified_edges` persist because the incremental path reads their prior
+  output; `pairs` (the LSH cascade) and `clusters` (connected components)
+  because they are expensive to recompute. Every other stage is a cheap
+  projection or aggregate of a persisted parent: it is rebuilt from its
+  parents at its barrier level, under a root exactly as without one, and
+  counts as resumed when all its parents resumed.
+- row counts and counters come from the job that writes the stage (or runs
+  its eager checkpoint), via DataFrame.observe, not from a count job after.
+- a `lineage` table (stage, part_key, rows_out, wall_ms, resumed,
+  manifest_hash) and a `metrics` table accumulate per run (north_rule:
+  per-partition lineage + metrics tables).
 
 On a real deployment these writes target Iceberg tables; the manager PROBES
 for a configured Iceberg catalog at construction (`iceberg_catalog`) and,
-when one exists, writes each stage via `df.writeTo(<catalog>.<ns>.<stage>)
-.createOrReplace()` and resumes via `spark.read.table` — snapshot ids come
-from the catalog and land in the manifest. The sandbox has no Iceberg
-runtime jar, so the probe returns None there and the layout falls back to
-plain parquet + manifest with identical semantics (SURVEY.md §7 "hard
-parts" (e)). The Merkle manifest chain is the same in both backends.
+when one exists, writes each persisted stage via
+`df.writeTo(<catalog>.<ns>.<stage>).createOrReplace()` and resumes via
+`spark.read.table` — snapshot ids come from the catalog and land in the
+manifest. The sandbox has no Iceberg runtime jar, so the probe returns None
+there and the layout falls back to plain parquet + manifest with identical
+semantics (SURVEY.md §7 "hard parts" (e)). The Merkle manifest chain is the
+same in both backends.
 """
 
 from __future__ import annotations
@@ -33,10 +45,14 @@ from dataclasses import dataclass, field
 from hashlib import sha256
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from dupion_spark.config import DedupConfig
+
+# the stages that write parquet + a manifest under a checkpoint root (see the
+# module docstring for why these four)
+PERSISTED_STAGES = frozenset({"features", "pairs", "verified_edges", "clusters"})
 
 
 @dataclass
@@ -46,6 +62,7 @@ class StageRecord:
     wall_ms: int
     resumed: bool
     manifest_hash: str
+    counters: dict = field(default_factory=dict)
 
 
 def fingerprint_files(source_path: str) -> str:
@@ -122,6 +139,8 @@ class CheckpointManager:
         # incremental feature rebuild's rows_reused / rows_recomputed split)
         self.extra_lineage: list[tuple[str, str, int]] = []
         self._hashes: dict[str, str] = {}
+        self._resumed: dict[str, bool] = {}
+        self._orphans_cleared = False
         # table-format backend: Iceberg when a catalog is configured AND its
         # class loads; parquet+manifest otherwise. Manifest chain identical.
         self.catalog = iceberg_catalog(spark) if root else None
@@ -217,7 +236,33 @@ class CheckpointManager:
         }
         return sha256(json.dumps(core, sort_keys=True).encode()).hexdigest()[:16]
 
+    def _clear_orphans(self) -> None:
+        """Remove the manifests and data dirs of stages this layout no longer
+        persists (roots written when every stage was persisted hold them).
+        Runs once, after the run's first committed write, so a root is never
+        left without a complete resumable version."""
+        if self._orphans_cleared:
+            return
+        self._orphans_cleared = True
+        suffix = ".manifest.json"
+        for entry in os.listdir(self.root):
+            stage = entry[: -len(suffix)]
+            if entry.endswith(suffix) and stage not in PERSISTED_STAGES:
+                self._gc_stage_dirs(stage, keep="")
+                os.remove(os.path.join(self.root, entry))
+
+    @staticmethod
+    def _count(df: DataFrame, counters: dict) -> dict:
+        """rows + counters with an explicit aggregate job: the general path
+        for a materialization that carries no observation."""
+        row = df.agg(*_aggregates(counters)).collect()[0]
+        return {k: int(v or 0) for k, v in row.asDict().items()}
+
     # -- public --------------------------------------------------------------
+    def record(self, stage: str) -> StageRecord:
+        """The stage's latest record: rows, counters, resumed."""
+        return next(r for r in reversed(self.records) if r.stage == stage)
+
     def stage(
         self,
         name: str,
@@ -225,13 +270,19 @@ class CheckpointManager:
         parents: list[str] | None = None,
         barrier: bool | str = True,
         manifest_extra: Callable[[], dict] | None = None,
+        counters: dict | None = None,
     ) -> DataFrame:
-        """Run (or resume) a named stage. With no checkpoint root, just builds.
+        """Run (or resume) a named stage.
 
-        barrier (no-checkpoint-root mode only) — three levels, because every
-        EAGER localCheckpoint is a job BARRIER (~1s of parallelism-independent
-        wall each) and a pipeline of a dozen stages pays that serially
-        regardless of cluster size:
+        Under a checkpoint root only PERSISTED_STAGES write parquet + a
+        manifest and resume from it. Every other stage is built from its
+        parents through the barrier path below, with or without a root; it
+        still registers its manifest hash in the chain, and it counts as
+        resumed exactly when all its parents resumed.
+
+        barrier — three levels, because every EAGER localCheckpoint is a job
+        BARRIER (~1s of parallelism-independent wall each) and a pipeline of
+        a dozen stages pays that serially regardless of cluster size:
           True    eager localCheckpoint: its own job, plan truncated NOW.
                   Only for anchor stages whose downstream plan would otherwise
                   grow past what AQE re-plans cheaply.
@@ -241,25 +292,53 @@ class CheckpointManager:
                   compute-once semantics for free; the barrier cost folds into
                   a job that was running anyway.
           False   plain plan composition (single-consumer projections whose
-                  consumers shuffle on the same key — ReuseExchange dedups)."""
-        parents = parents or []
-        start = time.time()
-        if not self.root:
-            # no checkpoint root: localCheckpoint per the barrier level. Eager
-            # anchors exist because feeding the WHOLE multi-stage pipeline to
-            # AQE as one giant tree makes it re-plan the full tree after every
-            # shuffle (measured 109s vs 35s for the same work stage-by-stage
-            # at sf0.1) — but most stages only need the lazy flavor.
-            df = build()
-            if barrier == "lazy":
-                df = df.localCheckpoint(eager=False)
-            elif barrier:
-                df = df.localCheckpoint(eager=True)
-            self.records.append(StageRecord(name, -1, int((time.time() - start) * 1000), False, ""))
-            return df
+                  consumers shuffle on the same key — ReuseExchange dedups).
+        A persisted stage's write is its barrier.
 
-        expected = self._expected_manifest(name, parents)
-        expected_hash = self._hash_manifest(expected)
+        counters: {name: aggregate Column} over the stage output, for a
+        persisted or barrier=True stage. They and the row count are taken
+        with DataFrame.observe in the job that writes the stage or runs its
+        eager localCheckpoint, and a persisted stage keeps them in its
+        manifest, so a resumed stage reports them with no job. A manifest
+        without counters and the Iceberg backend take one aggregate job
+        instead. Lazy and plain stages run no job of their own: their row
+        count is -1."""
+        parents = parents or []
+        counters = counters or {}
+        start = time.time()
+        expected_hash = ""
+        if self.root:
+            expected = self._expected_manifest(name, parents)
+            expected_hash = self._hash_manifest(expected)
+            if name in PERSISTED_STAGES:
+                return self._persisted_stage(
+                    name, build, expected, expected_hash, manifest_extra,
+                    counters, start,
+                )
+            self._hashes[name] = expected_hash
+
+        # barrier path: the same with or without a root. Eager anchors exist
+        # because feeding the WHOLE multi-stage pipeline to AQE as one giant
+        # tree makes it re-plan the full tree after every shuffle (measured
+        # 109s vs 35s for the same work stage-by-stage at sf0.1) — but most
+        # stages only need the lazy flavor.
+        df = build()
+        values = {"rows": -1}
+        if barrier is True:
+            obs = Observation()
+            df = _observed(df, obs, counters).localCheckpoint(eager=True)
+            values = obs.get
+        elif barrier == "lazy":
+            df = df.localCheckpoint(eager=False)
+        resumed = bool(parents) and all(self._resumed.get(p) for p in parents)
+        self._record(name, values, start, resumed, expected_hash)
+        return df
+
+    def _persisted_stage(
+        self, name: str, build: Callable[[], DataFrame], expected: dict,
+        expected_hash: str, manifest_extra: Callable[[], dict] | None,
+        counters: dict, start: float,
+    ) -> DataFrame:
         manifest_path = self._manifest_path(name)
         data_path = self._data_path(name, expected_hash)
 
@@ -275,11 +354,13 @@ class CheckpointManager:
                     if self.catalog
                     else self.spark.read.parquet(resume_path)
                 )
+                values = {"rows": on_disk.get("rows", -1),
+                          **on_disk.get("counters", {})}
+                if any(k not in values for k in counters):
+                    # a manifest written before counters were kept
+                    values = self._count(df, counters)
                 self._hashes[name] = expected_hash
-                self.records.append(
-                    StageRecord(name, on_disk.get("rows", -1),
-                                int((time.time() - start) * 1000), True, expected_hash)
-                )
+                self._record(name, values, start, True, expected_hash)
                 return df
 
         df = build()
@@ -296,14 +377,17 @@ class CheckpointManager:
             ).collect()
             if snap:
                 snapshot_id = int(snap[0][0])
+            values = self._count(df, counters)
         else:
-            df.write.mode("overwrite").parquet(data_path)
+            obs = Observation()
+            _observed(df, obs, counters).write.mode("overwrite").parquet(data_path)
             df = self.spark.read.parquet(data_path)
-        rows = df.count()
+            values = obs.get
         wall_ms = int((time.time() - start) * 1000)
-        manifest = dict(expected, rows=rows, wall_ms=wall_ms,
+        manifest = dict(expected, rows=values["rows"], wall_ms=wall_ms,
                         snapshot_id=snapshot_id, table_format=self.table_format,
-                        data_dir=os.path.basename(data_path))
+                        data_dir=os.path.basename(data_path),
+                        counters={k: values[k] for k in counters})
         if manifest_extra:
             manifest.update(manifest_extra())
         with open(manifest_path, "w") as fh:
@@ -312,9 +396,19 @@ class CheckpointManager:
             # the new version is committed — retire prior versions (they were
             # only kept so an incremental build could read them during write)
             self._gc_stage_dirs(name, keep=os.path.basename(data_path))
+            self._clear_orphans()
         self._hashes[name] = expected_hash
-        self.records.append(StageRecord(name, rows, wall_ms, False, expected_hash))
+        self._record(name, values, start, False, expected_hash)
         return df
+
+    def _record(self, name: str, values: dict, start: float, resumed: bool,
+                manifest_hash: str) -> None:
+        self._resumed[name] = resumed
+        self.records.append(StageRecord(
+            name, int(values["rows"]), int((time.time() - start) * 1000),
+            resumed, manifest_hash,
+            {k: int(v) for k, v in values.items() if k != "rows"},
+        ))
 
     def lineage_df(self) -> DataFrame:
         """The run's lineage as a DataFrame (stage-level; partition-carrying
@@ -330,6 +424,17 @@ class CheckpointManager:
             rows, "stage string, part_key string, rows_out long, wall_ms long, "
                   "resumed boolean, manifest_hash string"
         )
+
+
+def _aggregates(counters: dict) -> list:
+    return [F.count(F.lit(1)).alias("rows"),
+            *(col.alias(name) for name, col in counters.items())]
+
+
+def _observed(df: DataFrame, obs: Observation, counters: dict) -> DataFrame:
+    """df with its row count and counters attached to `obs`; they are filled
+    by the first job that runs df whole (a write or an eager checkpoint)."""
+    return df.observe(obs, *_aggregates(counters))
 
 
 def partition_lineage(df: DataFrame, stage: str, part_col: str = "part_key") -> DataFrame:

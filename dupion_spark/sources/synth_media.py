@@ -322,14 +322,19 @@ def _gen_codec_images(n_codec: int) -> tuple[pd.DataFrame, pd.DataFrame]:
 # ---------------------------------------------------------------------------
 # generate + materialize
 # ---------------------------------------------------------------------------
+def codec_image_count(n_images: int) -> int:
+    """Rows of the codec_images table for an n_images scale: half the images,
+    whole groups of six formats, at least three groups."""
+    return max(18, (n_images // 2) // 6 * 6)
+
+
 def generate_media(n_audio: int, n_video: int, n_images: int,
                    cfg: DedupConfig | None = None) -> MediaSynthResult:
     cfg = cfg or DedupConfig()
     audio, golden_audio, _ = _gen_audio(n_audio)
     video, golden_frames, golden_pairs = _gen_video(n_video, cfg)
     images, golden_resize = _gen_images(n_images)
-    n_codec = max(18, (n_images // 2) // 6 * 6)
-    codec_images, golden_codec = _gen_codec_images(n_codec)
+    codec_images, golden_codec = _gen_codec_images(codec_image_count(n_images))
     return MediaSynthResult(audio, video, images, codec_images, golden_audio,
                             golden_frames, golden_pairs, golden_resize,
                             golden_codec)

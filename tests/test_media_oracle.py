@@ -74,6 +74,8 @@ def test_fixture_plants_are_non_vacuous():
     assert len(r.golden_video_pairs) >= 2  # planted shared-frame pairs
     assert (r.golden_video_pairs["shared_frames"] >= SM.PAIR_MIN_SHARED).all()
     assert len(r.golden_resize) < len(r.media_images)  # undecodables dropped
+    # q_media_codec_formats sizes its fan-out from this count
+    assert len(r.codec_images) == SM.codec_image_count(MQ.SCALE_MEDIA["sf0.001"][2])
 
     # planted volume-scaled audio duplicates share the spectral fingerprint
     # (peak normalization) while differing in rms — the property that lets

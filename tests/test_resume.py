@@ -11,6 +11,7 @@ Points 1 and 2 hold for DataFrame inputs too, through their staged copy.
 from __future__ import annotations
 
 import glob
+import json
 import os
 
 import pytest
@@ -219,3 +220,155 @@ def test_incremental_resume_changed_file(spark, images_df, tmp_path):
     feat_extras = _lineage_extras(second, "features")
     assert feat_extras["rows_recomputed"] == changed_rows
     assert feat_extras["rows_reused"] == 300 - changed_rows
+
+
+def _parts(src: str) -> list[str]:
+    return sorted(
+        os.path.join(src, f) for f in os.listdir(src) if f.endswith(".parquet")
+    )
+
+
+def _ids(spark, files) -> set[str]:
+    return {r["image_id"] for r in spark.read.parquet(*files).select("image_id").collect()}
+
+
+def _pair_set(df) -> set[tuple[str, str]]:
+    return {(r["id_l"], r["id_r"]) for r in df.select("id_l", "id_r").collect()}
+
+
+def test_incremental_resume_add_change_delete(spark, images_df, tmp_path):
+    """One incremental run after a file is appended, a second one touched and
+    a third removed: clusters equal a from-scratch run, the reuse counters
+    are exact, and prior verdicts are reused for exactly the current pairs
+    between unchanged rows — none touching a changed or deleted row."""
+    src = str(tmp_path / "src")
+    ckpt = str(tmp_path / "ckpt")
+    cfg = DedupConfig()
+
+    base = images_df.limit(400)
+    base.repartition(4).write.mode("overwrite").parquet(src)
+    first = run_pipeline(spark, spark.read.parquet(src), cfg,
+                         checkpoint_dir=ckpt, source_path=src)
+    prior_edges = _pair_set(first.verified_edges)
+
+    parts = _parts(src)
+    changed, deleted = parts[0], parts[1]
+    changed_ids = _ids(spark, [changed])
+    deleted_ids = _ids(spark, [deleted])
+    unchanged_ids = _ids(spark, parts[2:])
+    os.utime(changed)
+    os.remove(deleted)
+    extra = images_df.subtract(base.select(*images_df.columns)).limit(100)
+    extra.coalesce(1).write.mode("append").parquet(src)
+    n_rows = spark.read.parquet(src).count()
+
+    second = run_pipeline(spark, spark.read.parquet(src), cfg,
+                          checkpoint_dir=ckpt, source_path=src)
+    assert not _stage_resumed(second)["features"]
+    feat_extras = _lineage_extras(second, "features")
+    assert feat_extras == {
+        "rows_reused": len(unchanged_ids),
+        "rows_recomputed": n_rows - len(unchanged_ids),
+    }
+
+    pairs = _pair_set(second.candidate_pairs)
+    reusable = {
+        p for p in pairs
+        if p in prior_edges and p[0] in unchanged_ids and p[1] in unchanged_ids
+    }
+    assert reusable, "fixture gives no reusable verdict"
+    assert any(p[0] in changed_ids or p[1] in changed_ids for p in pairs & prior_edges)
+    assert not any(p[0] in deleted_ids or p[1] in deleted_ids for p in pairs)
+    verify_extras = _lineage_extras(second, "verified_edges")
+    assert verify_extras["pairs_reused"] == len(reusable)
+    assert verify_extras["pairs_reused"] + verify_extras["pairs_verified"] == len(pairs)
+
+    scratch = run_pipeline(spark, spark.read.parquet(src), cfg, source_path=src)
+    assert _clusters(second) == _clusters(scratch)
+    assert len(_clusters(second)) == n_rows
+
+
+def _check_counters(result, n_images: int, persisted: bool) -> None:
+    """Every observed counter of a run equals an explicit count()."""
+    stages = result.metrics["stages"]
+    assert result.metrics["n_images"] == n_images == stages["features"]["rows"]
+    assert stages["pairs"]["rows"] == result.candidate_pairs.count()
+    assert stages["verified_edges"]["rows"] == result.verified_edges.count()
+    if persisted:
+        assert stages["clusters"]["rows"] == result.clusters.count()
+    star_only = result.candidate_pairs.filter(
+        "band_src LIKE 'star\\_%'"
+    ).count()
+    assert _lineage_extras(result, "pairs")["star_only_pairs"] == star_only
+
+
+def test_observed_counters_match_counts(spark, small_source, tmp_path):
+    """Counters observed in the materializing jobs equal explicit counts with
+    no root, on a cold root and on a fully resumed root."""
+    ckpt = str(tmp_path / "ckpt")
+    images = spark.read.parquet(small_source)
+    n_images = images.count()
+    cfg = DedupConfig(max_band_bucket=8, minhash_max_bucket=4)
+
+    _check_counters(run_pipeline(spark, images, cfg, source_path=small_source),
+                    n_images, persisted=False)
+    cold = run_pipeline(spark, images, cfg, checkpoint_dir=ckpt,
+                        source_path=small_source)
+    _check_counters(cold, n_images, persisted=True)
+    resumed = run_pipeline(spark, images, cfg, checkpoint_dir=ckpt,
+                           source_path=small_source)
+    assert all(_stage_resumed(resumed).values()), _stage_resumed(resumed)
+    _check_counters(resumed, n_images, persisted=True)
+
+
+# the stages an older layout persisted and this one rebuilds from parents
+REBUILT_STAGES = ["hashes", "exact_groups", "reps", "signatures", "bands",
+                  "canonical", "rollup", "shadows"]
+
+
+def test_older_layout_root_resumes_and_sheds_orphans(spark, images_df, tmp_path):
+    """A root in the older layout — manifests without counters, and data dirs
+    plus manifests for stages that no longer persist — still resumes whole
+    (counters fall back to counting) and still rebuilds incrementally, and its
+    orphans are removed after the first committed write."""
+    src = str(tmp_path / "src")
+    ckpt = str(tmp_path / "ckpt")
+    cfg = DedupConfig()
+    images_df.limit(300).repartition(3).write.mode("overwrite").parquet(src)
+    first = run_pipeline(spark, spark.read.parquet(src), cfg,
+                         checkpoint_dir=ckpt, source_path=src)
+    star_only = _lineage_extras(first, "pairs")["star_only_pairs"]
+    baseline = _clusters(first)
+
+    for manifest in glob.glob(os.path.join(ckpt, "*.manifest.json")):
+        with open(manifest) as fh:
+            data = json.load(fh)
+        data.pop("counters")
+        with open(manifest, "w") as fh:
+            json.dump(data, fh)
+    for stage in REBUILT_STAGES:
+        os.makedirs(os.path.join(ckpt, f"{stage}@0123abcd"))
+        with open(os.path.join(ckpt, f"{stage}.manifest.json"), "w") as fh:
+            json.dump({"stage": stage}, fh)
+    orphans = {f"{s}@0123abcd" for s in REBUILT_STAGES} | {
+        f"{s}.manifest.json" for s in REBUILT_STAGES
+    }
+
+    resumed = run_pipeline(spark, spark.read.parquet(src), cfg,
+                           checkpoint_dir=ckpt, source_path=src)
+    assert all(_stage_resumed(resumed).values()), _stage_resumed(resumed)
+    assert _lineage_extras(resumed, "pairs")["star_only_pairs"] == star_only
+    assert _clusters(resumed) == baseline
+    assert orphans <= set(os.listdir(ckpt))  # nothing was written yet
+
+    part = _parts(src)[0]
+    os.utime(part)
+    changed_rows = spark.read.parquet(part).count()
+    rebuilt = run_pipeline(spark, spark.read.parquet(src), cfg,
+                           checkpoint_dir=ckpt, source_path=src)
+    assert _lineage_extras(rebuilt, "features") == {
+        "rows_reused": 300 - changed_rows, "rows_recomputed": changed_rows,
+    }
+    assert _lineage_extras(rebuilt, "verified_edges")["pairs_reused"] > 0
+    assert _clusters(rebuilt) == baseline
+    assert not orphans & set(os.listdir(ckpt))
