@@ -30,6 +30,7 @@ dupion/src/driver/platterwalker.rs:268-344); the graft hashes *decoded pixels*
 
 from __future__ import annotations
 
+import hashlib
 import struct
 import zlib
 
@@ -133,6 +134,18 @@ def try_decode_image(data: bytes) -> np.ndarray | None:
         return decode_image(data)
     except (ValueError, NotImplementedError, zlib.error, struct.error):
         return None
+
+
+def pixel_sha256(pixels: np.ndarray) -> bytes:
+    """SHA-256 of the canonical decoded pixel buffer (32 bytes): the raw
+    HxWxC uint8 array prefixed by its shape, so two encodings decode-equal
+    iff their hashes match (dupion's blake3-of-bytes becomes
+    sha256-of-pixels per input_hint)."""
+    h, w, c = pixels.shape
+    hasher = hashlib.sha256()
+    hasher.update(f"{h}x{w}x{c}:".encode())
+    hasher.update(pixels.tobytes())
+    return hasher.digest()
 
 
 def psnr_db(a: np.ndarray, b: np.ndarray) -> float:

@@ -14,8 +14,6 @@ cheap (byte length, shape keys, band splitting) stays JVM-side in
 
 from __future__ import annotations
 
-import hashlib
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
@@ -26,25 +24,15 @@ from dupion_spark.functions import codec
 
 
 def make_pixel_sha256_udf():
-    """bytes -> sha256 of the canonical decoded pixel buffer (32-byte binary).
-
-    The canonical buffer is the raw HxWxC uint8 array prefixed by its shape, so
-    two encodings decode-equal iff their hashes match (dupion's blake3-of-bytes
-    becomes sha256-of-pixels per input_hint)."""
+    """bytes -> codec.pixel_sha256 of the decoded pixels (32-byte binary)."""
 
     @F.pandas_udf(T.BinaryType())
     def pixel_sha256(data: pd.Series) -> pd.Series:
         out = []
         for blob in data:
             pixels = codec.try_decode_image(bytes(blob))
-            if pixels is None:  # non-image payload (container/corrupt): F4
-                out.append(None)
-                continue
-            h, w, c = pixels.shape
-            hasher = hashlib.sha256()
-            hasher.update(f"{h}x{w}x{c}:".encode())
-            hasher.update(pixels.tobytes())
-            out.append(hasher.digest())
+            # non-image payload (container/corrupt): F4
+            out.append(None if pixels is None else codec.pixel_sha256(pixels))
         return pd.Series(out)
 
     return pixel_sha256

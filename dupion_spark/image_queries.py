@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from dupion_spark.config import DedupConfig
 from dupion_spark.operators import exact
+from dupion_spark.operators import features as features_op
 from dupion_spark.pipeline import run_pipeline
 from dupion_spark.sources.synth import materialize
 
@@ -75,6 +76,16 @@ def load_partition_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(os.path.join(fdir, "partition_map.parquet"))
 
 
+def _hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The pipeline's `hashes` table over the fixture file: features read
+    and hash the payloads worker-side, as in run_pipeline."""
+    return features_op.hashes_from_features(
+        features_op.extract_features_from_files(
+            spark, _images_path(sf_dir), DedupConfig()
+        )
+    )
+
+
 def _run(spark: SparkSession, sf_dir: str, partition_map: DataFrame | None = None):
     """The pipeline over the fixture file itself (source_path), so nothing
     is staged: features and verify read its row groups worker-side."""
@@ -88,10 +99,7 @@ def _run(spark: SparkSession, sf_dir: str, partition_map: DataFrame | None = Non
 # ---------------------------------------------------------------------------
 def q_img_exact_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-duplicate pixel groups (dupion's default output, SURVEY §3.1)."""
-    images = load_images(spark, sf_dir)
-    cfg = DedupConfig()
-    hashes = exact.exact_hash_table(images, cfg)
-    return exact.exact_groups(hashes).select(
+    return exact.exact_groups(_hashes(spark, sf_dir)).select(
         F.hex(F.col("pixel_sha256")).alias("pixel_hash"),
         "n_members",
         "total_bytes",
@@ -132,11 +140,8 @@ def q_img_treediff(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions dupA/dupB: every rel_name should classify as 2 (equal)."""
     from dupion_spark.operators.treediff import diff_rows
 
-    images = load_images(spark, sf_dir)
     parts = load_partition_map(spark, sf_dir)
-    cfg = DedupConfig()
-    hashes = exact.exact_hash_table(images, cfg)
-    keyed = parts.join(hashes, "image_id").withColumn(
+    keyed = parts.join(_hashes(spark, sf_dir), "image_id").withColumn(
         "content_hash", F.coalesce(F.hex("pixel_sha256"), F.col("byte_sha256"))
     )
     side_a = keyed.filter(F.col("part_key") == "dupA")
@@ -153,10 +158,9 @@ def q_img_tree_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dupion_spark.operators import rollup as rollup_op
     from dupion_spark.operators.tree import tree_rows
 
-    images = load_images(spark, sf_dir)
     parts = load_partition_map(spark, sf_dir)
-    cfg = DedupConfig()
-    hashes = exact.exact_hash_table(images, cfg).localCheckpoint(eager=False)
+    # two consumers (rollup and tree rows): hash the fixture once
+    hashes = _hashes(spark, sf_dir).localCheckpoint(eager=False)
     roll = rollup_op.rollup_table(hashes, parts)
     return tree_rows(hashes, parts, roll)
 

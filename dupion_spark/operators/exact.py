@@ -1,83 +1,29 @@
-"""Exact-duplicate stage: cheap keys -> prune -> decoded-pixel hash -> groups.
+"""Exact-duplicate stage: pixel-hash groups and their representatives.
 
 This is dupion's core pipeline re-expressed declaratively:
 
   dupion (reference)                          dupion_spark
   ------------------------------------------  --------------------------------
-  pass 1: stat every file, group by size      cheap keys: byte_len, (w,h) —
-    (state/mod.rs:17-50)                        JVM-side, no decode
-  hash candidates = size non-unique            prune: semi-join against
-    (is_file_read_candidate,                    multi-member (w,h) shape groups
-     state/mod.rs:95-111)                       + byte-sha dedup of decode work
-  pass 2: blake3 file bytes                    pandas-UDF SHA-256 of decoded
-    (driver/platterwalker.rs:268-344)           pixels (input_hint)
+  pass 1: stat every file, group by size      shape prune: pixel_sha256 kept
+    (state/mod.rs:17-50)                        only for rows whose (w,h)
+  hash candidates = size non-unique             group has >1 member
+    (is_file_read_candidate,                    (features.hashes_from_features)
+     state/mod.rs:95-111)
+  pass 2: blake3 file bytes                    SHA-256 of decoded pixels,
+    (driver/platterwalker.rs:268-344)           computed once per row in the
+                                                feature pass (codec.pixel_sha256)
   group by hash (state/mod.rs:51-90)           groupBy("pixel_sha256")
 
-Scale notes (100 TB / 10^12 rows):
-- `sha2(bytes, 256)` for byte-exact grouping runs JVM-side inside whole-stage
-  codegen; no Python touch for the byte-dup fast path.
-- decode-dedup: only ONE row per distinct byte_sha256 is decoded (window
-  row_number, then the hash is joined back) — byte-identical replicas are free,
-  mirroring dupion's "hash each content once" arena semantics.
-- the (w,h) shape prune mirrors the reference's size-pregroup; its prune ratio
-  is reported in the metrics table (BASELINE.md qualitative metric).
+The `hashes` table (image_id, byte_len, byte_sha256, pixel_sha256) comes only
+from the feature table: payloads are read and decoded once, worker-side, and
+never cross the JVM->Python boundary again for hashing. The (w,h) prune ratio
+is reported in the metrics table (BASELINE.md qualitative metric).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from dupion_spark.config import DedupConfig
-from dupion_spark.functions.spark_udfs import make_pixel_sha256_udf
-
-
-def with_cheap_keys(images: DataFrame) -> DataFrame:
-    """Add JVM-side cheap columns: byte_len, byte_sha256, shape key.
-
-    Everything here stays in whole-stage codegen — zero Python."""
-    return (
-        images.withColumn("byte_len", F.length("bytes").cast("long"))
-        .withColumn("byte_sha256", F.sha2(F.col("bytes"), 256))
-    )
-
-
-def shape_counts(images: DataFrame) -> DataFrame:
-    """(w, h) -> member count. A pre-aggregation instead of a count window:
-    column pruning means the scan feeding it reads ONLY w and h (no bytes),
-    and the tiny result broadcast-joins back — the big rows never shuffle for
-    the shape test. Mirrors dupion's size-pregroup (state/mod.rs:17-50)."""
-    return images.groupBy("w", "h").agg(F.count(F.lit(1)).alias("_shape_n"))
-
-
-def exact_hash_table(images: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """The `hashes` stage table: image_id, byte_len, byte_sha256, pixel_sha256
-    (null when shape-pruned — such a row cannot be an exact duplicate).
-
-    Plan shape (deliberate, for 100 TB inputs):
-      - shape prune = broadcast join against the (w,h) count aggregate —
-        necessary-condition filter, zero bytes shuffled (F2 semantics,
-        state/mod.rs:95-111);
-      - decode runs MAP-SIDE in the scan pipeline: image bytes NEVER enter a
-        shuffle. An earlier design deduplicated decode work per distinct
-        byte_sha256 via a window — that shuffles the entire bytes column, and
-        shuffling a corpus-sized binary column costs far more than decoding
-        byte-identical replicas twice (measured: the window made the stage
-        disk-bound and parallelism-flat). Exact-replica decode dedup belongs
-        in ingest (the streaming path), not here.
-    """
-    keyed = with_cheap_keys(images)
-    flagged = keyed.join(F.broadcast(shape_counts(images)), ["w", "h"])
-
-    pixel_sha256 = make_pixel_sha256_udf()
-    return flagged.select(
-        "image_id",
-        "byte_len",
-        "byte_sha256",
-        F.when(F.col("_shape_n") > 1, pixel_sha256(F.col("bytes")))
-        .otherwise(F.lit(None).cast("binary"))
-        .alias("pixel_sha256"),
-    )
 
 
 def exact_groups(hashes: DataFrame) -> DataFrame:
@@ -96,35 +42,17 @@ def exact_groups(hashes: DataFrame) -> DataFrame:
 
 
 def _group_roots(hashes: DataFrame) -> DataFrame:
-    """pixel_sha256 -> (_root = min member id, _n = member count).
+    """pixel_sha256 -> _root (the minimum member id).
 
     groupBy-agg, NOT a window: a window over pixel_sha256 full-sorts each
     group in ONE task, so a 10^6-replica mega-group serializes on a single
-    core. The aggregate runs combiner-style (map-side partial min/count) and
+    core. The aggregate runs combiner-style (map-side partial min) and
     the join back is AQE-skew-splittable — the skew-immune shape
     connected_components already uses (its docstring says why)."""
     return (
         hashes.filter(F.col("pixel_sha256").isNotNull())
         .groupBy("pixel_sha256")
-        .agg(F.min("image_id").alias("_root"), F.count(F.lit(1)).alias("_n"))
-    )
-
-
-def exact_edges(hashes: DataFrame) -> DataFrame:
-    """Star edges (member -> group-min member) per exact-pixel group.
-
-    Linear in group size (NOT all-pairs) — a 10^6-replica mega-group emits
-    10^6 edges, not 10^12; connectivity for CC is preserved by the star."""
-    roots = _group_roots(hashes).filter(F.col("_n") > 1).drop("_n")
-    return (
-        hashes.filter(F.col("pixel_sha256").isNotNull())
-        .join(roots, "pixel_sha256")
-        .filter(F.col("image_id") != F.col("_root"))
-        .select(
-            F.col("_root").alias("id_l"),
-            F.col("image_id").alias("id_r"),
-            F.lit("exact").alias("reason"),
-        )
+        .agg(F.min("image_id").alias("_root"))
     )
 
 
@@ -133,7 +61,7 @@ def representatives(hashes: DataFrame) -> DataFrame:
     before LSH banding (signatures of identical pixels are identical, so the
     collapsed graph has the same connected components). This is the first
     skew weapon: an exact mega-group becomes ONE LSH node."""
-    roots = _group_roots(hashes).drop("_n")
+    roots = _group_roots(hashes)
     hashed = (
         hashes.filter(F.col("pixel_sha256").isNotNull())
         .join(roots, "pixel_sha256")

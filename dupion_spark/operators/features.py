@@ -100,11 +100,8 @@ def _extract_rows(table, cfg: DedupConfig, src_file: str, src_rg: int,
             out["simhash"].append(None)
             out["phash"].append(None)
             continue
-        h, w, c = pixels.shape
-        hasher = hashlib.sha256()
-        hasher.update(f"{h}x{w}x{c}:".encode())
-        hasher.update(pixels.tobytes())
-        out["pixel_sha256"].append(hasher.digest())
+        h, w, _ = pixels.shape
+        out["pixel_sha256"].append(codec.pixel_sha256(pixels))
         out["w"].append(w)
         out["h"].append(h)
         out["simhash"].append(sh)

@@ -108,6 +108,12 @@ def band_table(
 ) -> DataFrame:
     """Explode per-rep signatures into (rep_id, phash, simhash, band_key).
 
+    The band table's rep_id column carries the rep's long surrogate sid
+    (operators/features.FEATURE_SCHEMA), not its string id: the pair
+    self-joins then shuffle and compare fixed-width longs instead of id
+    strings (~40% of band-row bytes, and the join condition's 300M+ id
+    comparisons). candidate_pairs maps back to strings on its tiny output.
+
     n_reps: corpus-size hint driving the ADAPTIVE pixel band plan
     (cfg.pixel_band_plan): as the corpus grows, fewer/wider phash bands keep
     band-bucket occupancy bounded (the fixed-entropy occupancy growth is the
@@ -138,18 +144,8 @@ def band_table(
     # rows without pixel signatures (containers / corrupt payloads, F4) never
     # pass the pixel-authoritative verify — banding them is pure waste
     signatures = signatures.filter(F.col("phash").isNotNull())
-    # when the signature table carries the long surrogate id (operators/
-    # features.FEATURE_SCHEMA `sid`), band rows use IT as the id column:
-    # the pair self-joins then shuffle and compare fixed-width longs instead
-    # of id strings (~40% of band-row bytes, and the join condition's
-    # 300M+ id comparisons). candidate_pairs maps back to strings on its
-    # tiny output via id_map.
-    id_col = (
-        F.col("sid").alias("rep_id") if "sid" in signatures.columns
-        else F.col("rep_id")
-    )
     return signatures.select(
-        id_col, "phash", "simhash",
+        F.col("sid").alias("rep_id"), "phash", "simhash",
         F.explode(F.array(*all_keys)).alias("band_key"),
     )
 
@@ -174,16 +170,15 @@ def _hamming_ok(ph_l, sh_l, ph_r, sh_r, cfg: DedupConfig,
 
 
 def candidate_pairs(
-    bands: DataFrame, cfg: DedupConfig, id_map: DataFrame | None = None,
+    bands: DataFrame, cfg: DedupConfig, id_map: DataFrame,
     n_reps: int | None = None,
 ) -> DataFrame:
-    """(id_l, id_r, band_src) candidate pairs, id_l < id_r, hamming-
-    prefiltered INLINE and deduped.
+    """(id_l, id_r, band_src) candidate pairs over string ids, id_l < id_r,
+    hamming-prefiltered INLINE and deduped.
 
-    id_map (sid, rep_id): when the band table runs on long surrogate ids,
-    pass the mapping so the OUTPUT pairs carry string ids again — the two
-    join-backs touch only the pair table (candidate-proportional, tiny),
-    never the band table.
+    id_map (sid, rep_id): maps the band table's long surrogate ids back to
+    string ids on the OUTPUT pairs — the two join-backs touch only the pair
+    table (candidate-proportional, tiny), never the band table.
 
     n_reps: the same corpus-size hint band_table received — the phash
     prefilter radius follows the ACTIVE band plan's catch guarantee
@@ -257,21 +252,6 @@ def candidate_pairs(
     pairs wall). The 68 sub-rows are emitted per DELEGATE, so a
     million-twin crowd costs one sub-banding participant plus one linear
     star pass."""
-    # Guard: when the band table was built on the LONG surrogate sid (see
-    # band_table), downstream verify/CC join on STRING image_id — emitting
-    # long pairs without an id_map would make every downstream inner join
-    # empty, a silent total recall loss instead of an error.
-    from pyspark.sql import types as _T
-
-    if id_map is None and isinstance(
-        bands.schema["rep_id"].dataType, (_T.LongType, _T.IntegerType)
-    ):
-        raise ValueError(
-            "candidate_pairs: band table carries numeric surrogate ids (sid) "
-            "but no id_map was supplied — pairs would never join back to "
-            "string image_ids downstream. Pass id_map=signatures.select('sid','rep_id')."
-        )
-
     # phash prefilter radius aligned to the active band plan (see docstring)
     ph_limit = cfg.pixel_prefilter(n_reps)
 
@@ -483,20 +463,18 @@ def candidate_pairs(
     for extra in branches[1:]:
         pairs = pairs.unionByName(extra)
     pairs = pairs.groupBy("id_l", "id_r").agg(F.min("band_src").alias("band_src"))
-    if id_map is not None:
-        # restore string ids on the tiny output (AQE broadcasts the map at
-        # this scale; at corpus scale this is a candidate-proportional join)
-        ml = id_map.select(F.col("sid").alias("id_l"), F.col("rep_id").alias("_l"))
-        mr = id_map.select(F.col("sid").alias("id_r"), F.col("rep_id").alias("_r"))
-        pairs = (
-            pairs.join(ml, "id_l").join(mr, "id_r")
-            .select(
-                F.least("_l", "_r").alias("id_l"),
-                F.greatest("_l", "_r").alias("id_r"),
-                "band_src",
-            )
+    # restore string ids on the tiny output (AQE broadcasts the map at this
+    # scale; at corpus scale this is a candidate-proportional join)
+    ml = id_map.select(F.col("sid").alias("id_l"), F.col("rep_id").alias("_l"))
+    mr = id_map.select(F.col("sid").alias("id_r"), F.col("rep_id").alias("_r"))
+    return (
+        pairs.join(ml, "id_l").join(mr, "id_r")
+        .select(
+            F.least("_l", "_r").alias("id_l"),
+            F.greatest("_l", "_r").alias("id_r"),
+            "band_src",
         )
-    return pairs
+    )
 
 
 def _pixel_overcap_branches(

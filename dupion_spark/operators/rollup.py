@@ -25,8 +25,8 @@ from pyspark.sql import functions as F
 def rollup_table(hashes: DataFrame, partition_map: DataFrame) -> DataFrame:
     """(part_key, rollup_hash, rollup_count, rollup_bytes).
 
-    hashes: operators/exact.exact_hash_table output (pixel_sha256 may be null
-    for shape-pruned rows — the rollup uses byte_sha256 then, still
+    hashes: operators/features.hashes_from_features output (pixel_sha256 may
+    be null for shape-pruned rows — the rollup uses byte_sha256 then, still
     content-deterministic)."""
     joined = partition_map.join(hashes, "image_id")
     child_hash = F.coalesce(F.hex(F.col("pixel_sha256")), F.col("byte_sha256"))

@@ -3,7 +3,7 @@
 The staged dataflow (SURVEY.md §3.1 "Spark shape"):
 
     images
-      ├─ exact:   cheap keys → shape prune → pixel SHA-256 → hash groups
+      ├─ exact:   feature-pass pixel SHA-256 → shape prune → hash groups
       ├─ reps:    collapse exact-identical rows to one LSH node
       ├─ sigs:    MinHash(caption) + SimHash/pHash(pixels) per rep
       ├─ bands:   LSH band explode → band_key
@@ -222,10 +222,12 @@ def run_pipeline(
     # their barrier. Eager anchors ONLY where concurrent AQE stage
     # materialization would otherwise race a lazy checkpoint
     # (features/reps/pairs/verified_edges); single-ordered-consumer stages
-    # are lazy (hashes/clusters/canonical — the first consuming job
-    # materializes them, no extra barrier) or plain composition. Each eager
-    # checkpoint is ~1s of serial wall, so the policy trades the minimum
-    # barrier count that keeps materialization race-free.
+    # are lazy (hashes/clusters/canonical — the first consuming job caches
+    # the rows, but the lazy call still runs the shuffle stages beneath it:
+    # 2 jobs for hashes, 5 for clusters, 4 for canonical on the 600-row test
+    # fixture) or plain composition. Each eager checkpoint is ~1s of serial
+    # wall, so the policy trades the minimum barrier count that keeps
+    # materialization race-free.
     feats = mgr.stage(
         "features", _features, manifest_extra=lambda: incr["manifest"],
         counters={"rows_reused": F.count_if(F.col("sid") < F.lit(fresh_sid))},

@@ -165,16 +165,15 @@ class CheckpointManager:
         assert self.root
         return os.path.join(self.root, f"{stage}.manifest.json")
 
-    def _data_path(self, stage: str, expected_hash: str = "") -> str:
+    def _data_path(self, stage: str, expected_hash: str) -> str:
         """Stage data dirs are VERSIONED by manifest hash (`<stage>@<hash8>`)
         so an incremental rebuild can lazily READ the prior version while
         WRITING the new one — an in-place overwrite would delete the files a
-        running read is scanning. Older versions are garbage-collected after
-        the new manifest commits (_gc_stage_dirs)."""
+        running read is scanning. Older versions, and the unversioned
+        `<stage>` dir of roots written before versioning, are
+        garbage-collected after the new manifest commits (_gc_stage_dirs)."""
         assert self.root
-        if expected_hash:
-            return os.path.join(self.root, f"{stage}@{expected_hash[:8]}")
-        return os.path.join(self.root, stage)  # legacy unversioned layout
+        return os.path.join(self.root, f"{stage}@{expected_hash[:8]}")
 
     def _gc_stage_dirs(self, stage: str, keep: str) -> None:
         import shutil
@@ -286,11 +285,14 @@ class CheckpointManager:
           True    eager localCheckpoint: its own job, plan truncated NOW.
                   Only for anchor stages whose downstream plan would otherwise
                   grow past what AQE re-plans cheaply.
-          "lazy"  localCheckpoint(eager=False): NO extra job — the first
-                  consuming action materializes+caches it and truncates the
-                  plan for every later consumer. Multi-consumer stages get
-                  compute-once semantics for free; the barrier cost folds into
-                  a job that was running anyway.
+          "lazy"  localCheckpoint(eager=False): the plan is truncated for
+                  every later consumer and the first consuming action caches
+                  the rows, but under AQE the call itself runs every shuffle
+                  stage beneath it, one job each (measured on the 600-row
+                  test fixture: 2 jobs at the call for `hashes`, the
+                  shape-count aggregate and its broadcast; 5 for `clusters`;
+                  4 for `canonical`). Cheaper than eager — no job for the
+                  final stage — but not free.
           False   plain plan composition (single-consumer projections whose
                   consumers shuffle on the same key — ReuseExchange dedups).
         A persisted stage's write is its barrier.
@@ -301,7 +303,7 @@ class CheckpointManager:
         eager localCheckpoint, and a persisted stage keeps them in its
         manifest, so a resumed stage reports them with no job. A manifest
         without counters and the Iceberg backend take one aggregate job
-        instead. Lazy and plain stages run no job of their own: their row
+        instead. Lazy and plain stages are not observed: their row
         count is -1."""
         parents = parents or []
         counters = counters or {}

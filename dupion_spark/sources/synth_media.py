@@ -278,7 +278,7 @@ def _gen_codec_images(n_codec: int) -> tuple[pd.DataFrame, pd.DataFrame]:
     group decode bit-identically (one canonical pixel sha) while the JPEG
     row is a lossy near-dup. Every 10th row is truncated -> NULL sha (F4
     degradation). Golden shas replicate
-    functions/spark_udfs.make_pixel_sha256_udf's canonical buffer hash
+    functions/codec.pixel_sha256 (the canonical buffer hash)
     single-process."""
     from dupion_spark.functions.bmp import encode_real_bmp
     from dupion_spark.functions.gif import encode_real_gif

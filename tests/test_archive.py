@@ -10,6 +10,7 @@ import pytest
 from dupion_spark.config import DedupConfig
 from dupion_spark.functions.codec import encode_png
 from dupion_spark.operators import exact, rollup
+from dupion_spark.operators import features as features_op
 from dupion_spark.sources.archive import (
     flatten_with_archives,
     pack_tar,
@@ -19,6 +20,15 @@ from dupion_spark.sources.archive import (
 
 def _img(rng, dim=16):
     return rng.integers(0, 255, size=(dim, dim, 3)).astype(np.uint8)
+
+
+def _hashes(spark, flat, tmp_path_factory):
+    """The pipeline's hashes stage over flattened rows: staged to parquet,
+    hashed by the feature pass, then shape-pruned."""
+    src = str(tmp_path_factory.mktemp("archive_src") / "flat")
+    flat.select("image_id", "bytes", "caption").write.parquet(src)
+    feats = features_op.extract_features_from_files(spark, src, DedupConfig())
+    return features_op.hashes_from_features(feats)
 
 
 @pytest.fixture(scope="module")
@@ -65,17 +75,21 @@ def test_children_carry_captions_and_shapes(archive_fixture):
     assert (row["w"], row["h"], row["fmt"]) == (16, 16, "png")
 
 
-def test_archive_member_joins_exact_group_with_loose_row(archive_fixture):
+def test_archive_member_joins_exact_group_with_loose_row(
+    spark, archive_fixture, tmp_path_factory
+):
     flat, _ = archive_fixture
-    hashes = exact.exact_hash_table(flat, DedupConfig())
+    hashes = _hashes(spark, flat, tmp_path_factory)
     groups = exact.exact_groups(hashes).collect()
     by_members = [set(g["members"]) for g in groups]
     assert {"loose0", "arcA/m0.png", "arcB/m0.png"} in by_members
 
 
-def test_twin_archives_detected_as_duplicate_containers(archive_fixture):
+def test_twin_archives_detected_as_duplicate_containers(
+    spark, archive_fixture, tmp_path_factory
+):
     flat, cmap = archive_fixture
-    hashes = exact.exact_hash_table(flat, DedupConfig())
+    hashes = _hashes(spark, flat, tmp_path_factory)
     roll = rollup.rollup_table(hashes, cmap)
     twins = {r["part_key"]: r["n_twins"] for r in rollup.duplicated_partitions(roll).collect()}
     assert twins.get("arcA") == 2 and twins.get("arcB") == 2
@@ -135,12 +149,14 @@ def test_tar_children_all_formats(tar_fixture):
     assert not any(i.startswith("badTgz/") for i in ids)  # ...but no children
 
 
-def test_tar_member_caption_and_dedup_with_loose(tar_fixture):
+def test_tar_member_caption_and_dedup_with_loose(
+    spark, tar_fixture, tmp_path_factory
+):
     flat, _ = tar_fixture
     row = flat.filter("image_id = 'tarA/t0.png'").collect()[0]
     assert row["caption"] == "tar cap zero"
     assert (row["w"], row["h"], row["fmt"]) == (16, 16, "png")
-    hashes = exact.exact_hash_table(flat, DedupConfig())
+    hashes = _hashes(spark, flat, tmp_path_factory)
     groups = exact.exact_groups(hashes).collect()
     by_members = [set(g["members"]) for g in groups]
     # the same pixels appear loose and inside tar / tar.gz / tar.xz
@@ -150,9 +166,9 @@ def test_tar_member_caption_and_dedup_with_loose(tar_fixture):
     )
 
 
-def test_twin_tar_archives_detected(tar_fixture):
+def test_twin_tar_archives_detected(spark, tar_fixture, tmp_path_factory):
     flat, cmap = tar_fixture
-    hashes = exact.exact_hash_table(flat, DedupConfig())
+    hashes = _hashes(spark, flat, tmp_path_factory)
     roll = rollup.rollup_table(hashes, cmap)
     twins = {r["part_key"]: r["n_twins"]
              for r in rollup.duplicated_partitions(roll).collect()}
@@ -205,7 +221,7 @@ def test_corrupt_member_and_non_utf8_caption_degrade(spark):
     assert "arc/ok2.png" in out  # non-UTF-8 caption replaced, row intact
 
 
-def test_zip_member_gif_bmp_exact_group_across_container(spark):
+def test_zip_member_gif_bmp_exact_group_across_container(spark, tmp_path_factory):
     """A GIF inside a zip, a BMP inside another zip, and a loose PNG of the
     SAME frame must land in one exact group — real-format decode (LZW /
     BI_RGB) composes with the archive source's member explosion."""
@@ -227,6 +243,6 @@ def test_zip_member_gif_bmp_exact_group_across_container(spark):
               "caption string, phash long"
     )
     flat, _ = flatten_with_archives(images, cfg)
-    groups = exact.exact_groups(exact.exact_hash_table(flat, cfg)).collect()
+    groups = exact.exact_groups(_hashes(spark, flat, tmp_path_factory)).collect()
     by_members = [set(g["members"]) for g in groups]
     assert {"loosePng", "zipA/frame.gif", "zipB/frame.bmp"} in by_members

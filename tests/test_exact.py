@@ -2,11 +2,17 @@ import pytest
 from pyspark.sql import functions as F
 
 from dupion_spark.operators import exact
+from dupion_spark.operators import features as features_op
 
 
 @pytest.fixture(scope="module")
-def hashes(spark, images_df, cfg):
-    return exact.exact_hash_table(images_df, cfg).cache()
+def hashes(spark, images_df, cfg, tmp_path_factory):
+    """The pipeline's hashes stage: features of the fixture rows staged to
+    parquet, then the shape-pruned hash projection."""
+    src = str(tmp_path_factory.mktemp("exact_src") / "images")
+    images_df.select("image_id", "bytes", "caption").write.parquet(src)
+    feats = features_op.extract_features_from_files(spark, src, cfg)
+    return features_op.hashes_from_features(feats).cache()
 
 
 @pytest.fixture(scope="module")
@@ -59,8 +65,3 @@ def test_representatives_collapse_exact_groups(hashes, reps, images_df):
         .filter(F.col("n_reps") > 1)
     )
     assert multi.count() == 0
-
-
-def test_exact_edges_are_stars(hashes):
-    edges = exact.exact_edges(hashes)
-    assert edges.filter(F.col("id_l") >= F.col("id_r")).count() == 0

@@ -30,8 +30,26 @@ SIG_SCHEMA = T.StructType(
         T.StructField("minhash", T.ArrayType(T.LongType())),
         T.StructField("simhash", T.LongType()),
         T.StructField("phash", T.LongType()),
+        T.StructField("sid", T.LongType()),
     ]
 )
+
+
+def _sigs(spark, rows):
+    """Signature frame with sids assigned in rep_id order, so every bucket's
+    minimum-sid hub is its minimum-id member."""
+    order = {rep_id: sid for sid, rep_id in enumerate(sorted(r[0] for r in rows))}
+    return spark.createDataFrame([(*r, order[r[0]]) for r in rows], SIG_SCHEMA)
+
+
+def _pairs(sigs, cfg, bands=None, n_reps=None):
+    """Collected candidate pairs over string ids (the sid -> rep_id map
+    restores them, as in the pipeline)."""
+    if bands is None:
+        bands = lsh.band_table(sigs, cfg, n_reps=n_reps)
+    return lsh.candidate_pairs(
+        bands, cfg, id_map=sigs.select("sid", "rep_id"), n_reps=n_reps
+    ).collect()
 
 
 def _signed(v: int) -> int:
@@ -77,9 +95,7 @@ CFG = DedupConfig(max_band_bucket=16)
 
 @pytest.fixture(scope="module")
 def planted_pairs(spark):
-    sigs = spark.createDataFrame(_rows(), SIG_SCHEMA)
-    bands = lsh.band_table(sigs, CFG)
-    return lsh.candidate_pairs(bands, CFG).collect()
+    return _pairs(_sigs(spark, _rows()), CFG)
 
 
 def test_hamming(spark):
@@ -97,7 +113,7 @@ def test_overcap_near_pair_survives(planted_pairs):
 
 
 def test_overcap_bucket_is_actually_overcap(spark):
-    sigs = spark.createDataFrame(_rows(), SIG_SCHEMA)
+    sigs = _sigs(spark, _rows())
     bands = lsh.band_table(sigs, CFG)
     from pyspark.sql import functions as F
 
@@ -111,10 +127,11 @@ def test_overcap_key_outside_known_classes_raises(spark):
     band_key, must fail loudly instead of flowing into the all-pairs join."""
     from pyspark.sql import functions as F
 
-    bands = lsh.band_table(spark.createDataFrame(_rows(), SIG_SCHEMA), CFG)
+    sigs = _sigs(spark, _rows())
+    bands = lsh.band_table(sigs, CFG)
     unclassed = bands.withColumn("band_key", F.lit(None).cast("long"))
     with pytest.raises(AssertionError, match="known key class"):
-        lsh.candidate_pairs(bands.unionByName(unclassed), CFG)
+        _pairs(sigs, CFG, bands=bands.unionByName(unclassed))
 
 
 # --- no-Spark property tests of the recall guarantees ----------------------
@@ -242,19 +259,13 @@ def test_sampled_hot_detection_matches_exact_clusters(spark):
     hot set re-counted exactly, so a missed bucket degrades to all-pairs —
     the near pair must still surface, and the pair set may only GROW
     (direct all-pairs supersedes the cascade's star links)."""
-    sigs = spark.createDataFrame(_rows(), SIG_SCHEMA)
+    sigs = _sigs(spark, _rows())
     # activate the sampled path on this tiny corpus
     cfg_sampled = DedupConfig(max_band_bucket=16, hot_sample_min_reps=1,
                               hot_sample_fraction=0.5)
-    exact_pairs = {
-        (r["id_l"], r["id_r"])
-        for r in lsh.candidate_pairs(lsh.band_table(sigs, CFG), CFG).collect()
-    }
+    exact_pairs = {(r["id_l"], r["id_r"]) for r in _pairs(sigs, CFG)}
     sampled_pairs = {
-        (r["id_l"], r["id_r"])
-        for r in lsh.candidate_pairs(
-            lsh.band_table(sigs, cfg_sampled), cfg_sampled, n_reps=22
-        ).collect()
+        (r["id_l"], r["id_r"]) for r in _pairs(sigs, cfg_sampled, n_reps=22)
     }
     assert ("x_a", "x_b") in sampled_pairs
     # the real monotonicity property: EVERY exact-path pair survives sampling
@@ -313,11 +324,14 @@ def test_double_saturation_premises(spark):
     from pyspark.sql import functions as F
 
     cfg = DedupConfig(max_band_bucket=16)
-    bands = lsh.band_table(spark.createDataFrame(rows, SIG_SCHEMA), cfg)
+    sigs = _sigs(spark, rows)
+    sid = {r["rep_id"]: r["sid"] for r in sigs.collect()}
+    bands = lsh.band_table(sigs, cfg)
     shared = (
         bands.groupBy("band_key")
         .agg(F.collect_set("rep_id").alias("ids"), F.count(F.lit(1)).alias("n"))
-        .filter(F.array_contains("ids", "y_a") & F.array_contains("ids", "y_b"))
+        .filter(F.array_contains("ids", sid["y_a"])
+                & F.array_contains("ids", sid["y_b"]))
         .collect()
     )
     assert shared and all(r["n"] > cfg.max_band_bucket for r in shared)
@@ -327,10 +341,10 @@ def test_double_saturated_pair_keeps_direct_edge(spark):
     """Sub-buckets within sub_allpairs_max run DIRECT all-pairs: the planted
     pair survives double saturation with a 'pixel' (non-star) edge."""
     cfg = DedupConfig(max_band_bucket=16)  # default sub_allpairs_max (4096)
-    sigs = spark.createDataFrame(_saturated_rows(), SIG_SCHEMA)
+    sigs = _sigs(spark, _saturated_rows())
     got = {
         (r["id_l"], r["id_r"]): r["band_src"]
-        for r in lsh.candidate_pairs(lsh.band_table(sigs, cfg), cfg).collect()
+        for r in _pairs(sigs, cfg)
     }
     assert got.get(("y_a", "y_b")) == "pixel"
 
@@ -342,10 +356,10 @@ def test_mega_crowd_still_falls_back_to_stars(spark):
     star_only_pairs lineage metric counts."""
     # 19 < 20 so even the crowd-only sub-windows (20 members) saturate
     cfg = DedupConfig(max_band_bucket=16, sub_allpairs_max=19)
-    sigs = spark.createDataFrame(_saturated_rows(), SIG_SCHEMA)
+    sigs = _sigs(spark, _saturated_rows())
     got = {
         (r["id_l"], r["id_r"]): r["band_src"]
-        for r in lsh.candidate_pairs(lsh.band_table(sigs, cfg), cfg).collect()
+        for r in _pairs(sigs, cfg)
     }
     assert ("y_a", "y_b") not in got
     assert got.get(("f00", "f01")) == "star_pixel"
@@ -369,8 +383,8 @@ def test_twin_crowd_emits_linear_sig_twin_edges(spark):
         for i in range(n)
     ]
     cfg = DedupConfig(max_band_bucket=16)
-    sigs = spark.createDataFrame(rows, SIG_SCHEMA)
-    got = lsh.candidate_pairs(lsh.band_table(sigs, cfg), cfg).collect()
+    sigs = _sigs(spark, rows)
+    got = _pairs(sigs, cfg)
     # delegate (min rep_id) -> every other twin, linear, and NOTHING else:
     # no C(n,2) leak through the all-pairs window or any star path
     assert sorted((r["id_l"], r["id_r"]) for r in got) == [
@@ -387,10 +401,10 @@ def test_twin_collapse_keeps_distinct_signature_crowds_intact(spark):
     planted far-from-hub pair keeps its direct all-pairs edge exactly as in
     test_double_saturated_pair_keeps_direct_edge."""
     cfg = DedupConfig(max_band_bucket=16)
-    sigs = spark.createDataFrame(_saturated_rows(), SIG_SCHEMA)
+    sigs = _sigs(spark, _saturated_rows())
     got = {
         (r["id_l"], r["id_r"]): r["band_src"]
-        for r in lsh.candidate_pairs(lsh.band_table(sigs, cfg), cfg).collect()
+        for r in _pairs(sigs, cfg)
     }
     assert got.get(("y_a", "y_b")) == "pixel"
     assert "sig_twin" not in set(got.values())
@@ -447,7 +461,7 @@ def test_simhash_crowd_premises(spark):
     from pyspark.sql import functions as F
 
     cfg = DedupConfig(max_band_bucket=4)
-    bands = lsh.band_table(spark.createDataFrame(rows, SIG_SCHEMA), cfg)
+    bands = lsh.band_table(_sigs(spark, rows), cfg)
     sim_keys = bands.filter(
         (F.col("band_key").bitwiseAND(F.lit(lsh.SIMHASH_BIT)) != 0)
         & (F.col("band_key").bitwiseAND(F.lit(lsh.CAPTION_BIT)) == 0)
@@ -459,10 +473,10 @@ def test_simhash_crowd_premises(spark):
 
 def test_simhash_overcap_routes_to_stars_not_subbanding(spark):
     cfg = DedupConfig(max_band_bucket=4)
-    sigs = spark.createDataFrame(_simhash_crowd_rows(), SIG_SCHEMA)
+    sigs = _sigs(spark, _simhash_crowd_rows())
     got = {
         (r["id_l"], r["id_r"]): r["band_src"]
-        for r in lsh.candidate_pairs(lsh.band_table(sigs, cfg), cfg).collect()
+        for r in _pairs(sigs, cfg)
     }
     # the planted near pair keeps its DIRECT phash edge (recall unharmed)
     assert got.get(("z_a", "z_b")) == "pixel"

@@ -101,6 +101,21 @@ def test_prune_ratio_reported(result):
     assert 0.0 <= result.metrics["prune_ratio"] < 1.0
 
 
+def test_benchmark_tracer_tables_match_pipeline(result):
+    """The benchmark tracer splits a run by layer through two hand-kept
+    tables; a renamed stage or operator would silently drop out of the
+    trace. Every stage the pipeline runs must have a layer, and every traced
+    operator entry point must still exist."""
+    import importlib
+
+    from perfbench.tracing import OPERATOR_CALLS, STAGE_LAYER
+
+    assert set(result.metrics["stages"]) == set(STAGE_LAYER)
+    for mod_name, fn_name, _ in OPERATOR_CALLS:
+        fn = getattr(importlib.import_module(mod_name), fn_name, None)
+        assert callable(fn), f"{mod_name}.{fn_name}"
+
+
 # --- saturated-cap run: the star_only_pairs == 0 planted-fixture gate --------
 @pytest.fixture(scope="module")
 def saturated_result(spark, images_df, partition_map_df):
