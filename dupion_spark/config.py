@@ -74,7 +74,10 @@ class DedupConfig:
     # images are quadratic junk that pixel-authoritative verify rejects.
     max_band_bucket: int = 256    # all-pairs window for pixel-band buckets
     minhash_max_bucket: int = 8   # all-pairs window for caption-band buckets
-    salt_buckets: int = 16        # salted repartition fan-out for hot band keys
+    # unused: nothing reads it. Kept only because removing a field changes
+    # config_hash(), which would invalidate every checkpoint root (and with
+    # it incremental reuse) built so far.
+    salt_buckets: int = 16
     # Second-level sub-buckets (the cascade for over-cap pixel buckets) run
     # DIRECT all-pairs up to this LARGER window instead of hub star links —
     # closing the round-4 residual recall hole where a member far from its

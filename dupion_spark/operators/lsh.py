@@ -26,6 +26,14 @@ Skew strategy (the mega-cluster problem):
   3. the all-pairs self-join is pinned to SHUFFLE_HASH (AQE would
      broadcast the corpus-sized band table) and runs under AQE skew-join
      splitting (spark.sql.adaptive.skewJoin.enabled).
+
+One bucket-pair builder serves every level that buckets rows
+(rep_id, <key>, ...) — both levels of the pixel cascade here and the
+document MinHash path (queries._doc_pairs):
+  hot_keys     — the over-cap keys with their hub (exact, or sampled and
+                 re-counted), the only keys that meet the rows again;
+  bucket_pairs — the SHUFFLE_HASH all-pairs self-join inside each bucket;
+  star_links   — hub star links for the over-cap buckets.
 """
 
 from __future__ import annotations
@@ -150,22 +158,96 @@ def band_table(
     )
 
 
-def _hamming_ok(ph_l, sh_l, ph_r, sh_r, cfg: DedupConfig,
-                ph_limit: int | None = None):
-    """Per-source prefilter predicate (see DedupConfig): phash within the
-    multiprobe guarantee band OR simhash within the pigeonhole band.
+def hot_keys(
+    rows: DataFrame, key: str, cap, carry: tuple = (),
+    sample: float | None = None, seed: int = 0,
+) -> DataFrame:
+    """The over-cap buckets of `rows` (rep_id, <key>, ...): one row per key
+    holding more than `cap` rows, with `key`, `_n` (bucket size), `_hub`
+    (the minimum rep_id) and one `_hub_<c>` per carried column (the hub
+    row's value, for prefiltering star links against the hub).
 
-    ph_limit: effective phash radius (cfg.pixel_prefilter for the active
-    band plan); defaults to the configured static radius. <= 0 DISABLES
-    the prefilter entirely (every band collision goes to verify) — the
-    escape hatch for auditing prefilter recall against raw LSH output."""
-    limit = cfg.prefilter_hamming if ph_limit is None else ph_limit
-    if limit <= 0:
-        return F.lit(True)
-    ph_ham = F.bit_count(ph_l.bitwiseXOR(ph_r))
-    sh_ham = F.bit_count(sh_l.bitwiseXOR(sh_r))
-    return (ph_ham <= limit) | (
-        sh_ham <= cfg.simhash_prefilter_hamming
+    ONLY these keys ever meet the band rows again. An earlier layout joined
+    the FULL per-bucket count table back onto all band rows — a corpus-scale
+    sort-merge join that dominated pair generation (measured: 2x the rest of
+    it combined, scaling at ~0.5 efficiency). The over-cap key set is orders
+    of magnitude smaller (hot keys only), so the all-pairs path's anti-join
+    and the star path's inner join both stay AQE-broadcastable; where even
+    the hot set outgrows broadcast they degrade to shuffle joins that move
+    only hot keys, never the counts table.
+
+    sample: a row-sample fraction for large corpora, where the exact
+    per-key count is itself a corpus-scale near-unique-key shuffle. Keys
+    whose sampled count exceeds half the expected at-cap sample are
+    flagged, then EXACTLY re-counted on just the flagged slice; `cap` must
+    be an int here. A missed marginal bucket degrades to a bounded
+    all-pairs join — a superset of its star links, never wrong output
+    (verify is authoritative)."""
+    if sample is not None:
+        flagged = (
+            rows.sample(fraction=sample, seed=seed)
+            .groupBy(key)
+            .agg(F.count(F.lit(1)).alias("_sn"))
+            .filter(F.col("_sn") > max(1, int(cap * sample / 2)))
+            .select(key)
+        )
+        rows = rows.join(flagged, key)
+    return (
+        rows.groupBy(key)
+        .agg(
+            F.count(F.lit(1)).alias("_n"),
+            F.min("rep_id").alias("_hub"),
+            *(F.min_by(c, "rep_id").alias(f"_hub_{c}") for c in carry),
+        )
+        .filter(F.col("_n") > cap)
+    )
+
+
+def bucket_pairs(rows: DataFrame, key: str, label, keep=None) -> DataFrame:
+    """(id_l, id_r, band_src) for every pair sharing a `key` bucket in
+    `rows` (rep_id, <key>, ...), id_l < id_r; `label` is a band_src string
+    or a Column over the `l.`/`r.` sides. keep(p, q), when given, is a
+    predicate over the two sides' column prefixes ("l.", "r.") that runs
+    inside the join's codegen, so the raw pair stream never materializes.
+
+    The self-join joins the SAME plan to itself (aliases, not two
+    differently-projected copies), so both sides read one cached input.
+    SHUFFLE_HASH is pinned: AQE otherwise saw a small compressed shuffle
+    size and BROADCAST the 26M-row band table — a single-threaded ~800MB
+    driver build that cost more than the whole join (measured 45s vs 18s at
+    8 cores) and grows with input, the exact shape of parallelism-
+    independent wall the scaling gate punishes. At real corpus scale a
+    broadcast here is impossible anyway; per-partition hash builds stay
+    bounded by the shuffle partition count, and AQE skew-join splitting
+    handles residual bucket skew."""
+    l, r = rows.alias("l"), rows.alias("r")
+    pairs = (
+        l.hint("SHUFFLE_HASH").join(r, F.col(f"l.{key}") == F.col(f"r.{key}"))
+        .filter(F.col("l.rep_id") < F.col("r.rep_id"))
+    )
+    if keep is not None:
+        pairs = pairs.filter(keep("l.", "r."))
+    return pairs.select(
+        F.col("l.rep_id").alias("id_l"),
+        F.col("r.rep_id").alias("id_r"),
+        F.lit(label).alias("band_src"),
+    )
+
+
+def star_links(joined: DataFrame, label, keep=None) -> DataFrame:
+    """(id_l, id_r, band_src) hub STAR links for over-cap buckets: `joined`
+    is the bucket rows joined to their hot_keys row, and every member links
+    to its bucket's hub (linear, and the bucket subgraph is already a star,
+    so connected components converges on it in one round). keep(p, q), when
+    given, filters on the hub's carried columns ("_hub_") against the
+    member's own ("")."""
+    links = joined.filter(F.col("rep_id") != F.col("_hub"))
+    if keep is not None:
+        links = links.filter(keep("_hub_", ""))
+    return links.select(
+        F.col("_hub").alias("id_l"),
+        F.col("rep_id").alias("id_r"),
+        F.lit(label).alias("band_src"),
     )
 
 
@@ -205,8 +287,9 @@ def candidate_pairs(
     are impure and their pairs can never pass the pixel-authoritative verify.
 
     SIMHASH over-cap buckets: hub STAR links too — simhash is a diversity
-    source with no recall obligation (see the simhash-star comment below for
-    the full argument and the measured 1.2M cost of sub-banding them).
+    source with no recall obligation (see the star-branch comment below for
+    the argument and SIMHASH_BIT for the measured 1.2M cost of sub-banding
+    them).
 
     PHASH over-cap buckets: RECURSIVE SUB-BANDING, because star links cannot
     carry recall through the verify gate — a hub edge only survives if the
@@ -255,12 +338,32 @@ def candidate_pairs(
     # phash prefilter radius aligned to the active band plan (see docstring)
     ph_limit = cfg.pixel_prefilter(n_reps)
 
+    def keep(p: str, q: str):
+        """Per-source prefilter between the signature columns under prefixes
+        p and q (see DedupConfig): phash within the plan's radius OR simhash
+        within the pigeonhole band. A radius <= 0 DISABLES the prefilter
+        (every band collision goes to verify) — the escape hatch for
+        auditing prefilter recall against raw LSH output."""
+        if ph_limit <= 0:
+            return F.lit(True)
+
+        def ham(c: str):
+            return F.bit_count(F.col(p + c).bitwiseXOR(F.col(q + c)))
+
+        return (ham("phash") <= ph_limit) | (
+            ham("simhash") <= cfg.simhash_prefilter_hamming
+        )
+
     # per-source cap via the key's caption bit: caption buckets get a tighter
     # all-pairs window than pixel buckets (see DedupConfig.max_band_bucket)
     is_caption = F.col("band_key").bitwiseAND(F.lit(CAPTION_BIT)) != 0
     cap = F.when(is_caption, F.lit(cfg.minhash_max_bucket)).otherwise(
         F.lit(cfg.max_band_bucket)
     )
+    # over-cap CAPTION and SIMHASH buckets take hub star links, over-cap
+    # PHASH buckets the sub-band cascade (see docstring)
+    key_class = F.col("band_key").bitwiseAND(F.lit(CAPTION_BIT | SIMHASH_BIT))
+    is_star_key, is_phash_key = key_class != 0, key_class == 0
 
     # MATERIALIZATION DISCIPLINE: every multiply-referenced intermediate is
     # lazily localCheckpointed — DataFrame reuse is NOT compute reuse (each
@@ -272,176 +375,94 @@ def candidate_pairs(
     # the checkpoint stays.
     bands = bands.localCheckpoint(eager=False)  # consumers: hot detection (sample+recheck or exact), small anti-join, big join
 
-    # ONLY the over-cap bucket keys (with their hub signatures) ever need to
-    # meet the band table again. An earlier layout joined the FULL per-bucket
-    # count table back onto all band rows — a corpus-scale sort-merge join
-    # that dominated the stage (measured: 2x the rest of pair generation
-    # combined, and it scaled at ~0.5 efficiency). The over-cap key set is
-    # orders of magnitude smaller (hot keys only), so the small path's
-    # anti-join and the big path's inner join both stay AQE-broadcastable;
-    # at scales where even the hot set outgrows broadcast they degrade to
-    # shuffle joins that move only hot keys, never the counts table.
-
-    def _hot_agg(rows: DataFrame, bucket_cap) -> DataFrame:
-        return (
-            rows.groupBy("band_key")
-            .agg(
-                F.count(F.lit(1)).alias("_n"),
-                F.min("rep_id").alias("_hub"),
-                F.min_by("phash", "rep_id").alias("_hub_ph"),
-                F.min_by("simhash", "rep_id").alias("_hub_sh"),
-            )
-            .filter(F.col("_n") > bucket_cap)
-        )
-
+    carry = ("phash", "simhash")
     if n_reps is not None and n_reps >= cfg.hot_sample_min_reps:
         # sampled hot detection for the pixel keys (see DedupConfig): the
         # exact per-key counts agg is itself corpus-scale at large N (~40M
-        # near-unique keys at 600k under the 3-band plan). Flag candidate
-        # hot keys from a row sample, then EXACTLY re-count just the flagged
-        # slice — a missed marginal bucket degrades to a bounded all-pairs
-        # join, never to wrong output (verify is authoritative).
-        frac = cfg.hot_sample_fraction
-        flag_threshold = max(1, int(cfg.max_band_bucket * frac / 2))
-        pix = bands.filter(~is_caption)
-        flagged = (
-            pix.sample(fraction=frac, seed=cfg.seed)
-            .groupBy("band_key")
-            .agg(F.count(F.lit(1)).alias("_sn"))
-            .filter(F.col("_sn") > flag_threshold)
-            .select("band_key")
+        # near-unique keys at 600k under the 3-band plan). Caption keys keep
+        # exact detection: their cap is below sampling resolution.
+        hot = hot_keys(
+            bands.filter(~is_caption), "band_key", cfg.max_band_bucket, carry,
+            sample=cfg.hot_sample_fraction, seed=cfg.seed,
+        ).unionByName(
+            hot_keys(bands.filter(is_caption), "band_key",
+                     cfg.minhash_max_bucket, carry)
         )
-        pix_hot = _hot_agg(pix.join(flagged, "band_key"), F.lit(cfg.max_band_bucket))
-        capt_hot = _hot_agg(bands.filter(is_caption), F.lit(cfg.minhash_max_bucket))
-        hot = pix_hot.unionByName(capt_hot).localCheckpoint(eager=False)
     else:
         # exact detection at small scale: bitwise-stable bucket routing is
         # what the sf0.001/sf0.01 golden oracles value-check against
-        hot = _hot_agg(bands, cap).localCheckpoint(eager=False)
-    # hot consumers: small-path anti-join + big-path inner join
+        hot = hot_keys(bands, "band_key", cap, carry)
+    hot = hot.localCheckpoint(eager=False)  # consumers: small anti-join + big join
 
     # ADAPTIVE BRANCH ELISION on the materialized hot statistic: which of the
-    # three over-cap classes actually occur this run. `hot` is tiny (hot keys
+    # over-cap classes actually occur this run. `hot` is tiny (hot keys
     # only) and already checkpointed, so this is one sub-second driver-side
     # aggregation — the AQE idiom (plan from runtime stats) applied at the
     # orchestration level. Without it, every run pays shuffle-stage
-    # round-trips for all five fallback branches (caption/simhash stars, twin
+    # round-trips for all four fallback branches (caption/simhash stars, twin
     # collapse, sub-banding + sub-stars, each behind its own localCheckpoint
     # materialization) even when the over-cap population is EMPTY — measured
     # ~3s of the 6.3s pairs wall at sf0.1 (6k images, zero hot buckets),
     # pure fixed overhead the scaling gate's small legs also pay. Output is
     # identical: an elided branch contributes zero rows by construction.
-    hot_is_simhash = F.col("band_key").bitwiseAND(F.lit(SIMHASH_BIT)) != 0
     hot_classes = hot.agg(
         F.count(F.lit(1)).alias("n_hot"),
-        F.count(F.when(is_caption, 1)).alias("n_capt"),
-        F.count(F.when((~is_caption) & hot_is_simhash, 1)).alias("n_sim"),
-        F.count(F.when((~is_caption) & ~hot_is_simhash, 1)).alias("n_pix"),
+        F.count(F.when(is_star_key, 1)).alias("n_star"),
+        F.count(F.when(is_phash_key, 1)).alias("n_pix"),
     ).collect()[0]
-    # the elision is sound only while the three classes partition the hot
-    # keys: a key in none of them (a new key class, a null band_key) would
-    # otherwise skip every over-cap branch and flow into the all-pairs join
-    n_classed = hot_classes["n_capt"] + hot_classes["n_sim"] + hot_classes["n_pix"]
+    # the elision is sound only while the classes partition the hot keys: a
+    # key in none of them (a new key class, a null band_key) would otherwise
+    # skip every over-cap branch and flow into the all-pairs join
+    n_classed = hot_classes["n_star"] + hot_classes["n_pix"]
     if n_classed != hot_classes["n_hot"]:
         raise AssertionError(
             f"{hot_classes['n_hot']} over-cap band keys but {n_classed} "
             "fall in a known key class (caption/simhash/phash)"
         )
-    any_hot = hot_classes["n_hot"] > 0
 
-    # the all-pairs self-join joins the SAME materialized plan to itself
-    # (aliases, not two differently-projected copies), so both join sides
-    # read the one cached band RDD. SHUFFLE_HASH is pinned: AQE otherwise
-    # saw a small compressed shuffle size and BROADCAST the 26M-row band
-    # table — a single-threaded ~800MB driver build that cost more than the
-    # whole join (measured 45s vs 18s at 8 cores) and grows with input, the
-    # exact shape of parallelism-independent wall the scaling gate punishes.
-    # At real corpus scale a broadcast here is impossible anyway; per-
-    # partition hash builds stay bounded by the shuffle partition count.
-    # r6: the hot anti-join is itself elided when the hot statistic says NO
+    # the hot anti-join is itself elided when the hot statistic says NO
     # over-cap bucket exists this run — an anti-join against an empty set is
     # the identity, so output is unchanged and the zero-hot case (every
     # bench SF) skips a full pass + broadcast over the band table.
     small = (
-        bands if not any_hot
+        bands if not hot_classes["n_hot"]
         else bands.join(hot.select("band_key"), "band_key", "left_anti")
     )
-    sl, sr = small.alias("l"), small.alias("r")
-    small_pairs = (
-        sl.hint("SHUFFLE_HASH").join(sr, F.col("l.band_key") == F.col("r.band_key"))
-        .filter(F.col("l.rep_id") < F.col("r.rep_id"))
-        .filter(_hamming_ok(F.col("l.phash"), F.col("l.simhash"),
-                            F.col("r.phash"), F.col("r.simhash"), cfg,
-                            ph_limit=ph_limit))
-        .select(
-            F.col("l.rep_id").alias("id_l"),
-            F.col("r.rep_id").alias("id_r"),
-            F.when(
-                F.col("l.band_key").bitwiseAND(F.lit(CAPTION_BIT)) != 0,
-                F.lit("minhash"),
-            ).otherwise(F.lit("pixel")).alias("band_src"),
-        )
-    )
+    branches = [bucket_pairs(
+        small, "band_key",
+        F.when(F.col("l.band_key").bitwiseAND(F.lit(CAPTION_BIT)) != 0,
+               F.lit("minhash")).otherwise(F.lit("pixel")),
+        keep,
+    )]
 
     big = bands.join(hot, "band_key")
 
-    # caption over-cap buckets: star links to the hub, hub-hamming filtered
-    # (recall is carried by the pixel bands — see docstring). The PLAN-ALIGNED
-    # ph_limit is intentionally shared with this caption path even though the
-    # 3*bands catch-guarantee rationale is pixel-specific: caption banding can
-    # surface pairs at phash hamming (plan_limit..12] that the narrowed radius
-    # now drops, which is safe ONLY because verify is pixel-authoritative and
-    # every measured such pair fails the PSNR gate (65,855/65,855 rejected at
-    # 600k). If caption-verified edges (require_caption_lcs as an OR-path) are
-    # ever added, caption-sourced pairs must keep cfg.prefilter_hamming
-    # instead. Star links
-    # carry a 'star_*' band_src: direct labels sort lexicographically before
-    # star labels, so after the min-agg below a pair is labeled star_* iff
-    # its ONLY provenance is hub-star links — the exact population exposed
-    # to the documented star-recall caveat, countable for free from the
-    # pair/edge tables (no extra jobs).
-    branches = [small_pairs]
-    if hot_classes["n_capt"]:
-        branches.append(
-            big.filter(is_caption)
-            .filter(F.col("rep_id") != F.col("_hub"))
-            .filter(_hamming_ok(F.col("_hub_ph"), F.col("_hub_sh"),
-                                F.col("phash"), F.col("simhash"), cfg,
-                                ph_limit=ph_limit))
-            .select(
-                F.col("_hub").alias("id_l"),
-                F.col("rep_id").alias("id_r"),
-                F.lit("star_minhash").alias("band_src"),
-            )
-        )
-
-    # simhash over-cap buckets: hub STAR links, same shape and same recall
-    # argument as the caption path — simhash carries no recall obligation
-    # (any genuine near pair within the plan radius is guaranteed a phash
-    # band collision; the simhash<=3 OR-path class in an over-cap bucket was
-    # never guaranteed by phash sub-windows either, so star links lose
-    # nothing it had). Routing these members through phash sub-banding
-    # instead was the 1.2M pairs-wall blowup: smooth-image simhash clumping
-    # grows over-cap membership linearly with the corpus, and those members'
-    # phashes concentrate in low-entropy sub-windows — 28.6e9 sub-bucket
-    # all-pairs comparisons at 1.2M (BENCH/diag_band_sources.py), ~100% of
-    # the 483 s pairs wall. Star links keep the cost linear in members.
-    is_simhash_key = (~is_caption) & (
-        F.col("band_key").bitwiseAND(F.lit(SIMHASH_BIT)) != 0
-    )
-    if hot_classes["n_sim"]:
-        branches.append(
-            big.filter(is_simhash_key)
-            .filter(F.col("rep_id") != F.col("_hub"))
-            .filter(_hamming_ok(F.col("_hub_ph"), F.col("_hub_sh"),
-                                F.col("phash"), F.col("simhash"), cfg,
-                                ph_limit=ph_limit))
-            .select(
-                F.col("_hub").alias("id_l"),
-                F.col("rep_id").alias("id_r"),
-                F.lit("star_simhash").alias("band_src"),
-            )
-        )
+    # caption and simhash over-cap buckets: star links to the hub,
+    # hub-hamming filtered (recall is carried by the pixel bands — see
+    # docstring). Simhash carries no recall obligation either: any genuine
+    # near pair within the plan radius is guaranteed a phash band collision,
+    # and the simhash<=3 OR-path class in an over-cap bucket was never
+    # guaranteed by phash sub-windows, so star links lose nothing it had
+    # (and sub-banding them was the 1.2M pairs-wall blowup, see SIMHASH_BIT).
+    # The PLAN-ALIGNED ph_limit is intentionally shared with the caption
+    # stars even though the 3*bands catch-guarantee rationale is
+    # pixel-specific: caption banding can surface pairs at phash hamming
+    # (plan_limit..12] that the narrowed radius now drops, which is safe ONLY
+    # because verify is pixel-authoritative and every measured such pair
+    # fails the PSNR gate (65,855/65,855 rejected at 600k). If
+    # caption-verified edges (require_caption_lcs as an OR-path) are ever
+    # added, caption-sourced pairs must keep cfg.prefilter_hamming instead.
+    # Star links carry a 'star_*' band_src: direct labels sort
+    # lexicographically before star labels, so after the min-agg below a
+    # pair is labeled star_* iff its ONLY provenance is hub-star links — the
+    # exact population exposed to the documented star-recall caveat,
+    # countable for free from the pair/edge tables (no extra jobs).
+    if hot_classes["n_star"]:
+        branches.append(star_links(
+            big.filter(is_star_key),
+            F.when(is_caption, "star_minhash").otherwise("star_simhash"),
+            keep,
+        ))
 
     # pixel over-cap buckets: second-level sub-banding (4 disjoint 16-bit
     # windows offset 8 bits from the band slices, 1-bit multiprobe — see
@@ -454,10 +475,7 @@ def candidate_pairs(
     # bounded by the sub-bucket cap and killed by the hamming prefilter /
     # PSNR gate.
     if hot_classes["n_pix"]:
-        _pixel_overcap_branches(
-            branches, big.filter((~is_caption) & (~is_simhash_key)),
-            cfg, ph_limit,
-        )
+        branches += _pixel_overcap_branches(big.filter(is_phash_key), cfg, keep)
 
     pairs = branches[0]
     for extra in branches[1:]:
@@ -478,12 +496,12 @@ def candidate_pairs(
 
 
 def _pixel_overcap_branches(
-    branches: list, overcap_rows: DataFrame, cfg: DedupConfig, ph_limit: int
-) -> None:
-    """Append the pixel over-cap cascade branches (twin collapse, sub-band
-    all-pairs, sub-star fallback) to `branches`. Split out of candidate_pairs
-    so the whole cascade is built ONLY when the hot statistic says pixel
-    over-cap buckets exist this run (see the branch-elision comment there)."""
+    overcap_rows: DataFrame, cfg: DedupConfig, keep
+) -> list[DataFrame]:
+    """The pixel over-cap cascade branches: twin collapse, sub-band
+    all-pairs, sub-star fallback. Split out of candidate_pairs so the whole
+    cascade is built ONLY when the hot statistic says pixel over-cap buckets
+    exist this run (see the branch-elision comment there)."""
     sub_keys = []
     for sub in range(4):
         lo = F.shiftrightunsigned(F.col("phash"), sub * 16 + 8).bitwiseAND(
@@ -531,7 +549,7 @@ def _pixel_overcap_branches(
         sig_groups.select(F.col("_dg").alias("rep_id"), "phash", "simhash")
         .localCheckpoint(eager=False)  # consumers: sub_hot, anti, star join
     )
-    branches.append(
+    twins = (
         members_all.join(
             sig_groups.filter(F.col("_dn") > 1), ["phash", "simhash"]
         )
@@ -548,33 +566,11 @@ def _pixel_overcap_branches(
     )
     # same hot-key structure as the top level, but with the LARGER
     # sub_allpairs_max window: sub-buckets within it run direct all-pairs
-    # (recall-complete; see docstring), so only true mega-crowd sub-buckets
-    # rejoin the sub table for star links
-    sub_hot = (
-        sub.groupBy("sub_key")
-        .agg(
-            F.count(F.lit(1)).alias("_sn"),
-            F.min("rep_id").alias("_shub"),
-            F.min_by("phash", "rep_id").alias("_shub_ph"),
-            F.min_by("simhash", "rep_id").alias("_shub_sh"),
-        )
-        .filter(F.col("_sn") > F.lit(cfg.sub_allpairs_max))
-        .localCheckpoint(eager=False)
-    )
-    sub_small = sub.join(sub_hot.select("sub_key"), "sub_key", "left_anti")
-    ssl, ssr = sub_small.alias("sl"), sub_small.alias("sr")
-    branches.append(
-        ssl.hint("SHUFFLE_HASH").join(ssr, F.col("sl.sub_key") == F.col("sr.sub_key"))
-        .filter(F.col("sl.rep_id") < F.col("sr.rep_id"))
-        .filter(_hamming_ok(F.col("sl.phash"), F.col("sl.simhash"),
-                            F.col("sr.phash"), F.col("sr.simhash"), cfg,
-                            ph_limit=ph_limit))
-        .select(
-            F.col("sl.rep_id").alias("id_l"),
-            F.col("sr.rep_id").alias("id_r"),
-            F.lit("pixel").alias("band_src"),
-        )
-    )
+    # (recall-complete; see candidate_pairs docstring), so only true
+    # mega-crowd sub-buckets rejoin the sub table for star links
+    sub_hot = hot_keys(
+        sub, "sub_key", cfg.sub_allpairs_max, ("phash", "simhash")
+    ).localCheckpoint(eager=False)
     # sub-buckets beyond the sub_allpairs_max window fall back to hub stars:
     # >4096 members agreeing on 16 phash bits within 1 flip are adversarial
     # near-identical mega-crowds where star edges overwhelmingly pass verify
@@ -582,15 +578,11 @@ def _pixel_overcap_branches(
     # >prefilter bits from its sub-hub losing its only direct edge — now
     # requires that mega-crowd saturation and stays countable per run via
     # the star_only_pairs lineage metric (see candidate_pairs docstring)
-    branches.append(
-        sub.join(sub_hot, "sub_key")
-        .filter(F.col("rep_id") != F.col("_shub"))
-        .filter(_hamming_ok(F.col("_shub_ph"), F.col("_shub_sh"),
-                            F.col("phash"), F.col("simhash"), cfg,
-                            ph_limit=ph_limit))
-        .select(
-            F.col("_shub").alias("id_l"),
-            F.col("rep_id").alias("id_r"),
-            F.lit("star_pixel").alias("band_src"),
-        )
-    )
+    return [
+        twins,
+        bucket_pairs(
+            sub.join(sub_hot.select("sub_key"), "sub_key", "left_anti"),
+            "sub_key", "pixel", keep,
+        ),
+        star_links(sub.join(sub_hot, "sub_key"), "star_pixel", keep),
+    ]

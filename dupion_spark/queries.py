@@ -23,6 +23,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dupion_spark.operators import lsh
+
 # ---------------------------------------------------------------------------
 # shared constants (must be literal-identical in Spark exprs and oracle SQL)
 # ---------------------------------------------------------------------------
@@ -618,79 +620,57 @@ def _doc_band_plan(n_docs: int | None) -> tuple[int, int]:
     return 2, 8
 
 
-def _doc_pairs(
-    sig: DataFrame,
-    n_docs: int | None = None,
-    hot_sample_min_docs: int = DOC_HOT_SAMPLE_MIN_DOCS,
-    hot_sample_fraction: float = DOC_HOT_SAMPLE_FRACTION,
-) -> DataFrame:
-    """Banding + capped candidate-pair generation over the signature table,
-    with the image path's hot-key join discipline (operators/lsh
-    .candidate_pairs): ONLY the over-cap bucket keys — orders of magnitude
-    fewer than buckets — ever meet the band table again. The previous layout
-    joined the FULL per-bucket counts table back onto all band rows, a
-    corpus-scale sort-merge join the image path measured at 2x the rest of
-    pair generation combined. Band keys are xxhash64 LONGS (one skinny
-    column) instead of md5-of-concat strings — same bucket partition (any
-    injective key works; collisions at 2^-64 only add candidates that exact
-    verification re-checks), ~40% fewer shuffle bytes per band row. The
-    DuckDB oracle keeps md5 keys: bucket contents, caps, and hubs — the
-    semantics — are identical, so the pair sets match.
-
-    n_docs: corpus-size hint. Drives (a) the ADAPTIVE band plan
-    (_doc_band_plan — fewer, more selective bands at mega-corpus scale) and
-    (b) SAMPLED hot detection above hot_sample_min_docs: flag candidate hot
-    keys from a hot_sample_fraction row sample, then exactly re-count just
-    the flagged slice — the full near-unique-key counts shuffle (the text
-    path's superlinear term, mirroring the pixel fix in commit 6b1ca5c)
-    disappears. A missed marginal bucket runs all-pairs: a SUPERSET of its
-    star links (property-tested), never fewer pairs."""
+def _doc_bands(sig: DataFrame, n_docs: int | None) -> DataFrame:
+    """(rep_id, key) band rows: one xxhash64 key per band of the adaptive
+    plan, rep_id carrying the doc_id (the bucket-pair builder's id column)."""
     bands_n, rows_n = _doc_band_plan(n_docs)
     keys = []
     for band in range(bands_n):
         cols = [F.col(f"h{band * rows_n + r}") for r in range(rows_n)]
         keys.append(F.xxhash64(F.lit(f"docband:{band}"), *cols))
-    bands = sig.select(
-        "doc_id", F.explode(F.array(*keys)).alias("key")
-    ).localCheckpoint(eager=False)  # 3 consumers: hot agg, anti-join, big join
+    return sig.select(
+        F.col("doc_id").alias("rep_id"), F.explode(F.array(*keys)).alias("key")
+    )
 
-    def _hot_agg(rows: DataFrame) -> DataFrame:
-        return (
-            rows.groupBy("key")
-            .agg(F.count(F.lit(1)).alias("_n"), F.min("doc_id").alias("_hub"))
-            .filter(F.col("_n") > DOC_MAX_BAND_BUCKET)
-        )
 
-    if n_docs is not None and n_docs >= hot_sample_min_docs:
-        flag_threshold = max(1, int(DOC_MAX_BAND_BUCKET * hot_sample_fraction / 2))
-        flagged = (
-            bands.sample(fraction=hot_sample_fraction, seed=42)
-            .groupBy("key")
-            .agg(F.count(F.lit(1)).alias("_sn"))
-            .filter(F.col("_sn") > flag_threshold)
-            .select("key")
-        )
-        hot = _hot_agg(bands.join(flagged, "key"))
-    else:
-        # exact detection at small scale: bitwise-stable bucket routing is
-        # what the DuckDB oracles value-check against
-        hot = _hot_agg(bands)
-    hot = hot.localCheckpoint(eager=False)  # 2 consumers: anti-join + big path
+def _doc_pairs(sig: DataFrame, n_docs: int | None = None) -> DataFrame:
+    """Banding + capped candidate-pair generation over the signature table,
+    through the image path's bucket-pair builder (operators/lsh.hot_keys,
+    bucket_pairs, star_links): ONLY the over-cap bucket keys ever meet the
+    band table again, under-cap buckets run the SHUFFLE_HASH all-pairs
+    self-join, over-cap buckets star-link to their minimum doc_id. Band keys
+    are xxhash64 LONGS (one skinny column) instead of md5-of-concat strings
+    — same bucket partition (any injective key works; collisions at 2^-64
+    only add candidates that exact verification re-checks), ~40% fewer
+    shuffle bytes per band row. The DuckDB oracle keeps md5 keys: bucket
+    contents, caps, and hubs — the semantics — are identical, so the pair
+    sets match.
+
+    n_docs: corpus-size hint. Drives (a) the ADAPTIVE band plan
+    (_doc_band_plan — fewer, more selective bands at mega-corpus scale) and
+    (b) SAMPLED hot detection from DOC_HOT_SAMPLE_MIN_DOCS on: flag
+    candidate hot keys from a DOC_HOT_SAMPLE_FRACTION row sample, then
+    exactly re-count just the flagged slice — the full near-unique-key
+    counts shuffle (the text path's superlinear term, mirroring the pixel
+    fix in commit 6b1ca5c) disappears. A missed marginal bucket runs
+    all-pairs: a SUPERSET of its star links (property-tested), never fewer
+    pairs."""
+    # 3 consumers: hot agg, anti-join, big join
+    bands = _doc_bands(sig, n_docs).localCheckpoint(eager=False)
+    # exact detection below the sampling threshold: bitwise-stable bucket
+    # routing is what the DuckDB oracles value-check against
+    sampled = n_docs is not None and n_docs >= DOC_HOT_SAMPLE_MIN_DOCS
+    hot = lsh.hot_keys(
+        bands, "key", DOC_MAX_BAND_BUCKET,
+        sample=DOC_HOT_SAMPLE_FRACTION if sampled else None, seed=42,
+    ).localCheckpoint(eager=False)  # 2 consumers: anti-join + big path
     small = bands.join(hot.select("key"), "key", "left_anti")
-    sl, sr = small.alias("l"), small.alias("r")
-    # SHUFFLE_HASH pinned for the same reason as the image path: AQE sees a
-    # small compressed shuffle and would broadcast the corpus-sized band table
-    small_pairs = (
-        sl.hint("SHUFFLE_HASH").join(sr, F.col("l.key") == F.col("r.key"))
-        .filter(F.col("l.doc_id") < F.col("r.doc_id"))
-        .select(F.col("l.doc_id").alias("id_l"), F.col("r.doc_id").alias("id_r"))
+    return (
+        lsh.bucket_pairs(small, "key", "minhash")
+        .unionByName(lsh.star_links(bands.join(hot, "key"), "star_minhash"))
+        .select("id_l", "id_r")
+        .distinct()
     )
-    big_pairs = (
-        bands.join(hot, "key")
-        .filter(F.col("doc_id") != F.col("_hub"))
-        .select(F.col("_hub").alias("id_l"), F.col("doc_id").alias("id_r"))
-    )
-    return small_pairs.unionByName(big_pairs).distinct()
 
 
 def q_dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -168,7 +168,7 @@ def _hot_crowd_docs(spark):
     return spark.createDataFrame(rows, "doc_id string, text string")
 
 
-def test_doc_sampled_hot_pairs_superset_of_exact(spark):
+def test_doc_sampled_hot_pairs_superset_of_exact(spark, monkeypatch):
     """The monotonicity property the sampled path must keep (mirror of the
     pixel-path test): every exact-detection pair survives sampling — a
     missed hot bucket degrades to all-pairs, a SUPERSET of its star links;
@@ -176,11 +176,11 @@ def test_doc_sampled_hot_pairs_superset_of_exact(spark):
     docs = _hot_crowd_docs(spark)
     sig = Q._minhash_sig(docs).localCheckpoint(eager=False)
     exact = {(r["id_l"], r["id_r"]) for r in Q._doc_pairs(sig).collect()}
+    # activate the sampled path on this tiny corpus
+    monkeypatch.setattr(Q, "DOC_HOT_SAMPLE_MIN_DOCS", 1)
+    monkeypatch.setattr(Q, "DOC_HOT_SAMPLE_FRACTION", 0.5)
     sampled = {
-        (r["id_l"], r["id_r"])
-        for r in Q._doc_pairs(
-            sig, n_docs=52, hot_sample_min_docs=1, hot_sample_fraction=0.5
-        ).collect()
+        (r["id_l"], r["id_r"]) for r in Q._doc_pairs(sig, n_docs=52).collect()
     }
     # premises: the boilerplate crowd actually went hot (star pairs to the
     # hub exist) and the near pair is direct in both

@@ -491,3 +491,71 @@ def test_simhash_overcap_routes_to_stars_not_subbanding(spark):
         l.startswith("g") and r.startswith("g") and l != "g00"
         for (l, r) in got
     )
+
+
+# --- caption over-cap routing ----------------------------------------------
+# Ten reps sharing one caption (identical minhash) fill every caption band
+# bucket past minhash_max_bucket (8). Each member's phash sits exactly 12 bits
+# from the hub's, 3 in each 16-bit band, so the phash prefilter (radius 12)
+# passes while no phash band or probe collides (the 3-bit masks share at most
+# one bit, so members differ from each other by >= 4 bits per band); the
+# simhashes are pairwise far apart with distinct band slices. The caption
+# hub stars are then the ONLY provenance of every (hub, member) pair.
+_MASKS3 = [0x0007, 0x0019, 0x0061, 0x0181, 0x0601, 0x1801, 0x6001, 0x002A, 0x0052]
+
+
+def _caption_crowd_rows():
+    ph_hub = _phash(0x1234, 0x5555, 0x6666, 0x7777)
+    flips = [0] + [m | (m << 16) | (m << 32) | (m << 48) for m in _MASKS3]
+    simhashes = np.random.default_rng(7).integers(0, 1 << 63, size=10, dtype=np.int64)
+    caption = [4_000_000 + j for j in range(64)]
+    return [
+        (f"c{i:02d}", 64, 64, caption, int(simhashes[i]),
+         _signed((ph_hub & ((1 << 64) - 1)) ^ flip))
+        for i, flip in enumerate(flips)
+    ]
+
+
+def test_caption_crowd_premises():
+    rows = _caption_crowd_rows()
+    hub = rows[0]
+    for m in rows[1:]:
+        assert _ham(hub[5], m[5]) == 12 <= DedupConfig().pixel_prefilter(None)
+    for i, a in enumerate(rows):
+        for b in rows[i + 1:]:
+            assert not (_top_level_buckets(a[5]) & _top_level_buckets(b[5]))
+            assert _ham(a[4], b[4]) > DedupConfig().simhash_prefilter_hamming
+            for band in range(4):
+                assert (a[4] >> (16 * band)) & 0xFFFF != (b[4] >> (16 * band)) & 0xFFFF
+    assert len(rows) > DedupConfig().minhash_max_bucket
+
+
+def test_caption_overcap_routes_to_stars(spark):
+    got = {
+        (r["id_l"], r["id_r"]): r["band_src"]
+        for r in _pairs(_sigs(spark, _caption_crowd_rows()), DedupConfig())
+    }
+    assert got == {("c00", f"c{i:02d}"): "star_minhash" for i in range(1, 10)}
+
+
+def test_bucket_pairs_plans_shuffled_hash_join(spark):
+    """The SHUFFLE_HASH hint on the all-pairs self-join survives into the
+    executed (final, post-AQE) plan for both the image band table and the
+    document band table: a broadcast would build the whole corpus-sized
+    band table on the driver (see lsh.bucket_pairs)."""
+    from dupion_spark import queries as Q
+
+    docs = spark.createDataFrame(
+        [(f"d{i:02d}", f"document {i % 5} about meadows and kestrels") for i in range(20)],
+        "doc_id string, text string",
+    )
+    tables = {
+        "image": (lsh.band_table(_sigs(spark, _rows()), CFG), "band_key"),
+        "document": (Q._doc_bands(Q._minhash_sig(docs), None), "key"),
+    }
+    for name, (rows, key) in tables.items():
+        pairs = lsh.bucket_pairs(rows, key, "pixel")
+        assert pairs.collect(), name  # executes this plan: AQE's final form
+        plan = pairs._jdf.queryExecution().executedPlan().toString()
+        assert "ShuffledHashJoin" in plan, f"{name}: {plan}"
+        assert "BroadcastHashJoin" not in plan, f"{name}: {plan}"

@@ -372,3 +372,15 @@ def test_older_layout_root_resumes_and_sheds_orphans(spark, images_df, tmp_path)
     assert _lineage_extras(rebuilt, "verified_edges")["pairs_reused"] > 0
     assert _clusters(rebuilt) == baseline
     assert not orphans & set(os.listdir(ckpt))
+
+
+def test_default_config_hash_is_stable():
+    """config_hash() is stamped into every checkpoint manifest, so any change
+    to the default config's fields or values (removing the unused
+    salt_buckets included) changes it and invalidates every checkpoint root
+    built so far, incremental reuse with it. Change this pin only together
+    with such a deliberate break."""
+    assert DedupConfig().config_hash() == "239c04216bfc6e7b", (
+        "DedupConfig fields or defaults changed: every existing checkpoint "
+        "root stops resuming"
+    )
