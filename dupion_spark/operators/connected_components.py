@@ -146,8 +146,9 @@ def connected_components(
     """edges(id_l, id_r) -> assignments(image_id, cluster_root).
 
     cluster_root is the minimum member id of the component (deterministic).
-    Nodes appearing in no edge are NOT returned — callers union singletons via
-    `attach_singletons`."""
+    Nodes appearing in no edge are NOT returned. The pipeline leaves them
+    to `expand_representatives`, whose left join makes an unassigned rep
+    its own root; other callers union them via `attach_singletons`."""
     # LAZY checkpoints throughout: each round's convergence-check collect is
     # the ONE job that materializes (and caches) that round's star outputs —
     # lazy localCheckpoint still truncates the logical plan at first

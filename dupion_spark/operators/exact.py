@@ -12,7 +12,9 @@ This is dupion's core pipeline re-expressed declaratively:
   pass 2: blake3 file bytes                    SHA-256 of decoded pixels,
     (driver/platterwalker.rs:268-344)           computed once per row in the
                                                 feature pass (codec.pixel_sha256)
-  group by hash (state/mod.rs:51-90)           groupBy("pixel_sha256")
+  group by hash (state/mod.rs:51-90)           one groupBy("pixel_sha256")
+                                                per run: each row's rep_id and
+                                                its group size (representatives)
 
 The `hashes` table (image_id, byte_len, byte_sha256, pixel_sha256) comes only
 from the feature table: payloads are read and decoded once, worker-side, and
@@ -41,36 +43,34 @@ def exact_groups(hashes: DataFrame) -> DataFrame:
     )
 
 
-def _group_roots(hashes: DataFrame) -> DataFrame:
-    """pixel_sha256 -> _root (the minimum member id).
+def representatives(hashes: DataFrame) -> DataFrame:
+    """hashes -> (image_id, rep_id, byte_len, exact_copies): collapse
+    exact-pixel-identical rows to one node before LSH banding (signatures of
+    identical pixels are identical, so the collapsed graph has the same
+    connected components). This is the first skew weapon: an exact
+    mega-group becomes ONE LSH node. rep_id is the group's minimum member id
+    and exact_copies its size, which the canonical election reads
+    (operators/election) instead of grouping by hash again.
 
     groupBy-agg, NOT a window: a window over pixel_sha256 full-sorts each
     group in ONE task, so a 10^6-replica mega-group serializes on a single
-    core. The aggregate runs combiner-style (map-side partial min) and
-    the join back is AQE-skew-splittable — the skew-immune shape
+    core. The aggregate runs combiner-style (map-side partial min and
+    count) and the join back is AQE-skew-splittable — the skew-immune shape
     connected_components already uses (its docstring says why)."""
-    return (
-        hashes.filter(F.col("pixel_sha256").isNotNull())
-        .groupBy("pixel_sha256")
-        .agg(F.min("image_id").alias("_root"))
+    hashed = hashes.filter(F.col("pixel_sha256").isNotNull())
+    groups = hashed.groupBy("pixel_sha256").agg(
+        F.min("image_id").alias("rep_id"),
+        F.count(F.lit(1)).alias("exact_copies"),
     )
-
-
-def representatives(hashes: DataFrame) -> DataFrame:
-    """image_id -> rep_id: collapse exact-pixel-identical rows to one node
-    before LSH banding (signatures of identical pixels are identical, so the
-    collapsed graph has the same connected components). This is the first
-    skew weapon: an exact mega-group becomes ONE LSH node."""
-    roots = _group_roots(hashes)
-    hashed = (
-        hashes.filter(F.col("pixel_sha256").isNotNull())
-        .join(roots, "pixel_sha256")
-        .select("image_id", F.col("_root").alias("rep_id"))
-    )
-    # pruned rows (null hash) are their own representative; keep them OUT of
-    # the join — otherwise every pruned row lands in one null-key partition
-    # (a self-inflicted skew hotspot at 10^12 rows)
+    # pruned rows (null hash) are their own representative with one copy;
+    # keep them OUT of the join — otherwise every pruned row lands in one
+    # null-key partition (a self-inflicted skew hotspot at 10^12 rows)
     pruned = hashes.filter(F.col("pixel_sha256").isNull()).select(
-        "image_id", F.col("image_id").alias("rep_id")
+        "image_id", F.col("image_id").alias("rep_id"), "byte_len",
+        F.lit(1).cast("long").alias("exact_copies"),
     )
-    return hashed.unionByName(pruned)
+    return (
+        hashed.join(groups, "pixel_sha256")
+        .select("image_id", "rep_id", "byte_len", "exact_copies")
+        .unionByName(pruned)
+    )

@@ -4,7 +4,8 @@ The staged dataflow (SURVEY.md §3.1 "Spark shape"):
 
     images
       ├─ exact:   feature-pass pixel SHA-256 → shape prune → hash groups
-      ├─ reps:    collapse exact-identical rows to one LSH node
+      ├─ reps:    collapse exact-identical rows to one LSH node; each row
+      │           carries its exact-group size
       ├─ sigs:    MinHash(caption) + SimHash/pHash(pixels) per rep
       ├─ bands:   LSH band explode → band_key
       ├─ pairs:   bucketed self-join (+ chain-links for hot buckets)
@@ -12,7 +13,7 @@ The staged dataflow (SURVEY.md §3.1 "Spark shape"):
       ├─ cc:      connected components (one union-find task when small,
       │           else large-star/small-star rounds)
       ├─ clusters: rep assignments expanded to all rows + singletons
-      ├─ canonical: senpai election per cluster (O6)
+      ├─ canonical: senpai election per cluster (O6) from clusters + reps
       └─ rollup/shadow: per-partition rollup + duplicated-partition shadows
 
 Every stage goes through the CheckpointManager: under a checkpoint root the
@@ -221,12 +222,13 @@ def run_pipeline(
     # pairs, verified_edges, clusters) are written instead, and the write is
     # their barrier. Eager anchors ONLY where concurrent AQE stage
     # materialization would otherwise race a lazy checkpoint
-    # (features/reps/pairs/verified_edges); single-ordered-consumer stages
-    # are lazy (hashes/clusters/canonical — the first consuming job caches
-    # the rows, but the lazy call still runs the shuffle stages beneath it:
-    # 2 jobs for hashes, 5 for clusters, 4 for canonical on the 600-row test
-    # fixture) or plain composition. Each eager checkpoint is ~1s of serial
-    # wall, so the policy trades the minimum barrier count that keeps
+    # (features/reps/pairs/verified_edges), or where the anchor's job
+    # observes a metric that would otherwise cost a count job of its own
+    # (hashes: n_pixel_hashed). Single-ordered-consumer stages are lazy
+    # (clusters, and canonical from clusters and reps — the first consuming
+    # job caches the rows, but the lazy call still runs the shuffle stages
+    # beneath it) or plain composition. Each eager checkpoint is ~1s of
+    # serial wall, so the policy trades the minimum barrier count that keeps
     # materialization race-free.
     feats = mgr.stage(
         "features", _features, manifest_extra=lambda: incr["manifest"],
@@ -245,7 +247,7 @@ def run_pipeline(
         )
     hashes = mgr.stage(
         "hashes", lambda: features_op.hashes_from_features(feats), ["features"],
-        barrier="lazy",
+        counters={"n_pixel_hashed": F.count("pixel_sha256")},
     )
     # exact_groups is a single-consumer output projection — no extra barrier
     # (each eager checkpoint is ~1s of serial wall regardless of cluster size;
@@ -366,17 +368,15 @@ def run_pipeline(
 
     def _cluster() -> DataFrame:
         near = edges.filter(F.col("passed")).select("id_l", "id_r")
+        # singletons: expand_representatives makes an unassigned rep its own root
         rep_assign = cc.connected_components(near, cfg.cc_max_iterations)
-        rep_assign = cc.attach_singletons(
-            rep_assign, reps.select(F.col("rep_id").alias("image_id")).distinct()
-        )
         return cc.expand_representatives(rep_assign, reps)
 
     clusters = mgr.stage("clusters", _cluster, ["verified_edges", "reps"],
                          barrier="lazy")
     canonical = mgr.stage(
-        "canonical", lambda: election.canonical_map(clusters, hashes),
-        ["clusters", "hashes"], barrier="lazy",
+        "canonical", lambda: election.canonical_map(clusters, reps),
+        ["clusters", "reps"], barrier="lazy",
     )
 
     roll = shadows = None
@@ -406,11 +406,10 @@ def run_pipeline(
         lineage = lineage.unionByName(plin)
 
     # metrics: stage-1 prune ratio (BASELINE.md qualitative metric) + stage rows.
-    # Counted over the hashes of the feature table (one row per input image) —
-    # re-scanning the input source for a count would be a second full-footer
-    # pass at 10^6-file scale. (n_images was observed with the feature stage —
-    # it also drives the adaptive band plan.)
-    n_hashed = hashes.filter(F.col("pixel_sha256").isNotNull()).count()
+    # Both counts are observed in the jobs that materialized their stages, so
+    # no count job runs here: n_images with the feature stage (it also drives
+    # the adaptive band plan), n_hashed with the hashes checkpoint.
+    n_hashed = mgr.record("hashes").counters["n_pixel_hashed"]
     metrics = {
         "n_images": n_images,
         "n_pixel_hashed": n_hashed,

@@ -289,9 +289,9 @@ class CheckpointManager:
                   every later consumer and the first consuming action caches
                   the rows, but under AQE the call itself runs every shuffle
                   stage beneath it, one job each (measured on the 600-row
-                  test fixture: 2 jobs at the call for `hashes`, the
-                  shape-count aggregate and its broadcast; 5 for `clusters`;
-                  4 for `canonical`). Cheaper than eager — no job for the
+                  test fixture at 4 cores: 6 jobs inside the `clusters` call,
+                  its connected-components jobs included, and 4 at the
+                  `canonical` call). Cheaper than eager — no job for the
                   final stage — but not free.
           False   plain plan composition (single-consumer projections whose
                   consumers shuffle on the same key — ReuseExchange dedups).

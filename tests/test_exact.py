@@ -65,3 +65,33 @@ def test_representatives_collapse_exact_groups(hashes, reps, images_df):
         .filter(F.col("n_reps") > 1)
     )
     assert multi.count() == 0
+
+
+def test_representatives_carry_group_size_and_byte_len(hashes, reps):
+    """exact_copies is the size of the row's pixel_sha256 group (1 for a
+    pruned row) and byte_len is the row's value in hashes."""
+    sizes = hashes.groupBy("pixel_sha256").agg(F.count(F.lit(1)).alias("_n"))
+    expected = hashes.join(sizes, "pixel_sha256", "left").select(
+        "image_id",
+        "byte_len",
+        F.when(F.col("pixel_sha256").isNull(), F.lit(1))
+        .otherwise(F.col("_n"))
+        .alias("exact_copies"),
+    )
+    got = {tuple(r) for r in reps.select("image_id", "byte_len", "exact_copies").collect()}
+    assert got == {tuple(r) for r in expected.collect()}
+    assert reps.filter(F.col("exact_copies") > 1).count() > 0
+
+
+def test_representatives_of_pruned_rows(spark):
+    """A pruned row (null pixel_sha256) is its own rep with one copy, and
+    an exact group's rows share the minimum member id and the group size
+    (the fixture has no pruned row, so these rows are built by hand)."""
+    hashes = spark.createDataFrame(
+        [("b", 20, b"s", b"p1"), ("a", 20, b"s", b"p1"), ("c", 30, b"t", b"p2"),
+         ("d", 40, b"u", None), ("e", 40, b"u", None)],
+        "image_id string, byte_len long, byte_sha256 binary, pixel_sha256 binary",
+    )
+    got = {tuple(r) for r in exact.representatives(hashes).collect()}
+    assert got == {("a", "a", 20, 2), ("b", "a", 20, 2), ("c", "c", 30, 1),
+                   ("d", "d", 40, 1), ("e", "e", 40, 1)}

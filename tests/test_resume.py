@@ -292,6 +292,10 @@ def _check_counters(result, n_images: int, persisted: bool) -> None:
     """Every observed counter of a run equals an explicit count()."""
     stages = result.metrics["stages"]
     assert result.metrics["n_images"] == n_images == stages["features"]["rows"]
+    assert stages["hashes"]["rows"] == n_images
+    assert result.metrics["n_pixel_hashed"] == result.hashes.filter(
+        "pixel_sha256 IS NOT NULL"
+    ).count()
     assert stages["pairs"]["rows"] == result.candidate_pairs.count()
     assert stages["verified_edges"]["rows"] == result.verified_edges.count()
     if persisted:
