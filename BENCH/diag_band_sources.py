@@ -17,7 +17,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
@@ -50,23 +50,19 @@ def main() -> None:
     out = {"n_images": n, "n_reps": n_reps, "phash_bands": phash_bands,
            "feature_sec": round(time.time() - t0, 1)}
 
+    families = lsh.band_keys(cfg, phash_bands)
     sources = {
-        "caption": (lsh._caption_band_keys(cfg), cfg.minhash_max_bucket),
-        f"phash_{phash_bands}band": (
-            lsh._hash64_band_keys("phash", phash_bands, "ph",
-                                  cfg.probe_bits), cfg.max_band_bucket),
-        "simhash": (lsh._hash64_band_keys("simhash", cfg.simhash_bands,
-                                          "sh", 0), cfg.max_band_bucket),
+        "caption": (families["caption"], cfg.minhash_max_bucket),
+        f"phash_{phash_bands}band": (families["phash"], cfg.max_band_bucket),
+        "simhash": (families["simhash"], cfg.max_band_bucket),
     }
     if phash_bands != 3:
         # the other plan step, same features pass — attribution between plans
-        sources["phash_3band"] = (
-            lsh._hash64_band_keys("phash", 3, "ph", cfg.probe_bits),
-            cfg.max_band_bucket)
+        sources["phash_3band"] = (lsh.band_keys(cfg, 3)["phash"], cfg.max_band_bucket)
     pixel_overcap = None
     for src, (keys, cap) in sources.items():
         t1 = time.time()
-        counts = (sig2.select(F.explode(F.array(*keys)).alias("k"))
+        counts = (sig2.selectExpr(f"explode(array({', '.join(keys)})) AS k")
                   .groupBy("k").agg(F.count(F.lit(1)).alias("n"))
                   .localCheckpoint(eager=True))
         row = counts.agg(
@@ -96,22 +92,14 @@ def main() -> None:
     # as candidate_pairs routes them) -> sub-band population
     t1 = time.time()
     pix_keys = sources[f"phash_{phash_bands}band"][0] + sources["simhash"][0]
-    pix = sig2.select("phash", "simhash",
-                      F.monotonically_increasing_id().alias("rid"),
-                      F.explode(F.array(*pix_keys)).alias("k"))
+    pix = sig2.selectExpr("phash", "simhash", "monotonically_increasing_id() AS rid",
+                          f"explode(array({', '.join(pix_keys)})) AS k")
     hotk = (pix.groupBy("k").agg(F.count(F.lit(1)).alias("n"))
             .filter(F.col("n") > cfg.max_band_bucket).select("k"))
     members = (pix.join(hotk, "k").select("rid", "phash", "simhash")
                .distinct().localCheckpoint(eager=True))
     n_members = members.count()
-    sub_keys = []
-    for s in range(4):
-        lo = F.shiftrightunsigned(F.col("phash"), s * 16 + 8).bitwiseAND(F.lit(0xFF))
-        hi = F.shiftrightunsigned(F.col("phash"), (s * 16 + 16) % 64).bitwiseAND(F.lit(0xFF))
-        val = F.shiftleft(hi, 8).bitwiseOR(lo)
-        for probe in [val] + [val.bitwiseXOR(F.lit(1 << b)) for b in range(16)]:
-            sub_keys.append(F.xxhash64(F.lit(f"sub:{s}"), probe))
-    subc = (members.select(F.explode(F.array(*sub_keys)).alias("k"))
+    subc = (members.selectExpr(f"explode(array({', '.join(lsh.SUB_KEYS)})) AS k")
             .groupBy("k").agg(F.count(F.lit(1)).alias("n")))
     srow = subc.agg(
         F.count(F.lit(1)).alias("buckets"),

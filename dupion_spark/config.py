@@ -32,12 +32,12 @@ class DedupConfig:
     simhash_grid: int = 16        # SimHash features = grid x grid block means
     simhash_bands: int = 4        # bands over the 64-bit simhash
     phash_bands: int = 4          # bands over the 64-bit phash
-    # multiprobe LSH: besides each exact band value, emit every value within
-    # `probe_bits` bit-flips. Symmetric 1-bit probing makes two band values
-    # collide iff they differ in <=2 bits; with 4 bands, pigeonhole then
-    # guarantees a collision for total hamming distance <= 11 — while keeping
-    # 16-bit band values (65536x more selective than 8-bit bands would be at
-    # the same guarantee). Costs 17x band rows for the pixel signatures.
+    # multiprobe LSH: any value >= 1 also emits every single-bit flip of each
+    # phash band value (one bit deep, whatever the value). Symmetric 1-bit
+    # probing makes two band values collide iff they differ in <=2 bits; with
+    # 4 bands, pigeonhole then guarantees a collision for total hamming
+    # distance <= 11 — while keeping 16-bit band values (65536x more selective
+    # than 8-bit bands would be at the same guarantee). Costs 17x phash rows.
     probe_bits: int = 1
     phash_dct_size: int = 32      # resize target before DCT
     phash_low_freq: int = 8       # keep top-left 8x8 DCT coefficients

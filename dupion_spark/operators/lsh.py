@@ -27,9 +27,10 @@ Skew strategy (the mega-cluster problem):
      broadcast the corpus-sized band table) and runs under AQE skew-join
      splitting (spark.sql.adaptive.skewJoin.enabled).
 
-One bucket-pair builder serves every level that buckets rows
-(rep_id, <key>, ...) — both levels of the pixel cascade here and the
-document MinHash path (queries._doc_pairs):
+One key builder, probe_keys, writes every band key as SQL text (band_keys,
+SUB_KEYS, queries._doc_bands). One bucket-pair builder serves every level
+that buckets rows (rep_id, <key>, ...) — both levels of the pixel cascade
+here and the document MinHash path (queries._doc_pairs):
   hot_keys     — the over-cap keys with their hub (exact, or sampled and
                  re-counted), the only keys that meet the rows again;
   bucket_pairs — the SHUFFLE_HASH all-pairs self-join inside each bucket;
@@ -62,53 +63,73 @@ CAPTION_BIT = 1 << 62
 SIMHASH_BIT = 1 << 61
 
 
-def _caption_band_keys(cfg: DedupConfig):
-    """One pre-combined 64-bit key per minhash band: xxhash64 over the band's
-    signature slots directly — no md5/concat/string round-trip."""
+def probe_keys(
+    tag: str, windows: list[str], probe_width: int = 0, salt: str = "",
+    keep: int = -1, mark: int = 0,
+) -> list[str]:
+    """The SQL text of one band-key family, in array order: window i gives
+    xxhash64('<tag>:<i>', <window><salt>) — one pre-combined 64-bit key, no
+    md5/concat/string round-trip — then the key of each single-bit flip of
+    the window's low probe_width bits; every key is AND-ed with `keep` and
+    OR-ed with `mark`, the source-marker bits candidate_pairs routes over-cap
+    buckets by. Windows, probes and masked keys are parenthesized: Spark SQL
+    binds & tighter than ^, and ^ tighter than |. As SQL text, a table
+    explodes its whole key array in one selectExpr instead of building a
+    Py4J Column tree per key.
+
+    Symmetric 1-bit probing makes two window values collide iff they differ
+    in <= 2 bits, so over n disjoint windows the pigeonhole guarantees a
+    shared key for total hamming <= n*2 + n - 1 (d <= 11 at 4 bands)."""
     keys = []
-    for band in range(cfg.minhash_bands):
-        elems = [
-            F.col("minhash").getItem(band * cfg.minhash_rows + r)
-            for r in range(cfg.minhash_rows)
-        ]
-        keys.append(
-            F.xxhash64(F.lit(f"mh:{band}"), *elems).bitwiseOR(F.lit(CAPTION_BIT))
-        )
+    for i, window in enumerate(windows):
+        for probe in [window] + [f"({window} ^ {1 << b})" for b in range(probe_width)]:
+            key = f"xxhash64('{tag}:{i}', {probe}{salt})"
+            if keep != -1:
+                key = f"({key} & {keep})"
+            keys.append(f"({key} | {mark})" if mark else key)
     return keys
 
 
-def _hash64_band_keys(col_name: str, n_bands: int, tag: str, probe_bits: int,
-                      mark_bit: int = 0):
-    """Pre-combined keys over a 64-bit signature, with multiprobe expansion:
-    besides the exact band value, emit every single-bit flip of it
-    (probe_bits=1). Symmetric probing makes band values collide iff they
-    differ in <=2 bits; pigeonhole over n_bands then guarantees a collision
-    for total hamming <= n_bands*2 + n_bands - 1 (d<=11 at 4 bands). All
-    JVM-side bit math. The image shape folds into the key: near-duplicate
+def band_keys(cfg: DedupConfig, phash_bands: int) -> dict[str, list[str]]:
+    """band_table's keys by source: caption (minhash bands, CAPTION_BIT),
+    phash (64 // phash_bands-bit slices, probed) and simhash (exact slices,
+    SIMHASH_BIT); the pixel keys clear both marker bits first.
+
+    Multiprobe applies to phash ONLY, and only one bit deep for any
+    cfg.probe_bits >= 1: phash is the primary pixel band source with the
+    guaranteed hamming<=11 catch. simhash (a diversity source with much
+    lower entropy on smooth imagery) gets exact bands — probing it
+    multiplied junk candidate pairs ~17x for negligible recall.
+
+    The image shape folds into the pixel keys (the w, h salt): near-duplicate
     pixels always share (w, h) — the PSNR verify returns -inf on a shape
     mismatch — so dense low-frequency buckets split by shape class for free,
-    with zero recall loss.
+    with zero recall loss."""
+    def slices(col: str, n_bands: int) -> list[str]:
+        width = 64 // n_bands
+        return [f"(shiftrightunsigned({col}, {b * width}) & {(1 << width) - 1})"
+                for b in range(n_bands)]
 
-    mark_bit: source-marker bit OR'd into the key after clearing both marker
-    bits (SIMHASH_BIT for simhash keys, 0 for phash) — candidate_pairs routes
-    over-cap buckets by source (sub-banding vs star links)."""
-    width = 64 // n_bands
-    mask = (1 << width) - 1
-    keys = []
-    for band in range(n_bands):
-        val = F.shiftrightunsigned(F.col(col_name), band * width).bitwiseAND(F.lit(mask))
-        probes = [val]
-        if probe_bits >= 1:
-            probes += [val.bitwiseXOR(F.lit(1 << bit)) for bit in range(width)]
-        for probe in probes:
-            key = (
-                F.xxhash64(F.lit(f"{tag}:{band}"), probe, F.col("w"), F.col("h"))
-                .bitwiseAND(F.lit(~(CAPTION_BIT | SIMHASH_BIT)))
-            )
-            if mark_bit:
-                key = key.bitwiseOR(F.lit(mark_bit))
-            keys.append(key)
-    return keys
+    rows = cfg.minhash_rows
+    pixel = {"salt": ", w, h", "keep": ~(CAPTION_BIT | SIMHASH_BIT)}
+    probe = 64 // phash_bands if cfg.probe_bits >= 1 else 0
+    return {
+        "caption": probe_keys("mh", [
+            ", ".join(f"minhash[{b * rows + r}]" for r in range(rows))
+            for b in range(cfg.minhash_bands)
+        ], mark=CAPTION_BIT),
+        "phash": probe_keys("ph", slices("phash", phash_bands), probe, **pixel),
+        "simhash": probe_keys("sh", slices("simhash", cfg.simhash_bands),
+                              mark=SIMHASH_BIT, **pixel),
+    }
+
+
+# the phash sub-band keys: window s is bits [16s+8, 16s+23] mod 64, probed
+# (see candidate_pairs)
+SUB_KEYS = probe_keys("sub", [
+    f"(shiftleft(shiftrightunsigned(phash, {(16 * s + 16) % 64}) & 255, 8)"
+    f" | (shiftrightunsigned(phash, {16 * s + 8}) & 255))" for s in range(4)
+], probe_width=16)
 
 
 def band_table(
@@ -136,25 +157,15 @@ def band_table(
     parallelism against a fixed heap), directly eroding scaling efficiency.
     The two 64-bit pixel signatures ride along (16 bytes/row) so
     candidate_pairs can hamming-prefilter INLINE at pair generation — no
-    join against a corpus-sized signature table afterwards.
-
-    Multiprobe expansion applies to phash ONLY: phash is the primary pixel
-    band source with the guaranteed hamming<=11 catch. simhash (a diversity
-    source with much lower entropy on smooth imagery) gets exact bands —
-    probing it multiplied junk candidate pairs ~17x for negligible recall."""
-    phash_bands = cfg.pixel_band_plan(n_reps)
-    all_keys = (
-        _caption_band_keys(cfg)
-        + _hash64_band_keys("phash", phash_bands, "ph", cfg.probe_bits)
-        + _hash64_band_keys("simhash", cfg.simhash_bands, "sh", 0,
-                            mark_bit=SIMHASH_BIT)
-    )
+    join against a corpus-sized signature table afterwards. The keys are
+    SQL text from band_keys, exploded by one selectExpr."""
+    keys = band_keys(cfg, cfg.pixel_band_plan(n_reps))
+    all_keys = keys["caption"] + keys["phash"] + keys["simhash"]
     # rows without pixel signatures (containers / corrupt payloads, F4) never
     # pass the pixel-authoritative verify — banding them is pure waste
-    signatures = signatures.filter(F.col("phash").isNotNull())
-    return signatures.select(
-        F.col("sid").alias("rep_id"), "phash", "simhash",
-        F.explode(F.array(*all_keys)).alias("band_key"),
+    return signatures.filter(F.col("phash").isNotNull()).selectExpr(
+        "sid AS rep_id", "phash", "simhash",
+        f"explode(array({', '.join(all_keys)})) AS band_key",
     )
 
 
@@ -502,18 +513,7 @@ def _pixel_overcap_branches(
     all-pairs, sub-star fallback. Split out of candidate_pairs so the whole
     cascade is built ONLY when the hot statistic says pixel over-cap buckets
     exist this run (see the branch-elision comment there)."""
-    sub_keys = []
-    for sub in range(4):
-        lo = F.shiftrightunsigned(F.col("phash"), sub * 16 + 8).bitwiseAND(
-            F.lit(0xFF)
-        )
-        hi = F.shiftrightunsigned(
-            F.col("phash"), (sub * 16 + 16) % 64
-        ).bitwiseAND(F.lit(0xFF))
-        val = F.shiftleft(hi, 8).bitwiseOR(lo)
-        for probe in [val] + [val.bitwiseXOR(F.lit(1 << bit)) for bit in range(16)]:
-            sub_keys.append(F.xxhash64(F.lit(f"sub:{sub}"), probe))
-    # checkpoint the DISTINCT MEMBER set (tiny), not the 72x-exploded sub
+    # checkpoint the DISTINCT MEMBER set (tiny), not the 68x-exploded sub
     # table — each consumer re-explodes from the cached members (parallel,
     # cheap) instead of reading a multi-hundred-MB checkpointed RDD
     members_all = (
@@ -560,9 +560,9 @@ def _pixel_overcap_branches(
             F.lit("sig_twin").alias("band_src"),
         )
     )
-    sub = members.select(
+    sub = members.selectExpr(
         "rep_id", "phash", "simhash",
-        F.explode(F.array(*sub_keys)).alias("sub_key"),
+        f"explode(array({', '.join(SUB_KEYS)})) AS sub_key",
     )
     # same hot-key structure as the top level, but with the LARGER
     # sub_allpairs_max window: sub-buckets within it run direct all-pairs

@@ -64,9 +64,9 @@ def gather_payloads(
     writes bytes with use_dictionary off, as production blob writers do).
 
     gather_metrics: optional dict that receives Spark accumulators
-    {bytes_read, bytes_total, pages_read, pages_total, fallback_rgs};
-    *_total = what whole-chunk reads would decompress, *_read = what the
-    selective path actually decompressed. Valid after the gather runs."""
+    {bytes_read, bytes_total, pages_read, pages_total, fallback_rgs,
+    fallback_dense}; *_total = what whole-chunk reads would decompress,
+    *_read = what the selective path decompressed. Valid after the gather."""
     ids = pairs.select(F.col("id_l").alias("image_id")).unionByName(
         pairs.select(F.col("id_r").alias("image_id"))
     ).distinct()

@@ -624,13 +624,10 @@ def _doc_bands(sig: DataFrame, n_docs: int | None) -> DataFrame:
     """(rep_id, key) band rows: one xxhash64 key per band of the adaptive
     plan, rep_id carrying the doc_id (the bucket-pair builder's id column)."""
     bands_n, rows_n = _doc_band_plan(n_docs)
-    keys = []
-    for band in range(bands_n):
-        cols = [F.col(f"h{band * rows_n + r}") for r in range(rows_n)]
-        keys.append(F.xxhash64(F.lit(f"docband:{band}"), *cols))
-    return sig.select(
-        F.col("doc_id").alias("rep_id"), F.explode(F.array(*keys)).alias("key")
-    )
+    keys = lsh.probe_keys("docband", [
+        ", ".join(f"h{b * rows_n + r}" for r in range(rows_n)) for b in range(bands_n)
+    ])
+    return sig.selectExpr("doc_id AS rep_id", f"explode(array({', '.join(keys)})) AS key")
 
 
 def _doc_pairs(sig: DataFrame, n_docs: int | None = None) -> DataFrame:

@@ -1,18 +1,42 @@
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from dupion_spark.functions import codec
 from dupion_spark.operators import exact
 from dupion_spark.operators import features as features_op
+from dupion_spark.pipeline import run_pipeline
+
+# rows whose shapes no fixture row has (the fixture's are 64x64, 32x32,
+# 16x16 and two 1x1): they decode and get signatures, but a unique shape
+# prunes their pixel hash
+PRUNED = {"zpruned_7x5": (5, 7), "zpruned_3x9": (9, 3)}
 
 
 @pytest.fixture(scope="module")
-def hashes(spark, images_df, cfg, tmp_path_factory):
-    """The pipeline's hashes stage: features of the fixture rows staged to
-    parquet, then the shape-pruned hash projection."""
+def images(spark, images_df):
+    """The fixture rows plus the PRUNED rows."""
+    rng = np.random.default_rng(3)
+    extra = [
+        (image_id, codec.encode_png(rng.integers(0, 256, (h, w, 3), dtype=np.uint8)),
+         w, h, "png", f"a lone {w}x{h} image", None)
+        for image_id, (h, w) in PRUNED.items()
+    ]
+    return images_df.unionByName(spark.createDataFrame(extra, images_df.schema)).cache()
+
+
+@pytest.fixture(scope="module")
+def features(spark, images, cfg, tmp_path_factory):
+    """The feature table of the input rows staged to parquet."""
     src = str(tmp_path_factory.mktemp("exact_src") / "images")
-    images_df.select("image_id", "bytes", "caption").write.parquet(src)
-    feats = features_op.extract_features_from_files(spark, src, cfg)
-    return features_op.hashes_from_features(feats).cache()
+    images.select("image_id", "bytes", "caption").write.parquet(src)
+    return features_op.extract_features_from_files(spark, src, cfg).cache()
+
+
+@pytest.fixture(scope="module")
+def hashes(features):
+    """The pipeline's hashes stage: the shape-pruned hash projection."""
+    return features_op.hashes_from_features(features).cache()
 
 
 @pytest.fixture(scope="module")
@@ -20,19 +44,40 @@ def reps(hashes):
     return exact.representatives(hashes).cache()
 
 
-def test_hash_table_covers_all_rows(hashes, images_df):
-    assert hashes.count() == images_df.count()
-    assert hashes.select("image_id").distinct().count() == images_df.count()
+def test_hash_table_covers_all_rows(hashes, images):
+    assert hashes.count() == images.count()
+    assert hashes.select("image_id").distinct().count() == images.count()
 
 
-def test_pruned_rows_cannot_be_exact_dups(hashes, images_df):
+def test_pruned_rows_cannot_be_exact_dups(features, hashes, images):
     """Shape-pruned rows (null pixel hash) must have a unique (w,h) — the
     prune is a NECESSARY condition, so no exact duplicate may be pruned."""
+    decoded = features.filter(F.col("image_id").isin(*PRUNED)).collect()
+    assert {(r["image_id"], r["h"], r["w"]) for r in decoded if r["phash"] is not None} == {
+        (i, h, w) for i, (h, w) in PRUNED.items()
+    }
     pruned = hashes.filter(F.col("pixel_sha256").isNull())
-    joined = pruned.join(images_df.select("image_id", "w", "h"), "image_id")
-    shape_counts = images_df.groupBy("w", "h").count().filter("count > 1")
+    assert {r["image_id"] for r in pruned.collect()} == set(PRUNED)
+    joined = pruned.join(images.select("image_id", "w", "h"), "image_id")
+    shape_counts = images.groupBy("w", "h").count().filter("count > 1")
     bad = joined.join(shape_counts.select("w", "h"), ["w", "h"], "left_semi")
     assert bad.count() == 0
+
+
+def test_pruned_rows_through_pipeline(spark, images, cfg):
+    """A pruned row goes through reps, clusters and the election as its own
+    single-member cluster and canonical row."""
+    result = run_pipeline(spark, images, cfg)
+    assert result.metrics["n_pixel_hashed"] == images.count() - len(PRUNED)
+    roots = {
+        r["image_id"]: r["cluster_root"]
+        for r in result.clusters.filter(F.col("image_id").isin(*PRUNED)).collect()
+    }
+    assert roots == {i: i for i in PRUNED}
+    canon = result.canonical.filter(F.col("cluster_root").isin(*PRUNED)).collect()
+    assert {(r["cluster_root"], r["canonical_image_id"], r["n_members"]) for r in canon} == {
+        (i, i, 1) for i in PRUNED
+    }
 
 
 def test_exact_groups_match_golden_byte_dups(hashes, fixture_small):
@@ -55,8 +100,8 @@ def test_exact_groups_cover_planted_exact_kind(hashes, fixture_small):
     assert exact_ids <= grouped_ids
 
 
-def test_representatives_collapse_exact_groups(hashes, reps, images_df):
-    assert reps.count() == images_df.count()
+def test_representatives_collapse_exact_groups(hashes, reps, images):
+    assert reps.count() == images.count()
     joined = reps.join(hashes.select("image_id", "pixel_sha256"), "image_id")
     multi = (
         joined.filter(F.col("pixel_sha256").isNotNull())
@@ -85,8 +130,7 @@ def test_representatives_carry_group_size_and_byte_len(hashes, reps):
 
 def test_representatives_of_pruned_rows(spark):
     """A pruned row (null pixel_sha256) is its own rep with one copy, and
-    an exact group's rows share the minimum member id and the group size
-    (the fixture has no pruned row, so these rows are built by hand)."""
+    an exact group's rows share the minimum member id and the group size."""
     hashes = spark.createDataFrame(
         [("b", 20, b"s", b"p1"), ("a", 20, b"s", b"p1"), ("c", 30, b"t", b"p2"),
          ("d", 40, b"u", None), ("e", 40, b"u", None)],

@@ -15,10 +15,14 @@ proves the corpus-ADAPTIVE band plans' hamming guarantees (4/3/2 bands ->
 
 from __future__ import annotations
 
+from collections import Counter
+
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dupion_spark import queries as Q
 from dupion_spark.config import DedupConfig
 from dupion_spark.operators import lsh
 
@@ -169,7 +173,8 @@ def _sub_buckets(ph: int) -> set:
 
 def _plan_buckets(ph: int, n_bands: int) -> set:
     """Top-level probe-bucket set under the ADAPTIVE plan's n_bands
-    (width = 64 // n_bands, 1-bit probes) — mirrors _hash64_band_keys."""
+    (width = 64 // n_bands, 1-bit probes) — mirrors lsh.band_keys' phash
+    family."""
     width = 64 // n_bands
     mask = (1 << width) - 1
     out = set()
@@ -543,8 +548,6 @@ def test_bucket_pairs_plans_shuffled_hash_join(spark):
     executed (final, post-AQE) plan for both the image band table and the
     document band table: a broadcast would build the whole corpus-sized
     band table on the driver (see lsh.bucket_pairs)."""
-    from dupion_spark import queries as Q
-
     docs = spark.createDataFrame(
         [(f"d{i:02d}", f"document {i % 5} about meadows and kestrels") for i in range(20)],
         "doc_id string, text string",
@@ -559,3 +562,143 @@ def test_bucket_pairs_plans_shuffled_hash_join(spark):
         plan = pairs._jdf.queryExecution().executedPlan().toString()
         assert "ShuffledHashJoin" in plan, f"{name}: {plan}"
         assert "BroadcastHashJoin" not in plan, f"{name}: {plan}"
+
+
+# --- key identity: the SQL-text builder against the Column builders it
+# replaced, kept here verbatim as the reference -----------------------------
+CAPTION_BIT, SIMHASH_BIT = lsh.CAPTION_BIT, lsh.SIMHASH_BIT
+
+
+def _caption_band_keys(cfg: DedupConfig):
+    """One pre-combined 64-bit key per minhash band: xxhash64 over the band's
+    signature slots directly — no md5/concat/string round-trip."""
+    keys = []
+    for band in range(cfg.minhash_bands):
+        elems = [
+            F.col("minhash").getItem(band * cfg.minhash_rows + r)
+            for r in range(cfg.minhash_rows)
+        ]
+        keys.append(
+            F.xxhash64(F.lit(f"mh:{band}"), *elems).bitwiseOR(F.lit(CAPTION_BIT))
+        )
+    return keys
+
+
+def _hash64_band_keys(col_name: str, n_bands: int, tag: str, probe_bits: int,
+                      mark_bit: int = 0):
+    width = 64 // n_bands
+    mask = (1 << width) - 1
+    keys = []
+    for band in range(n_bands):
+        val = F.shiftrightunsigned(F.col(col_name), band * width).bitwiseAND(F.lit(mask))
+        probes = [val]
+        if probe_bits >= 1:
+            probes += [val.bitwiseXOR(F.lit(1 << bit)) for bit in range(width)]
+        for probe in probes:
+            key = (
+                F.xxhash64(F.lit(f"{tag}:{band}"), probe, F.col("w"), F.col("h"))
+                .bitwiseAND(F.lit(~(CAPTION_BIT | SIMHASH_BIT)))
+            )
+            if mark_bit:
+                key = key.bitwiseOR(F.lit(mark_bit))
+            keys.append(key)
+    return keys
+
+
+def _sub_band_keys():
+    sub_keys = []
+    for sub in range(4):
+        lo = F.shiftrightunsigned(F.col("phash"), sub * 16 + 8).bitwiseAND(
+            F.lit(0xFF)
+        )
+        hi = F.shiftrightunsigned(
+            F.col("phash"), (sub * 16 + 16) % 64
+        ).bitwiseAND(F.lit(0xFF))
+        val = F.shiftleft(hi, 8).bitwiseOR(lo)
+        for probe in [val] + [val.bitwiseXOR(F.lit(1 << bit)) for bit in range(16)]:
+            sub_keys.append(F.xxhash64(F.lit(f"sub:{sub}"), probe))
+    return sub_keys
+
+
+def _doc_band_keys(bands_n: int, rows_n: int):
+    keys = []
+    for band in range(bands_n):
+        cols = [F.col(f"h{band * rows_n + r}") for r in range(rows_n)]
+        keys.append(F.xxhash64(F.lit(f"docband:{band}"), *cols))
+    return keys
+
+
+def _i64(rng, size=None):
+    return rng.integers(-(1 << 63), (1 << 63) - 1, size=size, dtype=np.int64,
+                        endpoint=True)
+
+
+@pytest.fixture(scope="module")
+def random_sigs(spark):
+    """300 random signatures: signed 64-bit phash/simhash/minhash (about half
+    negative, plus the extremes), random shapes, and a few null-phash rows."""
+    rng = np.random.default_rng(20)
+    extremes = [-1, -(1 << 63), (1 << 63) - 1, 0]
+    rows = []
+    for i in range(300):
+        ph = extremes[i] if i < len(extremes) else int(_i64(rng))
+        rows.append((
+            f"r{i:04d}", int(rng.integers(1, 9)), int(rng.integers(1, 9)),
+            [int(v) for v in _i64(rng, 64)], int(_i64(rng)),
+            None if i % 97 == 50 else ph,
+        ))
+    return _sigs(spark, rows).cache()
+
+
+def _multiset(df, key: str) -> Counter:
+    return Counter(tuple(r) for r in df.select("rep_id", key).collect())
+
+
+def _exploded(df, keys, key: str):
+    return df.select("rep_id", F.explode(F.array(*keys)).alias(key))
+
+
+@pytest.mark.parametrize("probe_bits", [0, 1])
+@pytest.mark.parametrize("n_reps,plan", [(None, 4), (500_000, 3), (30_000_000, 2)])
+def test_band_table_keys_match_column_reference(random_sigs, n_reps, plan, probe_bits):
+    cfg = DedupConfig(probe_bits=probe_bits)
+    assert cfg.pixel_band_plan(n_reps) == plan
+    reference = (
+        _caption_band_keys(cfg)
+        + _hash64_band_keys("phash", plan, "ph", cfg.probe_bits)
+        + _hash64_band_keys("simhash", cfg.simhash_bands, "sh", 0,
+                            mark_bit=SIMHASH_BIT)
+    )
+    sids = random_sigs.filter(F.col("phash").isNotNull()).withColumn("rep_id", F.col("sid"))
+    want = _multiset(_exploded(sids, reference, "band_key"), "band_key")
+    assert sum(want.values()) == sids.count() * len(reference)
+    assert _multiset(lsh.band_table(random_sigs, cfg, n_reps), "band_key") == want
+
+
+def test_negative_probe_bits_do_not_probe():
+    assert lsh.band_keys(DedupConfig(probe_bits=-1), 4) == lsh.band_keys(
+        DedupConfig(probe_bits=0), 4)
+
+
+def test_sub_keys_match_column_reference(random_sigs):
+    members = random_sigs.filter(F.col("phash").isNotNull())
+    got = members.selectExpr(
+        "rep_id", f"explode(array({', '.join(lsh.SUB_KEYS)})) AS sub_key")
+    assert len(lsh.SUB_KEYS) == 68
+    assert _multiset(got, "sub_key") == _multiset(
+        _exploded(members, _sub_band_keys(), "sub_key"), "sub_key")
+
+
+@pytest.mark.parametrize("n_docs,plan", [(None, (4, 4)), (20_000_000, (2, 8))])
+def test_doc_band_keys_match_column_reference(spark, n_docs, plan):
+    assert Q._doc_band_plan(n_docs) == plan
+    rng = np.random.default_rng(21)
+    sig = spark.createDataFrame(
+        [(f"d{i:04d}", *(int(v) for v in _i64(rng, 16))) for i in range(300)],
+        "doc_id string, " + ", ".join(f"h{i} long" for i in range(16)),
+    )
+    want = _multiset(
+        _exploded(sig.withColumnRenamed("doc_id", "rep_id"), _doc_band_keys(*plan), "key"),
+        "key",
+    )
+    assert _multiset(Q._doc_bands(sig, n_docs), "key") == want
