@@ -33,6 +33,7 @@ from pyspark.sql import types as T
 
 from dupion_spark.config import DedupConfig
 from dupion_spark.functions import codec, signatures
+from dupion_spark.sources.checkpoint import counted_checkpoint
 
 FEATURE_SCHEMA = T.StructType(
     [
@@ -164,12 +165,13 @@ def extract_features_from_files(
                 }
             )
 
-    # the split list STAYS distributed (explode, no collect): only a scalar
-    # count comes back to size the round-robin fan-out — at 10^6 files a
-    # driver-side split list would serialize planning on one node
+    # the split list STAYS distributed (explode, no collect): only its row
+    # count, observed in the job that checkpoints it, comes back to size the
+    # round-robin fan-out — at 10^6 files a driver-side split list would
+    # serialize planning on one node
     from pyspark.sql import functions as F
 
-    splits = (
+    splits, n = counted_checkpoint(
         files_df.mapInPandas(footer, "file string, file_idx int, n_rg int")
         .filter(F.col("n_rg") > 0)
         .select(
@@ -177,10 +179,8 @@ def extract_features_from_files(
             "file_idx",
             F.explode(F.sequence(F.lit(0), F.col("n_rg") - 1)).alias("row_group"),
         )
-        .localCheckpoint(eager=False)
     )
-    n_splits = splits.count()
-    split_df = splits.repartition(min(n_splits, 4096))
+    split_df = splits.repartition(min(n["rows"], 4096))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

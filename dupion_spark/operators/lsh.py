@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dupion_spark.config import DedupConfig
+from dupion_spark.sources.checkpoint import counted_checkpoint
 
 
 # bit 62 of every band key marks a CAPTION (minhash) bucket: it lets one
@@ -377,7 +378,8 @@ def candidate_pairs(
     is_star_key, is_phash_key = key_class != 0, key_class == 0
 
     # MATERIALIZATION DISCIPLINE: every multiply-referenced intermediate is
-    # lazily localCheckpointed — DataFrame reuse is NOT compute reuse (each
+    # checkpointed, lazily unless the driver reads its count (`hot`:
+    # counted_checkpoint) — DataFrame reuse is NOT compute reuse (each
     # reference inlines the whole subtree; an early version of this plan
     # executed the 26M-row band explode EIGHT times). Measured both ways at
     # 300k: checkpointing the band table costs ~7s of single-disk write but
@@ -403,31 +405,28 @@ def candidate_pairs(
         # exact detection at small scale: bitwise-stable bucket routing is
         # what the sf0.001/sf0.01 golden oracles value-check against
         hot = hot_keys(bands, "band_key", cap, carry)
-    hot = hot.localCheckpoint(eager=False)  # consumers: small anti-join + big join
-
     # ADAPTIVE BRANCH ELISION on the materialized hot statistic: which of the
-    # over-cap classes actually occur this run. `hot` is tiny (hot keys
-    # only) and already checkpointed, so this is one sub-second driver-side
-    # aggregation — the AQE idiom (plan from runtime stats) applied at the
-    # orchestration level. Without it, every run pays shuffle-stage
-    # round-trips for all four fallback branches (caption/simhash stars, twin
-    # collapse, sub-banding + sub-stars, each behind its own localCheckpoint
-    # materialization) even when the over-cap population is EMPTY — measured
-    # ~3s of the 6.3s pairs wall at sf0.1 (6k images, zero hot buckets),
-    # pure fixed overhead the scaling gate's small legs also pay. Output is
-    # identical: an elided branch contributes zero rows by construction.
-    hot_classes = hot.agg(
-        F.count(F.lit(1)).alias("n_hot"),
-        F.count(F.when(is_star_key, 1)).alias("n_star"),
-        F.count(F.when(is_phash_key, 1)).alias("n_pix"),
-    ).collect()[0]
+    # over-cap classes actually occur this run, observed in the job that
+    # checkpoints `hot` (consumers: small anti-join + big join) — the AQE
+    # idiom (plan from runtime stats) applied at the orchestration level.
+    # Without it, every run pays shuffle-stage round-trips for all four
+    # fallback branches (caption/simhash stars, twin collapse, sub-banding +
+    # sub-stars, each behind its own localCheckpoint materialization) even
+    # when the over-cap population is EMPTY — measured ~3s of the 6.3s pairs
+    # wall at sf0.1 (6k images, zero hot buckets), pure fixed overhead the
+    # scaling gate's small legs also pay. Output is identical: an elided
+    # branch contributes zero rows by construction.
+    hot, hot_classes = counted_checkpoint(hot, {
+        "n_star": F.count_if(is_star_key), "n_pix": F.count_if(is_phash_key),
+    })
+    n_hot = hot_classes["rows"]
     # the elision is sound only while the classes partition the hot keys: a
     # key in none of them (a new key class, a null band_key) would otherwise
     # skip every over-cap branch and flow into the all-pairs join
     n_classed = hot_classes["n_star"] + hot_classes["n_pix"]
-    if n_classed != hot_classes["n_hot"]:
+    if n_classed != n_hot:
         raise AssertionError(
-            f"{hot_classes['n_hot']} over-cap band keys but {n_classed} "
+            f"{n_hot} over-cap band keys but {n_classed} "
             "fall in a known key class (caption/simhash/phash)"
         )
 
@@ -436,7 +435,7 @@ def candidate_pairs(
     # the identity, so output is unchanged and the zero-hot case (every
     # bench SF) skips a full pass + broadcast over the band table.
     small = (
-        bands if not hot_classes["n_hot"]
+        bands if not n_hot
         else bands.join(hot.select("band_key"), "band_key", "left_anti")
     )
     branches = [bucket_pairs(
@@ -545,10 +544,6 @@ def _pixel_overcap_branches(
         .agg(F.min("rep_id").alias("_dg"), F.count(F.lit(1)).alias("_dn"))
         .localCheckpoint(eager=False)  # consumers: delegates + twin stars
     )
-    members = (
-        sig_groups.select(F.col("_dg").alias("rep_id"), "phash", "simhash")
-        .localCheckpoint(eager=False)  # consumers: sub_hot, anti, star join
-    )
     twins = (
         members_all.join(
             sig_groups.filter(F.col("_dn") > 1), ["phash", "simhash"]
@@ -560,6 +555,8 @@ def _pixel_overcap_branches(
             F.lit("sig_twin").alias("band_src"),
         )
     )
+    # one delegate per signature: a projection, read from sig_groups' checkpoint
+    members = sig_groups.select(F.col("_dg").alias("rep_id"), "phash", "simhash")
     sub = members.selectExpr(
         "rep_id", "phash", "simhash",
         f"explode(array({', '.join(SUB_KEYS)})) AS sub_key",
@@ -570,7 +567,7 @@ def _pixel_overcap_branches(
     # mega-crowd sub-buckets rejoin the sub table for star links
     sub_hot = hot_keys(
         sub, "sub_key", cfg.sub_allpairs_max, ("phash", "simhash")
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)  # consumers: sub anti-join, star join
     # sub-buckets beyond the sub_allpairs_max window fall back to hub stars:
     # >4096 members agreeing on 16 phash bits within 1 flip are adversarial
     # near-identical mega-crowds where star edges overwhelmingly pass verify

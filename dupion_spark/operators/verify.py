@@ -161,7 +161,7 @@ def verified_edges_from_files(
     payload joins read it."""
     payload = gather_payloads(pairs, features, gather_metrics).localCheckpoint(
         eager=False
-    )
+    )  # consumers: the id_l and id_r payload joins
     return verified_edges(pairs, payload, cfg)
 
 

@@ -34,7 +34,7 @@ import tempfile
 from dataclasses import dataclass
 from hashlib import sha256
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dupion_spark.config import DedupConfig
@@ -43,6 +43,7 @@ from dupion_spark.operators import election, exact, lsh, rollup, verify
 from dupion_spark.operators import features as features_op
 from dupion_spark.sources.checkpoint import (
     CheckpointManager,
+    counted_checkpoint,
     file_fingerprints,
     fingerprint_files,
     partition_lineage,
@@ -71,9 +72,10 @@ def _stage_input(
     and return the directory, so it runs the file-backed path.
 
     Under a checkpoint root the copy lives at <root>/input@<fp16>, where
-    fp16 names the content: one JVM-side pass of count plus an
-    order-insensitive xor of xxhash64(image_id, bytes, caption), so a
-    payload edit under an unchanged id and length still renames it. A
+    fp16 names the content: one JVM-side pass of count, xor and decimal sum
+    (no overflow under ANSI) of xxhash64(image_id, bytes, caption), so a
+    payload edit under an unchanged id and length still renames it, and so
+    does a change of which row is present twice (it cancels out of a xor). A
     complete copy with the same name is reused as is; its files keep their
     (size, mtime_ns), so a rerun over the same rows resumes every stage.
     Copies of other content are removed. Without a root the copy goes to a
@@ -85,13 +87,13 @@ def _stage_input(
     operators/verify.gather_payloads), in defaultParallelism files so the
     feature stage keeps one task per row group."""
     if checkpoint_dir:
+        row_hash = F.xxhash64("image_id", "bytes", "caption")
         row = images.agg(
             F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.bit_xor(F.xxhash64("image_id", "bytes", "caption")), F.lit(0)
-            ).alias("h"),
+            F.coalesce(F.bit_xor(row_hash), F.lit(0)).alias("h"),
+            F.sum(row_hash.cast("decimal(38,0)")).alias("s"),
         ).collect()[0]
-        fp16 = sha256(f"{row['n']}:{row['h']}".encode()).hexdigest()[:16]
+        fp16 = sha256(str(tuple(row)).encode()).hexdigest()[:16]
         out = os.path.join(checkpoint_dir, f"input@{fp16}")
         for stale in glob.glob(os.path.join(checkpoint_dir, "input@*")):
             if stale != out:
@@ -220,16 +222,15 @@ def run_pipeline(
     # Barrier policy (see CheckpointManager.stage), the same with or without
     # a checkpoint root; under a root the four persisted stages (features,
     # pairs, verified_edges, clusters) are written instead, and the write is
-    # their barrier. Eager anchors ONLY where concurrent AQE stage
+    # their barrier. A barrier is a counted checkpoint, one eager job that
+    # observes the stage's rows and counters: where concurrent AQE stage
     # materialization would otherwise race a lazy checkpoint
-    # (features/reps/pairs/verified_edges), or where the anchor's job
-    # observes a metric that would otherwise cost a count job of its own
-    # (hashes: n_pixel_hashed). Single-ordered-consumer stages are lazy
-    # (clusters, and canonical from clusters and reps — the first consuming
-    # job caches the rows, but the lazy call still runs the shuffle stages
-    # beneath it) or plain composition. Each eager checkpoint is ~1s of
-    # serial wall, so the policy trades the minimum barrier count that keeps
-    # materialization race-free.
+    # (features/reps/pairs/verified_edges), where the job observes a metric
+    # that would otherwise cost a count job (hashes: n_pixel_hashed), and at
+    # clusters (several readers). The other stages are plain composition
+    # whose jobs run at their first read (exact_groups, signatures, bands,
+    # canonical). Each eager checkpoint is ~1s of serial
+    # wall, so the policy keeps the fewest barriers that stay race-free.
     feats = mgr.stage(
         "features", _features, manifest_extra=lambda: incr["manifest"],
         counters={"rows_reused": F.count_if(F.col("sid") < F.lit(fresh_sid))},
@@ -329,19 +330,16 @@ def run_pipeline(
                             F.lit(True).alias("_hit"))
                 )
                 hit = F.col("_hit").isNotNull()
-                obs = Observation()
-                joined = (
-                    pairs.join(valid, ["id_l", "id_r"], "left")
-                    .observe(obs, F.count_if(hit).alias("reused"),
-                             F.count_if(~hit).alias("verified"))
-                    .localCheckpoint(eager=True)
+                joined, split = counted_checkpoint(
+                    pairs.join(valid, ["id_l", "id_r"], "left"),
+                    {"reused": F.count_if(hit)},
                 )
-                split = obs.get
                 mgr.extra_lineage.append(
                     ("verified_edges", "pairs_reused", split["reused"])
                 )
                 mgr.extra_lineage.append(
-                    ("verified_edges", "pairs_verified", split["verified"])
+                    ("verified_edges", "pairs_verified",
+                     split["rows"] - split["reused"])
                 )
                 cached = joined.filter(hit).select(
                     "id_l", "id_r", "band_src", "psnr", "lcs_len", "passed"
@@ -372,11 +370,10 @@ def run_pipeline(
         rep_assign = cc.connected_components(near, cfg.cc_max_iterations)
         return cc.expand_representatives(rep_assign, reps)
 
-    clusters = mgr.stage("clusters", _cluster, ["verified_edges", "reps"],
-                         barrier="lazy")
+    clusters = mgr.stage("clusters", _cluster, ["verified_edges", "reps"])
     canonical = mgr.stage(
         "canonical", lambda: election.canonical_map(clusters, reps),
-        ["clusters", "reps"], barrier="lazy",
+        ["clusters", "reps"], barrier=False,
     )
 
     roll = shadows = None

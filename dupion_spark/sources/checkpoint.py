@@ -20,7 +20,7 @@ equivalent is per-stage snapshot tables:
   parents at its barrier level, under a root exactly as without one, and
   counts as resumed when all its parents resumed.
 - row counts and counters come from the job that writes the stage (or runs
-  its eager checkpoint), via DataFrame.observe, not from a count job after.
+  its counted_checkpoint), via DataFrame.observe, not from a count job after.
 - a `lineage` table (stage, part_key, rows_out, wall_ms, resumed,
   manifest_hash) and a `metrics` table accumulate per run (north_rule:
   per-partition lineage + metrics tables).
@@ -267,7 +267,7 @@ class CheckpointManager:
         name: str,
         build: Callable[[], DataFrame],
         parents: list[str] | None = None,
-        barrier: bool | str = True,
+        barrier: bool = True,
         manifest_extra: Callable[[], dict] | None = None,
         counters: dict | None = None,
     ) -> DataFrame:
@@ -279,32 +279,26 @@ class CheckpointManager:
         still registers its manifest hash in the chain, and it counts as
         resumed exactly when all its parents resumed.
 
-        barrier — three levels, because every EAGER localCheckpoint is a job
+        barrier — two levels, because every eager localCheckpoint is a job
         BARRIER (~1s of parallelism-independent wall each) and a pipeline of
         a dozen stages pays that serially regardless of cluster size:
-          True    eager localCheckpoint: its own job, plan truncated NOW.
-                  Only for anchor stages whose downstream plan would otherwise
-                  grow past what AQE re-plans cheaply.
-          "lazy"  localCheckpoint(eager=False): the plan is truncated for
-                  every later consumer and the first consuming action caches
-                  the rows, but under AQE the call itself runs every shuffle
-                  stage beneath it, one job each (measured on the 600-row
-                  test fixture at 4 cores: 6 jobs inside the `clusters` call,
-                  its connected-components jobs included, and 4 at the
-                  `canonical` call). Cheaper than eager — no job for the
-                  final stage — but not free.
-          False   plain plan composition (single-consumer projections whose
-                  consumers shuffle on the same key — ReuseExchange dedups).
+          True    counted_checkpoint: an eager localCheckpoint, its own job,
+                  plan truncated NOW, rows and counters observed in that job.
+                  For stages with several consumers, or whose count is
+                  wanted.
+          False   plain plan composition: the stage's jobs run at its first
+                  read (single-consumer projections whose consumers shuffle
+                  on the same key — ReuseExchange dedups). Not observed: the
+                  row count is -1.
         A persisted stage's write is its barrier.
 
         counters: {name: aggregate Column} over the stage output, for a
         persisted or barrier=True stage. They and the row count are taken
         with DataFrame.observe in the job that writes the stage or runs its
-        eager localCheckpoint, and a persisted stage keeps them in its
+        counted checkpoint, and a persisted stage keeps them in its
         manifest, so a resumed stage reports them with no job. A manifest
         without counters and the Iceberg backend take one aggregate job
-        instead. Lazy and plain stages are not observed: their row
-        count is -1."""
+        instead."""
         parents = parents or []
         counters = counters or {}
         start = time.time()
@@ -322,16 +316,11 @@ class CheckpointManager:
         # barrier path: the same with or without a root. Eager anchors exist
         # because feeding the WHOLE multi-stage pipeline to AQE as one giant
         # tree makes it re-plan the full tree after every shuffle (measured
-        # 109s vs 35s for the same work stage-by-stage at sf0.1) — but most
-        # stages only need the lazy flavor.
+        # 109s vs 35s for the same work stage-by-stage at sf0.1).
         df = build()
         values = {"rows": -1}
-        if barrier is True:
-            obs = Observation()
-            df = _observed(df, obs, counters).localCheckpoint(eager=True)
-            values = obs.get
-        elif barrier == "lazy":
-            df = df.localCheckpoint(eager=False)
+        if barrier:
+            df, values = counted_checkpoint(df, counters)
         resumed = bool(parents) and all(self._resumed.get(p) for p in parents)
         self._record(name, values, start, resumed, expected_hash)
         return df
@@ -437,6 +426,18 @@ def _observed(df: DataFrame, obs: Observation, counters: dict) -> DataFrame:
     """df with its row count and counters attached to `obs`; they are filled
     by the first job that runs df whole (a write or an eager checkpoint)."""
     return df.observe(obs, *_aggregates(counters))
+
+
+def counted_checkpoint(
+    df: DataFrame, counters: dict | None = None
+) -> tuple[DataFrame, dict]:
+    """(df eagerly localCheckpointed, {"rows": n, **counters}): the row count
+    and the named aggregate Columns are observed in the checkpoint's own
+    job, so no count or collect job follows. The one way the program
+    materializes a table and counts it."""
+    obs = Observation()
+    df = _observed(df, obs, counters or {}).localCheckpoint(eager=True)
+    return df, obs.get
 
 
 def partition_lineage(df: DataFrame, stage: str, part_col: str = "part_key") -> DataFrame:

@@ -14,11 +14,17 @@ import glob
 import json
 import os
 
+import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from dupion_spark.config import DedupConfig
 from dupion_spark.pipeline import run_pipeline
-from dupion_spark.sources.checkpoint import CheckpointManager, fingerprint_files
+from dupion_spark.sources.checkpoint import (
+    CheckpointManager,
+    counted_checkpoint,
+    fingerprint_files,
+)
 
 
 @pytest.fixture(scope="module")
@@ -102,6 +108,47 @@ def test_dataframe_payload_edit_invalidates_resume(spark, fixture_small, tmp_pat
     assert not any(_stage_resumed(rerun).values()), _stage_resumed(rerun)
     assert len({os.path.dirname(f) for f in _staged_files(ckpt)}) == 1
     assert _clusters(rerun) == _clusters(run_pipeline(spark, edited, cfg))
+
+
+def test_dataframe_duplicated_row_change_invalidates_resume(
+    spark, fixture_small, tmp_path
+):
+    """Two DataFrames that differ only in which row is present twice must
+    not share a staged copy: a twice-present row cancels out of an xor of
+    row hashes, so the name must rest on a fold that keeps every copy."""
+    ckpt = str(tmp_path / "ckpt")
+    cfg = DedupConfig()
+    rows = fixture_small.images.head(40)
+    base = rows.iloc[2:]
+
+    def doubled(i):
+        return spark.createDataFrame(
+            pd.concat([base, rows.iloc[[i, i]]], ignore_index=True)
+        )
+
+    run_pipeline(spark, doubled(0), cfg, checkpoint_dir=ckpt)
+    second = doubled(1)
+    rerun = run_pipeline(spark, second, cfg, checkpoint_dir=ckpt)
+    assert not any(_stage_resumed(rerun).values()), _stage_resumed(rerun)
+    (staged,) = glob.glob(os.path.join(ckpt, "input@*"))
+    ids = [r["image_id"] for r in spark.read.parquet(staged).collect()]
+    assert sorted(ids) == sorted(r["image_id"] for r in second.collect())
+
+
+def test_counted_checkpoint_matches_explicit_counts(spark):
+    """counted_checkpoint over a plan with an exchange beneath it: rows and
+    every counter equal an explicit count()/agg, and the checkpointed
+    DataFrame holds the same rows."""
+    df = spark.range(1000).groupBy((F.col("id") % 37).alias("k")).agg(
+        F.count(F.lit(1)).alias("n"), F.max("id").alias("top")
+    )
+    counters = {"wide": F.count_if(F.col("n") > 27), "total": F.sum("n"),
+                "top": F.max("top")}
+    out, values = counted_checkpoint(df, counters)
+    expected = df.agg(*(c.alias(k) for k, c in counters.items())).collect()[0]
+    assert values == {"rows": df.count(), **expected.asDict()}
+    assert values["rows"] == 37 and values["total"] == 1000
+    assert sorted(out.collect()) == sorted(df.collect())
 
 
 def test_config_change_invalidates_chain(spark, small_source, tmp_path):
@@ -288,7 +335,7 @@ def test_incremental_resume_add_change_delete(spark, images_df, tmp_path):
     assert len(_clusters(second)) == n_rows
 
 
-def _check_counters(result, n_images: int, persisted: bool) -> None:
+def _check_counters(result, n_images: int) -> None:
     """Every observed counter of a run equals an explicit count()."""
     stages = result.metrics["stages"]
     assert result.metrics["n_images"] == n_images == stages["features"]["rows"]
@@ -298,8 +345,7 @@ def _check_counters(result, n_images: int, persisted: bool) -> None:
     ).count()
     assert stages["pairs"]["rows"] == result.candidate_pairs.count()
     assert stages["verified_edges"]["rows"] == result.verified_edges.count()
-    if persisted:
-        assert stages["clusters"]["rows"] == result.clusters.count()
+    assert stages["clusters"]["rows"] == result.clusters.count()
     star_only = result.candidate_pairs.filter(
         "band_src LIKE 'star\\_%'"
     ).count()
@@ -315,14 +361,14 @@ def test_observed_counters_match_counts(spark, small_source, tmp_path):
     cfg = DedupConfig(max_band_bucket=8, minhash_max_bucket=4)
 
     _check_counters(run_pipeline(spark, images, cfg, source_path=small_source),
-                    n_images, persisted=False)
+                    n_images)
     cold = run_pipeline(spark, images, cfg, checkpoint_dir=ckpt,
                         source_path=small_source)
-    _check_counters(cold, n_images, persisted=True)
+    _check_counters(cold, n_images)
     resumed = run_pipeline(spark, images, cfg, checkpoint_dir=ckpt,
                            source_path=small_source)
     assert all(_stage_resumed(resumed).values()), _stage_resumed(resumed)
-    _check_counters(resumed, n_images, persisted=True)
+    _check_counters(resumed, n_images)
 
 
 # the stages an older layout persisted and this one rebuilds from parents
