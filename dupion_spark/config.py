@@ -58,38 +58,34 @@ class DedupConfig:
     require_caption_lcs: bool = False # if True, edges need LCS >= lcs_min_len too
 
     # --- skew / scale guards ------------------------------------------------
-    # buckets larger than the cap leave the all-pairs path: caption buckets
-    # fall back to hub STAR links, pixel buckets to sub-band refinement
-    # (operators/lsh.candidate_pairs). The pixel cap must absorb the 1-bit
-    # multiprobe's ~17x occupancy inflation: a probe bucket collects every
-    # rep within 1 bit of its value, so typical buckets run ~17x larger than
-    # exact-band buckets and a cap tuned for exact occupancy (16, round 2)
-    # pushed 87% of band rows into the over-cap fallback — both a recall
-    # drain and a second corpus-sized pass. With the hamming prefilter
-    # running INLINE in the join's codegen (no raw-pair materialization),
-    # all-pairs is cheap far beyond that: measured on the 300k fixture,
-    # cap 256 = 334M raw comparisons (~seconds of codegen) with only 433
+    # buckets larger than the cap leave the all-pairs path: caption and
+    # simhash buckets fall back to hub STAR links, phash buckets to sub-band
+    # refinement (operators/lsh.candidate_pairs). The pixel cap must absorb
+    # the 1-bit multiprobe's ~17x occupancy inflation: a probe bucket
+    # collects every rep within 1 bit of its value, so typical buckets run
+    # ~17x larger than exact-band buckets and a cap tuned for exact occupancy
+    # (16, round 2) pushed 87% of band rows into the over-cap fallback — both
+    # a recall drain and a second corpus-sized pass. With the hamming
+    # prefilter running where the pairs are generated (no raw-pair
+    # materialization), all-pairs is cheap far beyond that: measured on the
+    # 300k fixture, cap 256 = 334M raw comparisons with only 433
     # genuinely-hot buckets (mega-clusters) left for the sub-band cascade.
     # Caption buckets keep a hard cap: boilerplate captions over unrelated
     # images are quadratic junk that pixel-authoritative verify rejects.
     max_band_bucket: int = 256    # all-pairs window for pixel-band buckets
     minhash_max_bucket: int = 8   # all-pairs window for caption-band buckets
-    # unused: nothing reads it. Kept only because removing a field changes
-    # config_hash(), which would invalidate every checkpoint root (and with
-    # it incremental reuse) built so far.
-    salt_buckets: int = 16
     # Second-level sub-buckets (the cascade for over-cap pixel buckets) run
     # DIRECT all-pairs up to this LARGER window instead of hub star links —
     # closing the round-4 residual recall hole where a member far from its
     # sub-hub lost its only direct edge. The quadratic work is bounded
-    # (sub_allpairs_max^2/2 inline-prefiltered codegen comparisons per
-    # sub-bucket, ~8.4M at 4096 = single-digit core-seconds) and only the
-    # double-over-cap slice pays it; AQE skew-join splitting keeps individual
-    # tasks bounded. Hub star links remain ONLY for sub-buckets beyond this
-    # window (> 4096 members agreeing on 16 phash bits within 1 flip —
-    # adversarial mega-crowds where quadratic work is genuinely unpayable);
-    # that residual exposure stays observable per run via the
-    # star_only_pairs lineage metric.
+    # (sub_allpairs_max^2/2 prefiltered comparisons per sub-bucket, ~8.4M at
+    # 4096, generated lsh.PAIR_CHUNK at a time) and only the double-over-cap
+    # slice pays it; a sub-bucket is one kernel call in one task, as no
+    # skew splitting reaches inside it. Hub star links remain ONLY for
+    # sub-buckets beyond this window (> 4096 members agreeing on 16 phash
+    # bits within 1 flip — adversarial mega-crowds where quadratic work is
+    # genuinely unpayable); that residual exposure stays observable per run
+    # via the star_only_pairs lineage metric.
     # The comparison-cost bound above holds only when the hamming prefilter
     # thins the survivors: a crowd of EXACT-SIGNATURE twins passes the
     # prefilter wholesale, so C(n,2) pairs would reach VERIFY (measured: a
@@ -98,28 +94,6 @@ class DedupConfig:
     # to one delegate (hamming-0 'sig_twin' star edges, linear) BEFORE the
     # window applies — the window only ever sees distinct signatures.
     sub_allpairs_max: int = 4096
-
-    # --- sampled hot-key detection (pixel buckets, large corpora only) -------
-    # Exact over-cap detection aggregates EVERY band key: at 600k under the
-    # 3-band plan that is a ~40M-near-unique-key shuffle whose cost grows
-    # superlinearly with the corpus (hash-agg tables spill; the counts rows
-    # themselves are corpus-scale). But the cap is a PERFORMANCE guard, not a
-    # correctness gate: a missed hot bucket just runs the inline-prefiltered
-    # all-pairs join — its candidate set is a SUPERSET of the hub-star
-    # cascade's, so the verified edge set can only GROW (extra candidates are
-    # verify-filtered; monotone, not identical, vs exact detection — the
-    # guarantee is no recall loss, deterministic per seed). So above
-    # hot_sample_min_reps, pixel hot keys are
-    # detected from a hot_sample_fraction row sample (flag keys whose sampled
-    # count exceeds half the expected at-cap sample), then EXACTLY re-counted
-    # on just the flagged keys — the full-key counts shuffle disappears.
-    # Binomial tails: a bucket at 2x cap is missed with p < 1e-6 at 1/16
-    # sampling; marginal buckets (cap..1.5x cap) are occasionally missed and
-    # cost a bounded extra all-pairs (~cap^2/2 codegen comparisons). Caption
-    # buckets keep exact detection: their cap (8) is below sampling
-    # resolution and their key table is an order of magnitude smaller.
-    hot_sample_min_reps: int = 200_000
-    hot_sample_fraction: float = 0.0625  # 1/16
 
     # --- corpus-adaptive banding ---------------------------------------------
     # With FIXED band-key entropy, bucket occupancy grows linearly with the

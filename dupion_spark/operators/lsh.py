@@ -16,34 +16,38 @@ Skew strategy (the mega-cluster problem):
   1. exact-duplicate collapse upstream (operators/exact.representatives) —
      identical images are ONE node here.
   2. bucket-size caps sized to the multiprobe occupancy (DedupConfig
-     .max_band_bucket): under-cap buckets run the inline-prefiltered
-     all-pairs self-join; over-cap CAPTION and SIMHASH buckets fall back
-     to hub star links (no recall obligation — the phash pigeonhole
-     carries the guarantee); over-cap PHASH buckets go through
-     second-level phash sub-banding so genuine near pairs keep a DIRECT
-     verifiable edge (see candidate_pairs docstring). A 10^6-member hot
-     bucket emits linear, not quadratic, work on every path.
-  3. the all-pairs self-join is pinned to SHUFFLE_HASH (AQE would
-     broadcast the corpus-sized band table) and runs under AQE skew-join
-     splitting (spark.sql.adaptive.skewJoin.enabled).
+     .max_band_bucket): under-cap buckets emit all their pairs, hamming-
+     prefiltered; over-cap CAPTION and SIMHASH buckets fall back to hub star
+     links (no recall obligation — the phash pigeonhole carries the
+     guarantee); over-cap PHASH buckets go through second-level phash
+     sub-banding so genuine near pairs keep a DIRECT verifiable edge (see
+     candidate_pairs docstring). A 10^6-member hot bucket emits linear, not
+     quadratic, work on every path.
+  3. every bucket is made local: the rows are shuffled by key once and a
+     numpy kernel walks each partition's key runs, so a bucket's size and
+     hub are exact local facts and no global per-key count is ever taken.
+     Raw all-pairs are generated PAIR_CHUNK at a time, so one bucket at
+     sub_allpairs_max never builds its millions of pairs at once.
 
 One key builder, probe_keys, writes every band key as SQL text (band_keys,
-SUB_KEYS, queries._doc_bands). One bucket-pair builder serves every level
-that buckets rows (rep_id, <key>, ...) — both levels of the pixel cascade
-here and the document MinHash path (queries._doc_pairs):
-  hot_keys     — the over-cap keys with their hub (exact, or sampled and
-                 re-counted), the only keys that meet the rows again;
-  bucket_pairs — the SHUFFLE_HASH all-pairs self-join inside each bucket;
-  star_links   — hub star links for the over-cap buckets.
+SUB_KEYS, queries._doc_bands). One bucket kernel, bucket_links, serves every
+level that buckets rows (rep_id, <key>, ...): both levels of the pixel
+cascade here and the document MinHash path (queries._doc_pairs).
 """
 
 from __future__ import annotations
 
+import functools
+from typing import Iterator, NamedTuple
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dupion_spark.config import DedupConfig
 from dupion_spark.sources.checkpoint import counted_checkpoint
+
 
 
 # bit 62 of every band key marks a CAPTION (minhash) bucket: it lets one
@@ -139,10 +143,9 @@ def band_table(
     """Explode per-rep signatures into (rep_id, phash, simhash, band_key).
 
     The band table's rep_id column carries the rep's long surrogate sid
-    (operators/features.FEATURE_SCHEMA), not its string id: the pair
-    self-joins then shuffle and compare fixed-width longs instead of id
-    strings (~40% of band-row bytes, and the join condition's 300M+ id
-    comparisons). candidate_pairs maps back to strings on its tiny output.
+    (operators/features.FEATURE_SCHEMA), not its string id: the bucket
+    shuffle moves fixed-width longs instead of id strings (~40% of band-row
+    bytes). candidate_pairs maps back to strings on its tiny output.
 
     n_reps: corpus-size hint driving the ADAPTIVE pixel band plan
     (cfg.pixel_band_plan): as the corpus grows, fewer/wider phash bands keep
@@ -170,97 +173,157 @@ def band_table(
     )
 
 
-def hot_keys(
-    rows: DataFrame, key: str, cap, carry: tuple = (),
-    sample: float | None = None, seed: int = 0,
+# raw all-pairs generated per numpy step: a bucket at sub_allpairs_max
+# (4096 members, ~8.4M pairs) yields its pairs in bounded steps
+PAIR_CHUNK = 1 << 20
+
+
+class Route(NamedTuple):
+    """How bucket_links treats the buckets whose key carries `bit` (bit 0
+    takes every key; the first matching route wins, so the last one has bit
+    0): up to `cap` rows, every pair labeled `label`; over the cap, a STAR
+    from the hub (the minimum rep_id) to each member labeled `star` or, with
+    star None, the member rows themselves (id_l = id_r = rep_id, a null
+    band_src, their phash and simhash) for the next level to re-bucket."""
+
+    bit: int
+    cap: int
+    label: str
+    star: str | None
+
+
+def bucket_links(
+    rows: DataFrame, key: str, routes: list[Route],
+    limits: tuple[int, int] | None = None,
 ) -> DataFrame:
-    """The over-cap buckets of `rows` (rep_id, <key>, ...): one row per key
-    holding more than `cap` rows, with `key`, `_n` (bucket size), `_hub`
-    (the minimum rep_id) and one `_hub_<c>` per carried column (the hub
-    row's value, for prefiltering star links against the hub).
+    """(id_l, id_r, band_src) for the buckets of `rows` (rep_id, <key>
+    [, phash, simhash]) as `routes` says, id_l < id_r, plus phash and simhash
+    columns when a route passes member rows on. limits (phash, simhash): a
+    pair is kept only if its phash hamming is within the first OR its
+    simhash hamming within the second; None keeps every pair.
 
-    ONLY these keys ever meet the band rows again. An earlier layout joined
-    the FULL per-bucket count table back onto all band rows — a corpus-scale
-    sort-merge join that dominated pair generation (measured: 2x the rest of
-    it combined, scaling at ~0.5 efficiency). The over-cap key set is orders
-    of magnitude smaller (hot keys only), so the all-pairs path's anti-join
-    and the star path's inner join both stay AQE-broadcastable; where even
-    the hot set outgrows broadcast they degrade to shuffle joins that move
-    only hot keys, never the counts table.
-
-    sample: a row-sample fraction for large corpora, where the exact
-    per-key count is itself a corpus-scale near-unique-key shuffle. Keys
-    whose sampled count exceeds half the expected at-cap sample are
-    flagged, then EXACTLY re-counted on just the flagged slice; `cap` must
-    be an int here. A missed marginal bucket degrades to a bounded
-    all-pairs join — a superset of its star links, never wrong output
-    (verify is authoritative)."""
-    if sample is not None:
-        flagged = (
-            rows.sample(fraction=sample, seed=seed)
-            .groupBy(key)
-            .agg(F.count(F.lit(1)).alias("_sn"))
-            .filter(F.col("_sn") > max(1, int(cap * sample / 2)))
-            .select(key)
-        )
-        rows = rows.join(flagged, key)
-    return (
-        rows.groupBy(key)
-        .agg(
-            F.count(F.lit(1)).alias("_n"),
-            F.min("rep_id").alias("_hub"),
-            *(F.min_by(c, "rep_id").alias(f"_hub_{c}") for c in carry),
-        )
-        .filter(F.col("_n") > cap)
-    )
+    One shuffle by key puts each bucket in one partition, sorted, and
+    _bucket_kernel walks the partition's key runs, so a bucket's size, hub
+    and pairs are local and exact. Not groupBy(key).applyInPandas: that is
+    one Python call per key. A bucket stays in one task: AQE skew splitting
+    does not reach inside the kernel, but every over-cap path is linear."""
+    sig = [c for c in ("phash", "simhash") if c in rows.columns]
+    members = any(r.star is None for r in routes)
+    id_type = rows.schema["rep_id"].dataType.simpleString()
+    schema = f"id_l {id_type}, id_r {id_type}, band_src string" + "".join(
+        f", {c} long" for c in sig if members)
+    kernel = functools.partial(_bucket_kernel, key=key, routes=routes,
+                               limits=limits, sig=sig, members=members)
+    return rows.repartition(key).sortWithinPartitions(key).mapInPandas(kernel, schema)
 
 
-def bucket_pairs(rows: DataFrame, key: str, label, keep=None) -> DataFrame:
-    """(id_l, id_r, band_src) for every pair sharing a `key` bucket in
-    `rows` (rep_id, <key>, ...), id_l < id_r; `label` is a band_src string
-    or a Column over the `l.`/`r.` sides. keep(p, q), when given, is a
-    predicate over the two sides' column prefixes ("l.", "r.") that runs
-    inside the join's codegen, so the raw pair stream never materializes.
-
-    The self-join joins the SAME plan to itself (aliases, not two
-    differently-projected copies), so both sides read one cached input.
-    SHUFFLE_HASH is pinned: AQE otherwise saw a small compressed shuffle
-    size and BROADCAST the 26M-row band table — a single-threaded ~800MB
-    driver build that cost more than the whole join (measured 45s vs 18s at
-    8 cores) and grows with input, the exact shape of parallelism-
-    independent wall the scaling gate punishes. At real corpus scale a
-    broadcast here is impossible anyway; per-partition hash builds stay
-    bounded by the shuffle partition count, and AQE skew-join splitting
-    handles residual bucket skew."""
-    l, r = rows.alias("l"), rows.alias("r")
-    pairs = (
-        l.hint("SHUFFLE_HASH").join(r, F.col(f"l.{key}") == F.col(f"r.{key}"))
-        .filter(F.col("l.rep_id") < F.col("r.rep_id"))
-    )
-    if keep is not None:
-        pairs = pairs.filter(keep("l.", "r."))
-    return pairs.select(
-        F.col("l.rep_id").alias("id_l"),
-        F.col("r.rep_id").alias("id_r"),
-        F.lit(label).alias("band_src"),
-    )
+def _key_runs(batches: Iterator[pd.DataFrame], key: str) -> Iterator[pd.DataFrame]:
+    """One partition's key-sorted Arrow batches regrouped into frames of
+    whole key runs. A bucket can span batches (maxRecordsPerBatch), so each
+    batch's trailing run waits for the batch that closes it: only that open
+    run is carried, never the partition."""
+    tail: list[pd.DataFrame] = []
+    for pdf in batches:
+        if pdf.empty:
+            continue
+        if pdf[key].isna().any():
+            raise ValueError(f"null {key}: every bucketed row needs a key")
+        keys = pdf[key].to_numpy()
+        cut = int(np.searchsorted(keys, keys[-1]))
+        if cut or (tail and tail[-1][key].iat[-1] != keys[0]):
+            yield pd.concat([*tail, pdf.iloc[:cut]], ignore_index=True)
+            tail = []
+        tail.append(pdf.iloc[cut:])
+    if tail:
+        yield pd.concat(tail, ignore_index=True)
 
 
-def star_links(joined: DataFrame, label, keep=None) -> DataFrame:
-    """(id_l, id_r, band_src) hub STAR links for over-cap buckets: `joined`
-    is the bucket rows joined to their hot_keys row, and every member links
-    to its bucket's hub (linear, and the bucket subgraph is already a star,
-    so connected components converges on it in one round). keep(p, q), when
-    given, filters on the hub's carried columns ("_hub_") against the
-    member's own ("")."""
-    links = joined.filter(F.col("rep_id") != F.col("_hub"))
-    if keep is not None:
-        links = links.filter(keep("_hub_", ""))
-    return links.select(
-        F.col("_hub").alias("id_l"),
-        F.col("rep_id").alias("id_r"),
-        F.lit(label).alias("band_src"),
-    )
+def _bucket_kernel(
+    batches: Iterator[pd.DataFrame], key: str, routes: list[Route],
+    limits: tuple[int, int] | None, sig: list[str], members: bool,
+) -> Iterator[pd.DataFrame]:
+    """mapInPandas body of bucket_links over one key-sorted partition."""
+    for runs in _key_runs(batches, key):
+        for out in _bucket_frames(runs, key, routes, limits, sig, members):
+            if len(out):
+                yield out
+
+
+def _bucket_frames(
+    pdf: pd.DataFrame, key: str, routes: list[Route],
+    limits: tuple[int, int] | None, sig: list[str], members: bool,
+) -> Iterator[pd.DataFrame]:
+    """bucket_links' output rows for a frame of whole key runs."""
+    # factorize(sort=True) codes order like the ids, strings included;
+    # sorted by (key, code), a run's first row is its minimum-id hub and
+    # positions a < b hold ids id[a] <= id[b]
+    codes, ids = pd.factorize(pdf["rep_id"], sort=True)
+    keys = pdf[key].to_numpy()
+    order = np.lexsort((codes, keys))
+    keys, codes = keys[order], codes[order]
+    rid = ids.to_numpy()[codes]
+    sigs = [pdf[c].to_numpy()[order] for c in sig]
+    starts = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1]])
+    sizes = np.diff(np.r_[starts, len(keys)])
+    route = np.full(len(starts), len(routes) - 1)
+    for i in reversed(range(len(routes) - 1)):
+        route[(keys[starts] & routes[i].bit) != 0] = i
+    run = np.repeat(np.arange(len(starts)), sizes)
+    over = (sizes > np.array([r.cap for r in routes])[route])[run]
+
+    def links(left: np.ndarray, right: np.ndarray, label: np.ndarray) -> pd.DataFrame:
+        keep = codes[left] != codes[right]
+        if limits is not None:
+            keep &= (_hamming(sigs[0][left], sigs[0][right]) <= limits[0]) | (
+                _hamming(sigs[1][left], sigs[1][right]) <= limits[1])
+        left, right = left[keep], right[keep]
+        out = {"id_l": rid[left], "id_r": rid[right], "band_src": label[keep]}
+        if members:
+            out.update({c: np.zeros(len(left), np.int64) for c in sig})
+        return pd.DataFrame(out)
+
+    # under-cap buckets: row i pairs with the rows after it in its run,
+    # PAIR_CHUNK raw pairs at a time
+    labels = np.array([r.label for r in routes], dtype=object)
+    small = np.flatnonzero(~over)
+    fan = np.repeat(starts + sizes, sizes)[small] - small - 1
+    small, fan = small[fan > 0], fan[fan > 0]
+    done = np.cumsum(fan)
+    lo = 0
+    while lo < len(small):
+        hi = max(lo + 1, int(np.searchsorted(
+            done, done[lo] - fan[lo] + PAIR_CHUNK, "right")))
+        f = fan[lo:hi]
+        left = np.repeat(small[lo:hi], f)
+        right = left + 1 + np.arange(len(left)) - np.repeat(np.cumsum(f) - f, f)
+        yield links(left, right, labels[route[run[left]]])
+        lo = hi
+    # over-cap buckets: hub stars, or member rows for the next level
+    stars = np.array([r.star for r in routes], dtype=object)
+    star = over & np.array([r.star is not None for r in routes])[route][run]
+    spokes = np.flatnonzero(star)
+    yield links(np.repeat(starts, sizes)[spokes], spokes, stars[route[run[spokes]]])
+    if members:
+        mem = np.flatnonzero(over & ~star)
+        yield pd.DataFrame({
+            "id_l": rid[mem], "id_r": rid[mem],
+            "band_src": np.full(len(mem), None, dtype=object),
+            **{c: s[mem] for c, s in zip(sig, sigs)},
+        })
+
+
+_M1, _M2, _M4, _H01 = (np.uint64(m) for m in (
+    0x5555555555555555, 0x3333333333333333, 0x0F0F0F0F0F0F0F0F, 0x0101010101010101))
+
+
+def _hamming(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Bit count of a ^ b over int64 arrays: a SWAR popcount, as numpy 1.26
+    has no bitwise_count."""
+    x = (a ^ b).view(np.uint64)
+    x = x - ((x >> np.uint64(1)) & _M1)
+    x = (x & _M2) + ((x >> np.uint64(2)) & _M2)
+    x = (x + (x >> np.uint64(4))) & _M4
+    return (x * _H01) >> np.uint64(56)
 
 
 def candidate_pairs(
@@ -281,14 +344,12 @@ def candidate_pairs(
     prefilter and guarantee; the pipeline passes one value to both.
 
     The raw pair stream (a pair per shared bucket — ~100M rows at 300k
-    images) never hits a shuffle: the hamming test runs inside the bucket
-    self-join using the signature columns the band rows carry, in whole-stage
-    codegen, and only the ~1000x smaller survivor set pays the dedup groupBy.
-    An earlier layout deduped the raw stream first and joined a signature
-    table after — the dedup was the single biggest shuffle of the pipeline.
+    images) never leaves the kernel: the hamming test runs where bucket_links
+    generates the pairs, from the signature columns the band rows carry, and
+    only the survivors pay the dedup groupBy.
 
-    Small buckets -> all-pairs self-join (AQE skew-join handles residual skew);
-    buckets over the per-source cap -> linear-cost fallbacks by source:
+    Buckets up to the per-source cap emit all their pairs; buckets over it
+    take linear-cost fallbacks by source:
 
     CAPTION over-cap buckets: STAR links to the bucket minimum (linear, and —
     unlike chain links — the bucket subgraph is already a star, so connected
@@ -299,9 +360,18 @@ def candidate_pairs(
     are impure and their pairs can never pass the pixel-authoritative verify.
 
     SIMHASH over-cap buckets: hub STAR links too — simhash is a diversity
-    source with no recall obligation (see the star-branch comment below for
-    the argument and SIMHASH_BIT for the measured 1.2M cost of sub-banding
-    them).
+    source with no recall obligation (any genuine near pair within the plan
+    radius is guaranteed a phash band collision; see SIMHASH_BIT for the
+    measured 1.2M cost of sub-banding them).
+
+    The star prefilter uses the PLAN-ALIGNED phash radius for caption stars
+    too, although the 3*bands catch-guarantee rationale is pixel-specific:
+    caption banding can surface pairs at phash hamming (plan_limit..12] that
+    the narrowed radius drops, which is safe ONLY because verify is
+    pixel-authoritative and every measured such pair fails the PSNR gate
+    (65,855/65,855 rejected at 600k). If caption-verified edges
+    (require_caption_lcs as an OR-path) are ever added, caption-sourced
+    pairs must keep cfg.prefilter_hamming instead.
 
     PHASH over-cap buckets: RECURSIVE SUB-BANDING, because star links cannot
     carry recall through the verify gate — a hub edge only survives if the
@@ -319,22 +389,22 @@ def candidate_pairs(
     sub window straddle TWO top-level bands, so the members of an over-cap
     top-level bucket (constant in ONE aligned window) split up to 256 ways
     in every sub window — an aligned 4x16 layout would re-create the
-    over-cap crowd verbatim. 16-bit keys carry 256x the entropy of the
-    round-3 8-bit sub keys (the saturation ADVICE item); an earlier 8-window
-    cyclic byte-pair variant had the same guarantee but 136 keys/member —
-    measured at 300k, its sub table approached the size of the TOP-level
-    band table (17.1M vs 26.1M rows) and its self-join dominated the pairs
-    stage, so the 68-key disjoint form wins at identical radius. Sub-buckets
-    up to cfg.sub_allpairs_max run DIRECT all-pairs — a sub-bucket merely
-    over the TOP-level cap no longer star-links, so a member far from its
-    sub-hub keeps its direct edges (the round-4 residual recall hole,
-    closed; quadratic work is bounded per bucket and inline-prefiltered in
-    codegen, with AQE skew-join splitting the tasks). Only sub-buckets
-    beyond sub_allpairs_max — adversarial mega-crowds agreeing on 16 phash
-    bits within 1 flip — fall back to hub star links, labeled star_pixel so
-    the exposed population is countable per run (the star_only_pairs
-    lineage metric). Cost stays linear in members: 68 sub-rows per over-cap
-    member, emitted only for the over-cap slice.
+    over-cap crowd verbatim. 16-bit keys keep sub-buckets from saturating
+    (8-bit ones did), and 4 disjoint windows cost 68 keys per member at the
+    same radius as 8 overlapping ones at 136. The scope is the DISTINCT member
+    set, not each parent bucket: the disjoint pigeonhole works on the full
+    64-bit phash regardless of scope, and a mega-cluster member over the cap
+    in all its probe buckets still emits 68 sub-rows, not 68 per bucket.
+    Shape is NOT in the sub key; cross-shape sub-collisions are junk pairs
+    bounded by the sub-bucket cap and killed by the prefilter / PSNR gate.
+    Sub-buckets up to cfg.sub_allpairs_max emit DIRECT all-pairs — a
+    sub-bucket merely over the TOP-level cap does not star-link, so a member
+    far from its sub-hub keeps its direct edges (the round-4 residual recall
+    hole, closed). Only sub-buckets beyond sub_allpairs_max — adversarial
+    mega-crowds agreeing on 16 phash bits within 1 flip, where star edges
+    overwhelmingly pass verify and quadratic work is unpayable — fall back
+    to hub star links, labeled star_pixel so the exposed population is
+    countable per run (the star_only_pairs lineage metric).
 
     Before sub-banding, over-cap members sharing an IDENTICAL
     (phash, simhash) collapse to one min-rep_id DELEGATE with hamming-0
@@ -346,150 +416,33 @@ def candidate_pairs(
     3,000-twin crowd at 300k emitted 4.5M candidates and a 19.5-minute
     pairs wall). The 68 sub-rows are emitted per DELEGATE, so a
     million-twin crowd costs one sub-banding participant plus one linear
-    star pass."""
-    # phash prefilter radius aligned to the active band plan (see docstring)
+    star pass.
+
+    Labels: direct labels ('minhash', 'pixel') sort before 'sig_twin', which
+    sorts before 'star_*', so after the min-agg a pair is labeled star_* iff
+    its ONLY provenance is hub-star links — the population exposed to the
+    star-recall caveat, countable from the pair table. At hamming 0 that
+    caveat does not apply, so twin edges are not counted with it."""
+    # a radius <= 0 DISABLES the prefilter (every band collision goes to
+    # verify) — the escape hatch for auditing prefilter recall
     ph_limit = cfg.pixel_prefilter(n_reps)
-
-    def keep(p: str, q: str):
-        """Per-source prefilter between the signature columns under prefixes
-        p and q (see DedupConfig): phash within the plan's radius OR simhash
-        within the pigeonhole band. A radius <= 0 DISABLES the prefilter
-        (every band collision goes to verify) — the escape hatch for
-        auditing prefilter recall against raw LSH output."""
-        if ph_limit <= 0:
-            return F.lit(True)
-
-        def ham(c: str):
-            return F.bit_count(F.col(p + c).bitwiseXOR(F.col(q + c)))
-
-        return (ham("phash") <= ph_limit) | (
-            ham("simhash") <= cfg.simhash_prefilter_hamming
-        )
-
-    # per-source cap via the key's caption bit: caption buckets get a tighter
-    # all-pairs window than pixel buckets (see DedupConfig.max_band_bucket)
-    is_caption = F.col("band_key").bitwiseAND(F.lit(CAPTION_BIT)) != 0
-    cap = F.when(is_caption, F.lit(cfg.minhash_max_bucket)).otherwise(
-        F.lit(cfg.max_band_bucket)
+    limits = (ph_limit, cfg.simhash_prefilter_hamming) if ph_limit > 0 else None
+    # level 1, the one materialized table: its pairs and its over-cap phash
+    # member rows (null band_src) are read apart, and the member count
+    # decides whether level 2 runs (an empty input gives no level-2 pairs)
+    level1, counts = counted_checkpoint(
+        bucket_links(bands, "band_key", [
+            Route(CAPTION_BIT, cfg.minhash_max_bucket, "minhash", "star_minhash"),
+            Route(SIMHASH_BIT, cfg.max_band_bucket, "pixel", "star_simhash"),
+            Route(0, cfg.max_band_bucket, "pixel", None),
+        ], limits),
+        {"members": F.count_if(F.col("band_src").isNull())},
     )
-    # over-cap CAPTION and SIMHASH buckets take hub star links, over-cap
-    # PHASH buckets the sub-band cascade (see docstring)
-    key_class = F.col("band_key").bitwiseAND(F.lit(CAPTION_BIT | SIMHASH_BIT))
-    is_star_key, is_phash_key = key_class != 0, key_class == 0
-
-    # MATERIALIZATION DISCIPLINE: every multiply-referenced intermediate is
-    # checkpointed, lazily unless the driver reads its count (`hot`:
-    # counted_checkpoint) — DataFrame reuse is NOT compute reuse (each
-    # reference inlines the whole subtree; an early version of this plan
-    # executed the 26M-row band explode EIGHT times). Measured both ways at
-    # 300k: checkpointing the band table costs ~7s of single-disk write but
-    # recomputing it per consumer costs more in BOTH wall and scaling
-    # (65.7s vs 47.8s at 8 cores; AQE replans the wider trees serially), so
-    # the checkpoint stays.
-    bands = bands.localCheckpoint(eager=False)  # consumers: hot detection (sample+recheck or exact), small anti-join, big join
-
-    carry = ("phash", "simhash")
-    if n_reps is not None and n_reps >= cfg.hot_sample_min_reps:
-        # sampled hot detection for the pixel keys (see DedupConfig): the
-        # exact per-key counts agg is itself corpus-scale at large N (~40M
-        # near-unique keys at 600k under the 3-band plan). Caption keys keep
-        # exact detection: their cap is below sampling resolution.
-        hot = hot_keys(
-            bands.filter(~is_caption), "band_key", cfg.max_band_bucket, carry,
-            sample=cfg.hot_sample_fraction, seed=cfg.seed,
-        ).unionByName(
-            hot_keys(bands.filter(is_caption), "band_key",
-                     cfg.minhash_max_bucket, carry)
-        )
-    else:
-        # exact detection at small scale: bitwise-stable bucket routing is
-        # what the sf0.001/sf0.01 golden oracles value-check against
-        hot = hot_keys(bands, "band_key", cap, carry)
-    # ADAPTIVE BRANCH ELISION on the materialized hot statistic: which of the
-    # over-cap classes actually occur this run, observed in the job that
-    # checkpoints `hot` (consumers: small anti-join + big join) — the AQE
-    # idiom (plan from runtime stats) applied at the orchestration level.
-    # Without it, every run pays shuffle-stage round-trips for all four
-    # fallback branches (caption/simhash stars, twin collapse, sub-banding +
-    # sub-stars, each behind its own localCheckpoint materialization) even
-    # when the over-cap population is EMPTY — measured ~3s of the 6.3s pairs
-    # wall at sf0.1 (6k images, zero hot buckets), pure fixed overhead the
-    # scaling gate's small legs also pay. Output is identical: an elided
-    # branch contributes zero rows by construction.
-    hot, hot_classes = counted_checkpoint(hot, {
-        "n_star": F.count_if(is_star_key), "n_pix": F.count_if(is_phash_key),
-    })
-    n_hot = hot_classes["rows"]
-    # the elision is sound only while the classes partition the hot keys: a
-    # key in none of them (a new key class, a null band_key) would otherwise
-    # skip every over-cap branch and flow into the all-pairs join
-    n_classed = hot_classes["n_star"] + hot_classes["n_pix"]
-    if n_classed != n_hot:
-        raise AssertionError(
-            f"{n_hot} over-cap band keys but {n_classed} "
-            "fall in a known key class (caption/simhash/phash)"
-        )
-
-    # the hot anti-join is itself elided when the hot statistic says NO
-    # over-cap bucket exists this run — an anti-join against an empty set is
-    # the identity, so output is unchanged and the zero-hot case (every
-    # bench SF) skips a full pass + broadcast over the band table.
-    small = (
-        bands if not n_hot
-        else bands.join(hot.select("band_key"), "band_key", "left_anti")
-    )
-    branches = [bucket_pairs(
-        small, "band_key",
-        F.when(F.col("l.band_key").bitwiseAND(F.lit(CAPTION_BIT)) != 0,
-               F.lit("minhash")).otherwise(F.lit("pixel")),
-        keep,
-    )]
-
-    big = bands.join(hot, "band_key")
-
-    # caption and simhash over-cap buckets: star links to the hub,
-    # hub-hamming filtered (recall is carried by the pixel bands — see
-    # docstring). Simhash carries no recall obligation either: any genuine
-    # near pair within the plan radius is guaranteed a phash band collision,
-    # and the simhash<=3 OR-path class in an over-cap bucket was never
-    # guaranteed by phash sub-windows, so star links lose nothing it had
-    # (and sub-banding them was the 1.2M pairs-wall blowup, see SIMHASH_BIT).
-    # The PLAN-ALIGNED ph_limit is intentionally shared with the caption
-    # stars even though the 3*bands catch-guarantee rationale is
-    # pixel-specific: caption banding can surface pairs at phash hamming
-    # (plan_limit..12] that the narrowed radius now drops, which is safe ONLY
-    # because verify is pixel-authoritative and every measured such pair
-    # fails the PSNR gate (65,855/65,855 rejected at 600k). If
-    # caption-verified edges (require_caption_lcs as an OR-path) are ever
-    # added, caption-sourced pairs must keep cfg.prefilter_hamming instead.
-    # Star links carry a 'star_*' band_src: direct labels sort
-    # lexicographically before star labels, so after the min-agg below a
-    # pair is labeled star_* iff its ONLY provenance is hub-star links — the
-    # exact population exposed to the documented star-recall caveat,
-    # countable for free from the pair/edge tables (no extra jobs).
-    if hot_classes["n_star"]:
-        branches.append(star_links(
-            big.filter(is_star_key),
-            F.when(is_caption, "star_minhash").otherwise("star_simhash"),
-            keep,
-        ))
-
-    # pixel over-cap buckets: second-level sub-banding (4 disjoint 16-bit
-    # windows offset 8 bits from the band slices, 1-bit multiprobe — see
-    # docstring) over the DISTINCT over-cap member set — global scope, not
-    # per parent bucket: the disjoint-pigeonhole guarantee works on the full
-    # 64-bit phash regardless of scope, and per-bucket scoping would make a
-    # mega-cluster member (over-cap in all its probe buckets) emit 68
-    # sub-rows per bucket instead of 68 total. Shape is NOT in the sub key
-    # (band rows don't carry w/h); cross-shape sub-collisions are junk pairs
-    # bounded by the sub-bucket cap and killed by the hamming prefilter /
-    # PSNR gate.
-    if hot_classes["n_pix"]:
-        branches += _pixel_overcap_branches(big.filter(is_phash_key), cfg, keep)
-
-    pairs = branches[0]
-    for extra in branches[1:]:
-        pairs = pairs.unionByName(extra)
+    pairs = level1.filter(F.col("band_src").isNotNull()).select("id_l", "id_r", "band_src")
+    if counts["members"]:
+        members = level1.filter(F.col("band_src").isNull()).select(
+            F.col("id_l").alias("rep_id"), "phash", "simhash")
+        pairs = pairs.unionByName(_sub_band_pairs(members, cfg, limits))
     pairs = pairs.groupBy("id_l", "id_r").agg(F.min("band_src").alias("band_src"))
     # restore string ids on the tiny output (AQE broadcasts the map at this
     # scale; at corpus scale this is a candidate-proportional join)
@@ -505,81 +458,26 @@ def candidate_pairs(
     )
 
 
-def _pixel_overcap_branches(
-    overcap_rows: DataFrame, cfg: DedupConfig, keep
-) -> list[DataFrame]:
-    """The pixel over-cap cascade branches: twin collapse, sub-band
-    all-pairs, sub-star fallback. Split out of candidate_pairs so the whole
-    cascade is built ONLY when the hot statistic says pixel over-cap buckets
-    exist this run (see the branch-elision comment there)."""
-    # checkpoint the DISTINCT MEMBER set (tiny), not the 68x-exploded sub
-    # table — each consumer re-explodes from the cached members (parallel,
-    # cheap) instead of reading a multi-hundred-MB checkpointed RDD
-    members_all = (
-        overcap_rows
-        .select("rep_id", "phash", "simhash")
-        .distinct()
-        .localCheckpoint(eager=False)  # consumers: sig_groups agg, twin join
+def _sub_band_pairs(
+    members: DataFrame, cfg: DedupConfig, limits: tuple[int, int] | None
+) -> DataFrame:
+    """Level 2 over the over-cap phash member rows (rep_id, phash, simhash;
+    a member repeats once per over-cap bucket): the twin collapse, then the
+    sub-band buckets of one delegate per signature (see candidate_pairs)."""
+    # lazy, read twice: by the twin edges and by the delegates' sub keys
+    groups = members.groupBy("phash", "simhash").agg(
+        F.min("rep_id").alias("rep_id"), F.collect_set("rep_id").alias("_twins")
+    ).localCheckpoint(eager=False)
+    twins = groups.select(
+        F.col("rep_id").alias("id_l"),
+        F.explode(F.array_remove("_twins", F.col("rep_id"))).alias("id_r"),
+        F.lit("sig_twin").alias("band_src"),
     )
-    # EXACT-SIGNATURE TWIN COLLAPSE. Members sharing an IDENTICAL
-    # (phash, simhash) are indistinguishable to every banding decision —
-    # every bucket/probe/sub-window either holds all of them or none — so
-    # running them all through sub-banding is pure redundancy, and the
-    # all-pairs window below would pay C(n,2) VERIFY pairs for a crowd the
-    # hamming prefilter cannot thin (twins pass it by definition). That trap
-    # is real, not hypothetical: a planted 3,000-twin mega-crowd at 300k fit
-    # inside sub_allpairs_max and emitted 4.5M verified candidates (19.5 min
-    # pairs wall) before this collapse. Post-collapse: one min-rep_id
-    # delegate per signature enters sub-banding; the other twins attach by
-    # hamming-0 delegate edges ('sig_twin', linear). The label sorts between
-    # the direct labels ('minhash'/'pixel') and 'star_*', so a twin pair
-    # that also has direct band provenance keeps its direct label under the
-    # min-agg, and twin edges are never miscounted by the star_only_pairs
-    # metric — at hamming 0 the star-recall caveat does not apply (the only
-    # residual is a phash+simhash 128-bit double collision of genuinely
-    # dissimilar images failing verify against the delegate; verify stays
-    # authoritative either way).
-    sig_groups = (
-        members_all.groupBy("phash", "simhash")
-        .agg(F.min("rep_id").alias("_dg"), F.count(F.lit(1)).alias("_dn"))
-        .localCheckpoint(eager=False)  # consumers: delegates + twin stars
-    )
-    twins = (
-        members_all.join(
-            sig_groups.filter(F.col("_dn") > 1), ["phash", "simhash"]
-        )
-        .filter(F.col("rep_id") != F.col("_dg"))
-        .select(
-            F.col("_dg").alias("id_l"),
-            F.col("rep_id").alias("id_r"),
-            F.lit("sig_twin").alias("band_src"),
-        )
-    )
-    # one delegate per signature: a projection, read from sig_groups' checkpoint
-    members = sig_groups.select(F.col("_dg").alias("rep_id"), "phash", "simhash")
-    sub = members.selectExpr(
+    sub = groups.selectExpr(
         "rep_id", "phash", "simhash",
         f"explode(array({', '.join(SUB_KEYS)})) AS sub_key",
     )
-    # same hot-key structure as the top level, but with the LARGER
-    # sub_allpairs_max window: sub-buckets within it run direct all-pairs
-    # (recall-complete; see candidate_pairs docstring), so only true
-    # mega-crowd sub-buckets rejoin the sub table for star links
-    sub_hot = hot_keys(
-        sub, "sub_key", cfg.sub_allpairs_max, ("phash", "simhash")
-    ).localCheckpoint(eager=False)  # consumers: sub anti-join, star join
-    # sub-buckets beyond the sub_allpairs_max window fall back to hub stars:
-    # >4096 members agreeing on 16 phash bits within 1 flip are adversarial
-    # near-identical mega-crowds where star edges overwhelmingly pass verify
-    # and quadratic work is unpayable; the residual risk — a member
-    # >prefilter bits from its sub-hub losing its only direct edge — now
-    # requires that mega-crowd saturation and stays countable per run via
-    # the star_only_pairs lineage metric (see candidate_pairs docstring)
-    return [
-        twins,
-        bucket_pairs(
-            sub.join(sub_hot.select("sub_key"), "sub_key", "left_anti"),
-            "sub_key", "pixel", keep,
-        ),
-        star_links(sub.join(sub_hot, "sub_key"), "star_pixel", keep),
-    ]
+    return twins.unionByName(bucket_links(
+        sub, "sub_key", [Route(0, cfg.sub_allpairs_max, "pixel", "star_pixel")],
+        limits,
+    ))

@@ -157,12 +157,9 @@ def verified_edges_from_files(
     """Worker-side pair verification: gather_payloads fetches only the
     candidate-endpoint payloads straight from storage (no corpus re-scan, no
     corpus shuffle), then the compact slice runs through the join+UDF core
-    in verified_edges. The gather output is materialized once because both
-    payload joins read it."""
-    payload = gather_payloads(pairs, features, gather_metrics).localCheckpoint(
-        eager=False
-    )  # consumers: the id_l and id_r payload joins
-    return verified_edges(pairs, payload, cfg)
+    in verified_edges. Both payload joins read the gather, which runs once:
+    they share its exchange (ReuseExchange), so it needs no checkpoint."""
+    return verified_edges(pairs, gather_payloads(pairs, features, gather_metrics), cfg)
 
 
 def verified_edges(

@@ -8,7 +8,8 @@ The staged dataflow (SURVEY.md §3.1 "Spark shape"):
       │           carries its exact-group size
       ├─ sigs:    MinHash(caption) + SimHash/pHash(pixels) per rep
       ├─ bands:   LSH band explode → band_key
-      ├─ pairs:   bucketed self-join (+ chain-links for hot buckets)
+      ├─ pairs:   one bucket kernel per key shuffle (+ hub stars and
+      │           sub-bands for over-cap buckets)
       ├─ edges:   PSNR/LCS verification of candidate pairs
       ├─ cc:      connected components (one union-find task when small,
       │           else large-star/small-star rounds)

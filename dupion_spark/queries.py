@@ -582,24 +582,14 @@ SQL_DEDUP_MINHASH = (
 )
 
 
-# hot-band cap for the doc LSH self-join: buckets above this size emit a
+# hot-band cap for the doc LSH buckets: buckets above this size emit a
 # linear STAR (member -> bucket-min) instead of quadratic all-pairs —
 # identical connectivity for clustering, bounded blow-up on boilerplate text
 # (same design as the image path, operators/lsh.candidate_pairs). Mirrored
 # literally in the oracle SQL so both engines compute identical pair sets.
 DOC_MAX_BAND_BUCKET = 16
 
-# --- doc-corpus scale knobs (mirrors of the pixel path's DedupConfig) -------
-# Sampled hot detection: the exact per-key counts agg over doc band keys is
-# the same corpus-scale near-unique-key shuffle the pixel path replaced with
-# sampling (commit 6b1ca5c); above this corpus size, hot keys are flagged
-# from a row sample and EXACTLY re-counted on just the flagged slice. A
-# missed marginal bucket degrades to that bucket's all-pairs join — a
-# SUPERSET of its star links (extra pairs only; exact-Jaccard/pixel verify
-# downstream is authoritative), never a recall loss.
-DOC_HOT_SAMPLE_MIN_DOCS = 200_000
-DOC_HOT_SAMPLE_FRACTION = 0.0625  # 1/16
-
+# --- doc-corpus scale knob (a mirror of the pixel path's DedupConfig) -------
 # Corpus-adaptive banding: with fixed 4x4 banding, doc band-bucket occupancy
 # grows linearly with the corpus and within-bucket comparisons quadratically
 # — the text analog of the pixel path's fixed-entropy superlinearity. At
@@ -632,39 +622,22 @@ def _doc_bands(sig: DataFrame, n_docs: int | None) -> DataFrame:
 
 def _doc_pairs(sig: DataFrame, n_docs: int | None = None) -> DataFrame:
     """Banding + capped candidate-pair generation over the signature table,
-    through the image path's bucket-pair builder (operators/lsh.hot_keys,
-    bucket_pairs, star_links): ONLY the over-cap bucket keys ever meet the
-    band table again, under-cap buckets run the SHUFFLE_HASH all-pairs
-    self-join, over-cap buckets star-link to their minimum doc_id. Band keys
-    are xxhash64 LONGS (one skinny column) instead of md5-of-concat strings
-    — same bucket partition (any injective key works; collisions at 2^-64
-    only add candidates that exact verification re-checks), ~40% fewer
-    shuffle bytes per band row. The DuckDB oracle keeps md5 keys: bucket
-    contents, caps, and hubs — the semantics — are identical, so the pair
-    sets match.
+    through the image path's bucket kernel (operators/lsh.bucket_links):
+    buckets up to DOC_MAX_BAND_BUCKET emit all their pairs, over-cap buckets
+    star-link to their minimum doc_id, both from exact per-bucket counts
+    after one shuffle of the band rows by key. Band keys are xxhash64 LONGS
+    (one skinny column) instead of md5-of-concat strings — same bucket
+    partition (any injective key works; collisions at 2^-64 only add
+    candidates that exact verification re-checks), ~40% fewer shuffle bytes
+    per band row. The DuckDB oracle keeps md5 keys: bucket contents, caps,
+    and hubs — the semantics — are identical, so the pair sets match.
 
-    n_docs: corpus-size hint. Drives (a) the ADAPTIVE band plan
-    (_doc_band_plan — fewer, more selective bands at mega-corpus scale) and
-    (b) SAMPLED hot detection from DOC_HOT_SAMPLE_MIN_DOCS on: flag
-    candidate hot keys from a DOC_HOT_SAMPLE_FRACTION row sample, then
-    exactly re-count just the flagged slice — the full near-unique-key
-    counts shuffle (the text path's superlinear term, mirroring the pixel
-    fix in commit 6b1ca5c) disappears. A missed marginal bucket runs
-    all-pairs: a SUPERSET of its star links (property-tested), never fewer
-    pairs."""
-    # 3 consumers: hot agg, anti-join, big join
-    bands = _doc_bands(sig, n_docs).localCheckpoint(eager=False)
-    # exact detection below the sampling threshold: bitwise-stable bucket
-    # routing is what the DuckDB oracles value-check against
-    sampled = n_docs is not None and n_docs >= DOC_HOT_SAMPLE_MIN_DOCS
-    hot = lsh.hot_keys(
-        bands, "key", DOC_MAX_BAND_BUCKET,
-        sample=DOC_HOT_SAMPLE_FRACTION if sampled else None, seed=42,
-    ).localCheckpoint(eager=False)  # 2 consumers: anti-join + big path
-    small = bands.join(hot.select("key"), "key", "left_anti")
+    n_docs: corpus-size hint driving the ADAPTIVE band plan (_doc_band_plan
+    — fewer, more selective bands at mega-corpus scale)."""
     return (
-        lsh.bucket_pairs(small, "key", "minhash")
-        .unionByName(lsh.star_links(bands.join(hot, "key"), "star_minhash"))
+        lsh.bucket_links(_doc_bands(sig, n_docs), "key", [
+            lsh.Route(0, DOC_MAX_BAND_BUCKET, "minhash", "star_minhash"),
+        ])
         .select("id_l", "id_r")
         .distinct()
     )
@@ -672,14 +645,13 @@ def _doc_pairs(sig: DataFrame, n_docs: int | None = None) -> DataFrame:
 
 def q_dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH banding + candidate pairs on the doc signatures: xxhash64 band key
-    per 4-slot signature slice; bucketed self-join per key with the
+    per 4-slot signature slice; one bucket kernel per key shuffle with the
     hot-bucket star cap; distinct pairs.
 
-    The signature table feeds _doc_pairs exactly once — the band table
-    inside _doc_pairs is the checkpointed multi-consumer anchor, so no
-    extra materialization here. The corpus count (a cheap zero-column scan)
-    feeds the adaptive band plan + sampled hot detection; at oracle scales
-    both stay at the exact/default behavior the SQL mirrors."""
+    The signature table feeds _doc_pairs exactly once, so no
+    materialization here. The corpus count (a cheap zero-column scan) feeds
+    the adaptive band plan; at oracle scales it stays at the default plan
+    the SQL mirrors."""
     (docs,) = _tables(spark, sf_dir, "documents")
     return _doc_pairs(_minhash_sig(_fan_out(docs)), n_docs=docs.count())
 

@@ -11,8 +11,7 @@ Planted structure per 100-row block:
                 4x4 MinHash banding with p ~ 0.9995)
   r == 2     -> member of THE boilerplate crowd (one shared body + a unique
                 tail): n/100 docs whose signatures collide -> every crowd
-                band bucket is hot, exercising the star cap and the sampled
-                hot detection at scale
+                band bucket is hot, exercising the star cap at scale
   else       -> unique 60-word text
 """
 

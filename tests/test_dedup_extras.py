@@ -151,7 +151,7 @@ def test_dedup_clusters_docs_verified_edges_only(spark):
 
 
 # ---------------------------------------------------------------------------
-# doc-path scale knobs: sampled hot detection + adaptive banding
+# doc-path scale knob: adaptive banding
 # ---------------------------------------------------------------------------
 def _hot_crowd_docs(spark):
     """30 identical boilerplate docs (every band bucket hot at cap 16), one
@@ -168,27 +168,6 @@ def _hot_crowd_docs(spark):
     return spark.createDataFrame(rows, "doc_id string, text string")
 
 
-def test_doc_sampled_hot_pairs_superset_of_exact(spark, monkeypatch):
-    """The monotonicity property the sampled path must keep (mirror of the
-    pixel-path test): every exact-detection pair survives sampling — a
-    missed hot bucket degrades to all-pairs, a SUPERSET of its star links;
-    detected buckets run the identical star path."""
-    docs = _hot_crowd_docs(spark)
-    sig = Q._minhash_sig(docs).localCheckpoint(eager=False)
-    exact = {(r["id_l"], r["id_r"]) for r in Q._doc_pairs(sig).collect()}
-    # activate the sampled path on this tiny corpus
-    monkeypatch.setattr(Q, "DOC_HOT_SAMPLE_MIN_DOCS", 1)
-    monkeypatch.setattr(Q, "DOC_HOT_SAMPLE_FRACTION", 0.5)
-    sampled = {
-        (r["id_l"], r["id_r"]) for r in Q._doc_pairs(sig, n_docs=52).collect()
-    }
-    # premises: the boilerplate crowd actually went hot (star pairs to the
-    # hub exist) and the near pair is direct in both
-    assert ("b000", "b001") in exact
-    assert ("n_a", "n_b") in exact and ("n_a", "n_b") in sampled
-    assert exact <= sampled
-
-
 def test_doc_band_plan_thresholds():
     assert Q._doc_band_plan(None) == (4, 4)
     assert Q._doc_band_plan(100_000) == (4, 4)
@@ -200,7 +179,7 @@ def test_doc_band_plan_thresholds():
 def test_doc_wide_plan_still_catches_identical_docs(spark):
     """At the 2x8 plan (mega-corpus hint) identical signatures still share
     every band — the wide plan narrows the Jaccard threshold, not exact
-    recall — and the sampled hot path engages together with it."""
+    recall."""
     docs = _hot_crowd_docs(spark)
     sig = Q._minhash_sig(docs).localCheckpoint(eager=False)
     wide = {

@@ -18,13 +18,17 @@ from __future__ import annotations
 from collections import Counter
 
 import numpy as np
+import pandas as pd
 import pytest
+from pyspark.errors import PythonException
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dupion_spark import queries as Q
 from dupion_spark.config import DedupConfig
 from dupion_spark.operators import lsh
+from dupion_spark.sources.checkpoint import counted_checkpoint
 
 SIG_SCHEMA = T.StructType(
     [
@@ -126,15 +130,12 @@ def test_overcap_bucket_is_actually_overcap(spark):
 
 
 def test_overcap_key_outside_known_classes_raises(spark):
-    """The hot-branch elision routes over-cap buckets by three key classes
-    (caption, simhash, phash). An over-cap key in none of them, here a null
-    band_key, must fail loudly instead of flowing into the all-pairs join."""
-    from pyspark.sql import functions as F
-
+    """A null band_key fails loudly in the bucket kernel instead of being
+    bucketed with every other null."""
     sigs = _sigs(spark, _rows())
     bands = lsh.band_table(sigs, CFG)
     unclassed = bands.withColumn("band_key", F.lit(None).cast("long"))
-    with pytest.raises(AssertionError, match="known key class"):
+    with pytest.raises(PythonException, match="null band_key"):
         _pairs(sigs, CFG, bands=bands.unionByName(unclassed))
 
 
@@ -256,28 +257,6 @@ def test_pixel_prefilter_follows_band_plan():
     # a configured radius TIGHTER than the plan's is respected
     tight = DedupConfig(prefilter_hamming=7)
     assert tight.pixel_prefilter(600_000) == 7
-
-
-def test_sampled_hot_detection_matches_exact_clusters(spark):
-    """Sampled hot-key detection (DedupConfig.hot_sample_*) must preserve the
-    candidate-pair guarantees: the sampled-hot set is a subset of the exact
-    hot set re-counted exactly, so a missed bucket degrades to all-pairs —
-    the near pair must still surface, and the pair set may only GROW
-    (direct all-pairs supersedes the cascade's star links)."""
-    sigs = _sigs(spark, _rows())
-    # activate the sampled path on this tiny corpus
-    cfg_sampled = DedupConfig(max_band_bucket=16, hot_sample_min_reps=1,
-                              hot_sample_fraction=0.5)
-    exact_pairs = {(r["id_l"], r["id_r"]) for r in _pairs(sigs, CFG)}
-    sampled_pairs = {
-        (r["id_l"], r["id_r"]) for r in _pairs(sigs, cfg_sampled, n_reps=22)
-    }
-    assert ("x_a", "x_b") in sampled_pairs
-    # the real monotonicity property: EVERY exact-path pair survives sampling
-    # (a missed hot bucket degrades to all-pairs, which supersedes the
-    # cascade's star links; detected buckets run the identical cascade) —
-    # extras only, never fewer pairs
-    assert exact_pairs <= sampled_pairs
 
 
 # --- double-saturation recall (the round-4 residual hole, now closed) -------
@@ -543,11 +522,10 @@ def test_caption_overcap_routes_to_stars(spark):
     assert got == {("c00", f"c{i:02d}"): "star_minhash" for i in range(1, 10)}
 
 
-def test_bucket_pairs_plans_shuffled_hash_join(spark):
-    """The SHUFFLE_HASH hint on the all-pairs self-join survives into the
-    executed (final, post-AQE) plan for both the image band table and the
-    document band table: a broadcast would build the whole corpus-sized
-    band table on the driver (see lsh.bucket_pairs)."""
+def test_bucket_links_plans_one_key_shuffle(spark):
+    """For both the image and the document band table, the executed (final,
+    post-AQE) plan hash-partitions the band rows on the key below the
+    kernel and never broadcasts them."""
     docs = spark.createDataFrame(
         [(f"d{i:02d}", f"document {i % 5} about meadows and kestrels") for i in range(20)],
         "doc_id string, text string",
@@ -557,11 +535,12 @@ def test_bucket_pairs_plans_shuffled_hash_join(spark):
         "document": (Q._doc_bands(Q._minhash_sig(docs), None), "key"),
     }
     for name, (rows, key) in tables.items():
-        pairs = lsh.bucket_pairs(rows, key, "pixel")
+        pairs = lsh.bucket_links(rows, key, [lsh.Route(0, 16, "pixel", "star_pixel")])
         assert pairs.collect(), name  # executes this plan: AQE's final form
         plan = pairs._jdf.queryExecution().executedPlan().toString()
-        assert "ShuffledHashJoin" in plan, f"{name}: {plan}"
-        assert "BroadcastHashJoin" not in plan, f"{name}: {plan}"
+        kernel = plan.index("MapInPandas")
+        assert plan.index(f"Exchange hashpartitioning({key}", kernel) > kernel, f"{name}: {plan}"
+        assert "BroadcastExchange" not in plan, f"{name}: {plan}"
 
 
 # --- key identity: the SQL-text builder against the Column builders it
@@ -702,3 +681,361 @@ def test_doc_band_keys_match_column_reference(spark, n_docs, plan):
         "key",
     )
     assert _multiset(Q._doc_bands(sig, n_docs), "key") == want
+
+
+# --- the bucket kernel against the SQL cascade it replaced, kept here
+# verbatim (exact hot detection) as the reference ---------------------------
+SUB_KEYS = lsh.SUB_KEYS
+
+
+def hot_keys(rows: DataFrame, key: str, cap, carry: tuple = ()) -> DataFrame:
+    """The over-cap buckets of `rows` (rep_id, <key>, ...): one row per key
+    holding more than `cap` rows, with `key`, `_n` (bucket size), `_hub`
+    (the minimum rep_id) and one `_hub_<c>` per carried column (the hub
+    row's value, for prefiltering star links against the hub)."""
+    return (
+        rows.groupBy(key)
+        .agg(
+            F.count(F.lit(1)).alias("_n"),
+            F.min("rep_id").alias("_hub"),
+            *(F.min_by(c, "rep_id").alias(f"_hub_{c}") for c in carry),
+        )
+        .filter(F.col("_n") > cap)
+    )
+
+
+def bucket_pairs(rows: DataFrame, key: str, label, keep=None) -> DataFrame:
+    """(id_l, id_r, band_src) for every pair sharing a `key` bucket in
+    `rows` (rep_id, <key>, ...), id_l < id_r; `label` is a band_src string
+    or a Column over the `l.`/`r.` sides. keep(p, q), when given, is a
+    predicate over the two sides' column prefixes ("l.", "r.") that runs
+    inside the join's codegen, so the raw pair stream never materializes."""
+    l, r = rows.alias("l"), rows.alias("r")
+    pairs = (
+        l.hint("SHUFFLE_HASH").join(r, F.col(f"l.{key}") == F.col(f"r.{key}"))
+        .filter(F.col("l.rep_id") < F.col("r.rep_id"))
+    )
+    if keep is not None:
+        pairs = pairs.filter(keep("l.", "r."))
+    return pairs.select(
+        F.col("l.rep_id").alias("id_l"),
+        F.col("r.rep_id").alias("id_r"),
+        F.lit(label).alias("band_src"),
+    )
+
+
+def star_links(joined: DataFrame, label, keep=None) -> DataFrame:
+    """(id_l, id_r, band_src) hub STAR links for over-cap buckets: `joined`
+    is the bucket rows joined to their hot_keys row, and every member links
+    to its bucket's hub (linear, and the bucket subgraph is already a star,
+    so connected components converges on it in one round). keep(p, q), when
+    given, filters on the hub's carried columns ("_hub_") against the
+    member's own ("")."""
+    links = joined.filter(F.col("rep_id") != F.col("_hub"))
+    if keep is not None:
+        links = links.filter(keep("_hub_", ""))
+    return links.select(
+        F.col("_hub").alias("id_l"),
+        F.col("rep_id").alias("id_r"),
+        F.lit(label).alias("band_src"),
+    )
+
+
+def _reference_candidate_pairs(
+    bands: DataFrame, cfg: DedupConfig, id_map: DataFrame,
+    n_reps: int | None = None,
+) -> DataFrame:
+    """The SQL cascade candidate_pairs ran before the bucket kernel, with
+    exact hot detection."""
+    ph_limit = cfg.pixel_prefilter(n_reps)
+
+    def keep(p: str, q: str):
+        """Per-source prefilter between the signature columns under prefixes
+        p and q (see DedupConfig): phash within the plan's radius OR simhash
+        within the pigeonhole band. A radius <= 0 DISABLES the prefilter
+        (every band collision goes to verify) — the escape hatch for
+        auditing prefilter recall against raw LSH output."""
+        if ph_limit <= 0:
+            return F.lit(True)
+
+        def ham(c: str):
+            return F.bit_count(F.col(p + c).bitwiseXOR(F.col(q + c)))
+
+        return (ham("phash") <= ph_limit) | (
+            ham("simhash") <= cfg.simhash_prefilter_hamming
+        )
+
+    is_caption = F.col("band_key").bitwiseAND(F.lit(CAPTION_BIT)) != 0
+    cap = F.when(is_caption, F.lit(cfg.minhash_max_bucket)).otherwise(
+        F.lit(cfg.max_band_bucket)
+    )
+    key_class = F.col("band_key").bitwiseAND(F.lit(CAPTION_BIT | SIMHASH_BIT))
+    is_star_key, is_phash_key = key_class != 0, key_class == 0
+
+    bands = bands.localCheckpoint(eager=False)
+
+    carry = ("phash", "simhash")
+    hot = hot_keys(bands, "band_key", cap, carry)
+    hot, hot_classes = counted_checkpoint(hot, {
+        "n_star": F.count_if(is_star_key), "n_pix": F.count_if(is_phash_key),
+    })
+    n_hot = hot_classes["rows"]
+    n_classed = hot_classes["n_star"] + hot_classes["n_pix"]
+    if n_classed != n_hot:
+        raise AssertionError(
+            f"{n_hot} over-cap band keys but {n_classed} "
+            "fall in a known key class (caption/simhash/phash)"
+        )
+
+    small = (
+        bands if not n_hot
+        else bands.join(hot.select("band_key"), "band_key", "left_anti")
+    )
+    branches = [bucket_pairs(
+        small, "band_key",
+        F.when(F.col("l.band_key").bitwiseAND(F.lit(CAPTION_BIT)) != 0,
+               F.lit("minhash")).otherwise(F.lit("pixel")),
+        keep,
+    )]
+
+    big = bands.join(hot, "band_key")
+
+    if hot_classes["n_star"]:
+        branches.append(star_links(
+            big.filter(is_star_key),
+            F.when(is_caption, "star_minhash").otherwise("star_simhash"),
+            keep,
+        ))
+
+    if hot_classes["n_pix"]:
+        branches += _pixel_overcap_branches(big.filter(is_phash_key), cfg, keep)
+
+    pairs = branches[0]
+    for extra in branches[1:]:
+        pairs = pairs.unionByName(extra)
+    pairs = pairs.groupBy("id_l", "id_r").agg(F.min("band_src").alias("band_src"))
+    ml = id_map.select(F.col("sid").alias("id_l"), F.col("rep_id").alias("_l"))
+    mr = id_map.select(F.col("sid").alias("id_r"), F.col("rep_id").alias("_r"))
+    return (
+        pairs.join(ml, "id_l").join(mr, "id_r")
+        .select(
+            F.least("_l", "_r").alias("id_l"),
+            F.greatest("_l", "_r").alias("id_r"),
+            "band_src",
+        )
+    )
+
+
+def _pixel_overcap_branches(
+    overcap_rows: DataFrame, cfg: DedupConfig, keep
+) -> list[DataFrame]:
+    """The pixel over-cap cascade branches: twin collapse, sub-band
+    all-pairs, sub-star fallback."""
+    members_all = (
+        overcap_rows
+        .select("rep_id", "phash", "simhash")
+        .distinct()
+        .localCheckpoint(eager=False)  # consumers: sig_groups agg, twin join
+    )
+    sig_groups = (
+        members_all.groupBy("phash", "simhash")
+        .agg(F.min("rep_id").alias("_dg"), F.count(F.lit(1)).alias("_dn"))
+        .localCheckpoint(eager=False)  # consumers: delegates + twin stars
+    )
+    twins = (
+        members_all.join(
+            sig_groups.filter(F.col("_dn") > 1), ["phash", "simhash"]
+        )
+        .filter(F.col("rep_id") != F.col("_dg"))
+        .select(
+            F.col("_dg").alias("id_l"),
+            F.col("rep_id").alias("id_r"),
+            F.lit("sig_twin").alias("band_src"),
+        )
+    )
+    members = sig_groups.select(F.col("_dg").alias("rep_id"), "phash", "simhash")
+    sub = members.selectExpr(
+        "rep_id", "phash", "simhash",
+        f"explode(array({', '.join(SUB_KEYS)})) AS sub_key",
+    )
+    sub_hot = hot_keys(
+        sub, "sub_key", cfg.sub_allpairs_max, ("phash", "simhash")
+    ).localCheckpoint(eager=False)  # consumers: sub anti-join, star join
+    return [
+        twins,
+        bucket_pairs(
+            sub.join(sub_hot.select("sub_key"), "sub_key", "left_anti"),
+            "sub_key", "pixel", keep,
+        ),
+        star_links(sub.join(sub_hot, "sub_key"), "star_pixel", keep),
+    ]
+
+
+def _reference_doc_pairs(sig: DataFrame, n_docs: int | None = None) -> DataFrame:
+    """The SQL cascade queries._doc_pairs ran before the bucket kernel, with
+    exact hot detection."""
+    bands = Q._doc_bands(sig, n_docs).localCheckpoint(eager=False)
+    hot = hot_keys(bands, "key", Q.DOC_MAX_BAND_BUCKET).localCheckpoint(eager=False)
+    small = bands.join(hot.select("key"), "key", "left_anti")
+    return (
+        bucket_pairs(small, "key", "minhash")
+        .unionByName(star_links(bands.join(hot, "key"), "star_minhash"))
+        .select("id_l", "id_r")
+        .distinct()
+    )
+
+
+def _relabel(rows, prefix: str):
+    return [(prefix + r[0], *r[1:]) for r in rows]
+
+
+def _flip(v: int, bits) -> int:
+    u = v & ((1 << 64) - 1)
+    for b in bits:
+        u ^= 1 << int(b)
+    return _signed(u)
+
+
+def _planted_mix():
+    """Random signatures with small near-dup families, plus every over-cap
+    shape: the phash flood with its near pair, the double-saturation crowd
+    (over a small sub_allpairs_max it star-links at the sub level), the
+    simhash crowd, the caption crowd and a 12-member twin crowd."""
+    rng = np.random.default_rng(31)
+    rows = []
+    for i in range(80):
+        ph, sh, mh = int(_i64(rng)), int(_i64(rng)), [int(v) for v in _i64(rng, 64)]
+        rows.append((f"r{i:03d}", 64, 64, mh, sh, ph))
+        for j in range(int(rng.integers(0, 3))):
+            rows.append((
+                f"r{i:03d}n{j}", 64, 64, mh if j == 0 else [int(v) for v in _i64(rng, 64)],
+                _flip(sh, rng.choice(64, int(rng.integers(0, 6)), replace=False)),
+                _flip(ph, rng.choice(64, int(rng.integers(0, 16)), replace=False)),
+            ))
+    twin_ph, twin_sh = _phash(0x4242, 0x1111, 0x2222, 0x3333), _signed(0x0BAD_F00D_0BAD_F00D)
+    rows += [(f"t{i:02d}", 64, 64, [7_000_000 + i * 64 + j for j in range(64)],
+              twin_sh, twin_ph) for i in range(12)]
+    return (rows + _relabel(_rows(), "a") + _relabel(_saturated_rows(), "s")
+            + _relabel(_simhash_crowd_rows(), "h") + _relabel(_caption_crowd_rows(), "k"))
+
+
+@pytest.fixture
+def arrow_batch(spark):
+    """Sets maxRecordsPerBatch for one test, so buckets span Arrow batches."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    yield lambda n: spark.conf.set(key, str(n))
+    spark.conf.set(key, before)
+
+
+SMALL_CAPS = DedupConfig(max_band_bucket=8, sub_allpairs_max=10)
+
+
+@pytest.mark.parametrize("cfg,batch", [
+    (SMALL_CAPS, 2048),
+    (SMALL_CAPS, 7),
+    (DedupConfig(max_band_bucket=8, sub_allpairs_max=10, prefilter_hamming=0), 7),
+    (DedupConfig(max_band_bucket=16), 2048),
+])
+def test_candidate_pairs_match_sql_reference(spark, arrow_batch, cfg, batch):
+    sigs = _sigs(spark, _planted_mix())
+    id_map = sigs.select("sid", "rep_id")
+    bands = lsh.band_table(sigs, cfg)
+    want = sorted(tuple(r) for r in _reference_candidate_pairs(bands, cfg, id_map).collect())
+    arrow_batch(batch)
+    got = sorted(tuple(r) for r in _pairs(sigs, cfg))
+    assert got == want
+    if cfg is SMALL_CAPS:  # every label the cascade emits occurs
+        assert {r[2] for r in got} == {"minhash", "pixel", "sig_twin", "star_minhash",
+                                       "star_simhash", "star_pixel"}
+
+
+def _doc_mix(spark):
+    """Boilerplate crowds over the doc cap, a near pair, unique docs."""
+    rows = [(f"b{i:03d}", "the quick brown fox jumps over the lazy dog " * 4)
+            for i in range(30)]
+    rows += [(f"c{i:03d}", "terms and conditions apply to every order " * 3 + str(i % 2))
+             for i in range(20)]
+    near = "glaciers carve fjords beneath the aurora while kestrels wheel over the lagoon"
+    rows += [("n_a", near), ("n_b", near + "!")]
+    rows += [(f"u{i:03d}", f"unique document number {i} about {'x' * (i + 3)} and meadows")
+             for i in range(20)]
+    return spark.createDataFrame(rows, "doc_id string, text string")
+
+
+@pytest.mark.parametrize("batch", [2048, 5])
+def test_doc_pairs_match_sql_reference(spark, arrow_batch, batch):
+    sig = Q._minhash_sig(_doc_mix(spark)).localCheckpoint(eager=False)
+    want = sorted(tuple(r) for r in _reference_doc_pairs(sig).collect())
+    arrow_batch(batch)
+    got = sorted(tuple(r) for r in Q._doc_pairs(sig).collect())
+    assert got == want
+    assert ("b000", "b001") in got and ("n_a", "n_b") in got
+
+
+def test_bucket_kernel_matches_brute_force(monkeypatch):
+    """The kernel alone, no Spark: random keys and ids cut into random
+    batches, with PAIR_CHUNK shrunk so all-pairs buckets take several steps,
+    against a per-bucket python loop."""
+    monkeypatch.setattr(lsh, "PAIR_CHUNK", 5)
+    rng = np.random.default_rng(3)
+    n = 400
+    rows = pd.DataFrame({
+        "rep_id": rng.permutation(n).astype(np.int64),
+        "phash": _i64(rng, n), "simhash": _i64(rng, n),
+        "band_key": rng.integers(0, 24, n) | np.where(
+            rng.random(n) < 0.3, lsh.SIMHASH_BIT, 0),
+    }).sort_values("band_key", kind="stable", ignore_index=True)
+    cuts = np.sort(rng.choice(np.arange(1, n), 25, replace=False))
+    routes = [lsh.Route(lsh.SIMHASH_BIT, 6, "pixel", "star_simhash"),
+              lsh.Route(0, 9, "pixel", None)]
+    limits = (30, 28)
+    out = pd.concat(lsh._bucket_kernel(
+        (rows.iloc[a:b] for a, b in zip([0, *cuts], [*cuts, n])), key="band_key", routes=routes, limits=limits,
+        sig=["phash", "simhash"], members=True))
+    want = set()
+    for key, bucket in rows.groupby("band_key"):
+        m = bucket.sort_values("rep_id").to_dict("records")
+        cap, star = (6, "star_simhash") if key & lsh.SIMHASH_BIT else (9, None)
+        near = lambda a, b: (_ham(a["phash"], b["phash"]) <= limits[0]
+                             or _ham(a["simhash"], b["simhash"]) <= limits[1])
+        if len(m) <= cap:
+            want |= {(a["rep_id"], b["rep_id"], "pixel")
+                     for i, a in enumerate(m) for b in m[i + 1:] if near(a, b)}
+        elif star:
+            want |= {(m[0]["rep_id"], b["rep_id"], star) for b in m[1:] if near(m[0], b)}
+        else:
+            want |= {(a["rep_id"], a["rep_id"], None) for a in m}
+    got = list(zip(out["id_l"], out["id_r"], out["band_src"]))
+    assert len(got) == len(set(got)) and set(got) == want
+    assert {b for *_, b in got} == {"pixel", "star_simhash", None}
+
+
+def test_candidate_pairs_job_count(spark):
+    """candidate_pairs on the planted fixture runs a pinned number of Spark
+    jobs: level 1 checkpointed and counted, level 2, the dedup and the id
+    restore. A change that adds LSH jobs has to change this pin."""
+    sigs = _sigs(spark, _rows())
+    bands = lsh.band_table(sigs, CFG)
+    sc = spark.sparkContext
+    sc.setJobGroup("lsh-job-count", "candidate_pairs job count")
+    try:
+        lsh.candidate_pairs(bands, CFG, id_map=sigs.select("sid", "rep_id")).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # 8 here; the SQL cascade it replaced ran 20-21 on the same call
+    assert len(sc.statusTracker().getJobIdsForGroup("lsh-job-count")) == 8
+
+
+def test_overcap_star_bucket_is_linear(spark):
+    """One over-cap simhash bucket of 20,000 members (ten Arrow batches)
+    gives exactly 19,999 hub star links."""
+    n = 20_000
+    bands = spark.range(n).selectExpr(
+        "id AS rep_id", "0L AS phash", "0L AS simhash",
+        f"{lsh.SIMHASH_BIT | 12345}L AS band_key")
+    id_map = spark.range(n).selectExpr("id AS sid", "format_string('m%05d', id) AS rep_id")
+    got = lsh.candidate_pairs(bands, DedupConfig(), id_map).collect()
+    assert len(got) == n - 1
+    assert {(r["id_l"], r["band_src"]) for r in got} == {("m00000", "star_simhash")}
+    assert len({r["id_r"] for r in got}) == n - 1

@@ -426,11 +426,11 @@ def test_older_layout_root_resumes_and_sheds_orphans(spark, images_df, tmp_path)
 
 def test_default_config_hash_is_stable():
     """config_hash() is stamped into every checkpoint manifest, so any change
-    to the default config's fields or values (removing the unused
-    salt_buckets included) changes it and invalidates every checkpoint root
-    built so far, incremental reuse with it. Change this pin only together
-    with such a deliberate break."""
-    assert DedupConfig().config_hash() == "239c04216bfc6e7b", (
+    to the default config's fields or values (removing salt_buckets and the
+    sampled hot-detection fields included) changes it and invalidates every
+    checkpoint root built so far, incremental reuse with it. Change this pin
+    only together with such a deliberate break."""
+    assert DedupConfig().config_hash() == "9ed2fbb1571d14b5", (
         "DedupConfig fields or defaults changed: every existing checkpoint "
         "root stops resuming"
     )
