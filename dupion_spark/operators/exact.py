@@ -16,10 +16,11 @@ This is dupion's core pipeline re-expressed declaratively:
                                                 per run: each row's rep_id and
                                                 its group size (representatives)
 
-The `hashes` table (image_id, byte_len, byte_sha256, pixel_sha256) comes only
-from the feature table: payloads are read and decoded once, worker-side, and
-never cross the JVM->Python boundary again for hashing. The (w,h) prune ratio
-is reported in the metrics table (BASELINE.md qualitative metric).
+The `hashes` table (image_id, sid, byte_len, byte_sha256, pixel_sha256)
+comes only from the feature table: payloads are read and decoded once,
+worker-side, and never cross the JVM->Python boundary again for hashing. The
+(w,h) prune ratio is reported in the metrics table (BASELINE.md qualitative
+metric).
 """
 
 from __future__ import annotations
@@ -44,13 +45,13 @@ def exact_groups(hashes: DataFrame) -> DataFrame:
 
 
 def representatives(hashes: DataFrame) -> DataFrame:
-    """hashes -> (image_id, rep_id, byte_len, exact_copies): collapse
-    exact-pixel-identical rows to one node before LSH banding (signatures of
-    identical pixels are identical, so the collapsed graph has the same
-    connected components). This is the first skew weapon: an exact
-    mega-group becomes ONE LSH node. rep_id is the group's minimum member id
-    and exact_copies its size, which the canonical election reads
-    (operators/election) instead of grouping by hash again.
+    """hashes -> (image_id, sid, rep_id, rep_sid, byte_len, exact_copies):
+    collapse exact-pixel-identical rows to one node before LSH banding
+    (signatures of identical pixels are identical, so the collapsed graph has
+    the same connected components). This is the first skew weapon: an exact
+    mega-group becomes ONE LSH node. rep_id is the group's minimum member id,
+    rep_sid (its key in every later table) that member's sid and
+    exact_copies the group size, which the canonical election reads.
 
     groupBy-agg, NOT a window: a window over pixel_sha256 full-sorts each
     group in ONE task, so a 10^6-replica mega-group serializes on a single
@@ -59,18 +60,20 @@ def representatives(hashes: DataFrame) -> DataFrame:
     connected_components already uses (its docstring says why)."""
     hashed = hashes.filter(F.col("pixel_sha256").isNotNull())
     groups = hashed.groupBy("pixel_sha256").agg(
-        F.min("image_id").alias("rep_id"),
+        F.min(F.struct("image_id", "sid")).alias("_rep"),
         F.count(F.lit(1)).alias("exact_copies"),
     )
     # pruned rows (null hash) are their own representative with one copy;
     # keep them OUT of the join — otherwise every pruned row lands in one
     # null-key partition (a self-inflicted skew hotspot at 10^12 rows)
     pruned = hashes.filter(F.col("pixel_sha256").isNull()).select(
-        "image_id", F.col("image_id").alias("rep_id"), "byte_len",
+        "image_id", "sid", F.col("image_id").alias("rep_id"),
+        F.col("sid").alias("rep_sid"), "byte_len",
         F.lit(1).cast("long").alias("exact_copies"),
     )
     return (
         hashed.join(groups, "pixel_sha256")
-        .select("image_id", "rep_id", "byte_len", "exact_copies")
+        .select("image_id", "sid", F.col("_rep.image_id").alias("rep_id"),
+                F.col("_rep.sid").alias("rep_sid"), "byte_len", "exact_copies")
         .unionByName(pruned)
     )

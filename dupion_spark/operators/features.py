@@ -35,6 +35,11 @@ from dupion_spark.config import DedupConfig
 from dupion_spark.functions import codec, signatures
 from dupion_spark.sources.checkpoint import counted_checkpoint
 
+# sid = file_idx << FILE_SHIFT | row group << ROW_BITS | row position
+ROW_BITS = 20
+FILE_SHIFT = 2 * ROW_BITS
+ROW_MASK = (1 << ROW_BITS) - 1
+
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("image_id", T.StringType()),
@@ -49,26 +54,18 @@ FEATURE_SCHEMA = T.StructType(
         T.StructField("minhash", T.ArrayType(T.IntegerType())),
         T.StructField("simhash", T.LongType()),
         T.StructField("phash", T.LongType()),
-        # payload locator: which (file, row group, row position) holds this
-        # row's bytes — lets downstream stages (pair verification) re-fetch
-        # payloads worker-side instead of shipping binary columns through
-        # joins/Arrow, and `take` exactly the needed rows instead of
-        # materializing whole row groups.
-        T.StructField("src_file", T.StringType()),
-        T.StructField("src_rg", T.IntegerType()),
-        T.StructField("src_pos", T.IntegerType()),
-        # sid: data-derived LONG surrogate id (file_idx<<40 | rg<<20 | pos).
-        # The LSH band explode and pair self-joins shuffle and compare sid
-        # instead of the string image_id — 310M string compares in the join
-        # condition and ~40% of the band-row shuffle bytes were id strings.
-        # Strings are restored by a join on the tiny pair output only.
+        # sid: data-derived LONG id (file_idx<<40 | rg<<20 | pos), the one
+        # key of every table from here to the outputs (reps, band rows,
+        # pairs, verified edges, the connected-components input). It is also
+        # the payload locator: the file index maps to a path through the
+        # features manifest, so verify re-reads exactly the rows it needs
+        # worker-side. String ids come back only in the pipeline outputs.
         T.StructField("sid", T.LongType()),
     ]
 )
 
 
-def _extract_rows(table, cfg: DedupConfig, src_file: str, src_rg: int,
-                  file_idx: int) -> pd.DataFrame:
+def _extract_rows(table, cfg: DedupConfig, rg: int, file_idx: int) -> pd.DataFrame:
     out = {k: [] for k in ("image_id", "byte_len", "byte_sha256", "pixel_sha256",
                            "w", "h", "caption", "minhash", "simhash", "phash")}
     ids = table.column("image_id").to_pylist()
@@ -110,10 +107,7 @@ def _extract_rows(table, cfg: DedupConfig, src_file: str, src_rg: int,
     frame = pd.DataFrame(out)
     frame["simhash"] = pd.array(out["simhash"], dtype="Int64")
     frame["phash"] = pd.array(out["phash"], dtype="Int64")
-    frame["src_file"] = src_file
-    frame["src_rg"] = pd.Series([src_rg] * len(frame), dtype="Int32")
-    frame["src_pos"] = pd.array(np.arange(len(frame)), dtype="Int32")
-    base = (int(file_idx) << 40) | (int(src_rg) << 20)
+    base = (int(file_idx) << FILE_SHIFT) | (int(rg) << ROW_BITS)
     frame["sid"] = pd.array(base + np.arange(len(frame)), dtype="Int64")
     return frame
 
@@ -188,17 +182,16 @@ def extract_features_from_files(
                 table = pq.ParquetFile(path).read_row_group(
                     int(rg), columns=["image_id", "bytes", "caption"]
                 )
-                yield _extract_rows(table, cfg, src_file=path, src_rg=int(rg),
-                                    file_idx=int(fidx))
+                yield _extract_rows(table, cfg, rg=int(rg), file_idx=int(fidx))
 
     return split_df.mapInPandas(gen, FEATURE_SCHEMA)
 
 
 def hashes_from_features(features: DataFrame) -> DataFrame:
-    """The `hashes` stage from the feature table, preserving the reference's
-    candidate-prune semantics (F2, state/mod.rs:95-111): pixel_sha256 is
-    exposed only for rows whose (w,h) group has >1 member — a row with a
-    unique shape cannot be an exact pixel duplicate."""
+    """The `hashes` stage (the feature table's ids and hashes), keeping the
+    reference's candidate-prune semantics (F2, state/mod.rs:95-111):
+    pixel_sha256 is exposed only for rows whose (w,h) group has >1 member —
+    a row with a unique shape cannot be an exact pixel duplicate."""
     from pyspark.sql import functions as F
 
     counts = features.groupBy("w", "h").agg(F.count(F.lit(1)).alias("_shape_n"))
@@ -206,6 +199,7 @@ def hashes_from_features(features: DataFrame) -> DataFrame:
         features.join(F.broadcast(counts), ["w", "h"])
         .select(
             "image_id",
+            "sid",
             "byte_len",
             "byte_sha256",
             F.when(F.col("_shape_n") > 1, F.col("pixel_sha256"))
@@ -216,13 +210,11 @@ def hashes_from_features(features: DataFrame) -> DataFrame:
 
 
 def signatures_from_features(features: DataFrame, reps: DataFrame) -> DataFrame:
-    """Per-representative signature slice of the feature table."""
+    """Per-representative signature slice of the feature table, keyed by sid:
+    (sid, w, h, minhash, simhash, phash)."""
     from pyspark.sql import functions as F
 
-    rep_ids = reps.filter(F.col("image_id") == F.col("rep_id")).select("rep_id")
-    return (
-        features.select(
-            F.col("image_id").alias("rep_id"), "sid", "w", "h",
-            "minhash", "simhash", "phash",
-        ).join(rep_ids, "rep_id", "left_semi")
+    rep_sids = reps.filter(F.col("sid") == F.col("rep_sid")).select("sid")
+    return features.join(rep_sids, "sid", "left_semi").select(
+        "sid", "w", "h", "minhash", "simhash", "phash"
     )

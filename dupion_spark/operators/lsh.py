@@ -142,10 +142,11 @@ def band_table(
 ) -> DataFrame:
     """Explode per-rep signatures into (rep_id, phash, simhash, band_key).
 
-    The band table's rep_id column carries the rep's long surrogate sid
-    (operators/features.FEATURE_SCHEMA), not its string id: the bucket
-    shuffle moves fixed-width longs instead of id strings (~40% of band-row
-    bytes). candidate_pairs maps back to strings on its tiny output.
+    The band table's rep_id column is the rep's long sid
+    (operators/features.FEATURE_SCHEMA), the pipeline's one id space: the
+    bucket shuffle moves fixed-width longs instead of id strings (~40% of
+    band-row bytes), and the pairs come out in the sids verify and
+    connected components key on.
 
     n_reps: corpus-size hint driving the ADAPTIVE pixel band plan
     (cfg.pixel_band_plan): as the corpus grows, fewer/wider phash bands keep
@@ -217,7 +218,7 @@ def bucket_links(
     return rows.repartition(key).sortWithinPartitions(key).mapInPandas(kernel, schema)
 
 
-def _key_runs(batches: Iterator[pd.DataFrame], key: str) -> Iterator[pd.DataFrame]:
+def key_runs(batches: Iterator[pd.DataFrame], key: str) -> Iterator[pd.DataFrame]:
     """One partition's key-sorted Arrow batches regrouped into frames of
     whole key runs. A bucket can span batches (maxRecordsPerBatch), so each
     batch's trailing run waits for the batch that closes it: only that open
@@ -243,7 +244,7 @@ def _bucket_kernel(
     limits: tuple[int, int] | None, sig: list[str], members: bool,
 ) -> Iterator[pd.DataFrame]:
     """mapInPandas body of bucket_links over one key-sorted partition."""
-    for runs in _key_runs(batches, key):
+    for runs in key_runs(batches, key):
         for out in _bucket_frames(runs, key, routes, limits, sig, members):
             if len(out):
                 yield out
@@ -327,15 +328,12 @@ def _hamming(a: np.ndarray, b: np.ndarray) -> np.ndarray:
 
 
 def candidate_pairs(
-    bands: DataFrame, cfg: DedupConfig, id_map: DataFrame,
-    n_reps: int | None = None,
+    bands: DataFrame, cfg: DedupConfig, n_reps: int | None = None,
 ) -> DataFrame:
-    """(id_l, id_r, band_src) candidate pairs over string ids, id_l < id_r,
-    hamming-prefiltered INLINE and deduped.
-
-    id_map (sid, rep_id): maps the band table's long surrogate ids back to
-    string ids on the OUTPUT pairs — the two join-backs touch only the pair
-    table (candidate-proportional, tiny), never the band table.
+    """(id_l, id_r, band_src) candidate pairs over the band table's rep ids
+    (the pipeline's long sids), id_l < id_r, hamming-prefiltered INLINE and
+    deduped. Verify and connected components key on the same sids, so no id
+    map is joined here.
 
     n_reps: the same corpus-size hint band_table received — the phash
     prefilter radius follows the ACTIVE band plan's catch guarantee
@@ -443,19 +441,7 @@ def candidate_pairs(
         members = level1.filter(F.col("band_src").isNull()).select(
             F.col("id_l").alias("rep_id"), "phash", "simhash")
         pairs = pairs.unionByName(_sub_band_pairs(members, cfg, limits))
-    pairs = pairs.groupBy("id_l", "id_r").agg(F.min("band_src").alias("band_src"))
-    # restore string ids on the tiny output (AQE broadcasts the map at this
-    # scale; at corpus scale this is a candidate-proportional join)
-    ml = id_map.select(F.col("sid").alias("id_l"), F.col("rep_id").alias("_l"))
-    mr = id_map.select(F.col("sid").alias("id_r"), F.col("rep_id").alias("_r"))
-    return (
-        pairs.join(ml, "id_l").join(mr, "id_r")
-        .select(
-            F.least("_l", "_r").alias("id_l"),
-            F.greatest("_l", "_r").alias("id_r"),
-            "band_src",
-        )
-    )
+    return pairs.groupBy("id_l", "id_r").agg(F.min("band_src").alias("band_src"))
 
 
 def _sub_band_pairs(

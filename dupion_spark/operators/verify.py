@@ -4,10 +4,10 @@ The expensive compare of the staged design (the graft's analog of dupion's
 full blake3 re-read in pass 2, driver/platterwalker.rs:188-374): runs ONLY on
 pairs that survived LSH banding.
 
-Scale notes: gather_payloads reads only the candidate-endpoint payloads
-from the input files; the two payload joins (attach bytes/caption for each
-side) are then sort-merge joins on image_id over that candidate-sized slice,
-never the corpus. The verify UDF receives Arrow batches bounded by
+Scale notes: the sid keys pairs, payloads and verdicts and locates each
+payload, so gather_payloads reads the endpoint rows from the input files with
+no feature join; the two payload joins are sort-merge joins on sid over that
+candidate-sized slice. The verify UDF receives Arrow batches bounded by
 spark.sql.execution.arrow.maxRecordsPerBatch so executor memory stays bounded
 (two decoded images per pair in flight per row)."""
 
@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -22,11 +23,13 @@ from pyspark.sql import types as T
 
 from dupion_spark.config import DedupConfig
 from dupion_spark.functions.spark_udfs import make_verify_udf
+from dupion_spark.operators.features import ROW_BITS, ROW_MASK
+from dupion_spark.operators.lsh import key_runs
 
 
 GATHER_SCHEMA = T.StructType(
     [
-        T.StructField("image_id", T.StringType()),
+        T.StructField("sid", T.LongType()),
         T.StructField("bytes", T.BinaryType()),
         T.StructField("caption", T.StringType()),
     ]
@@ -34,23 +37,23 @@ GATHER_SCHEMA = T.StructType(
 
 
 def gather_payloads(
-    pairs: DataFrame, features: DataFrame, gather_metrics: dict | None = None
+    pairs: DataFrame, files: DataFrame, gather_metrics: dict | None = None
 ) -> DataFrame:
     """Candidate-endpoint payload gather — each needed row group is read ONCE
     cluster-wide, and within a row group only the data PAGES holding a
     candidate endpoint are decompressed.
 
-    Pair endpoints are semi-joined against the (file, row_group) payload
-    locators from the feature pass, partitioned BY row group (explicit
-    partition count — without it AQE coalesces the tiny locator rows into one
-    partition and a single Python worker does every read), and each task
-    reads its row groups directly, emitting only the endpoint payload rows
-    (id, bytes, caption). Output size is proportional to the CANDIDATE set,
-    not the corpus — the compact slice then feeds the ordinary join+UDF
-    verify. An earlier design partitioned by PAIR and re-read row groups per
-    batch: the right side of a pair list touches nearly every row group, so
-    every worker re-decompressed most of the corpus regardless of
-    parallelism — measured as a ~14 s parallelism-independent floor.
+    files: the (file_idx, path) table of the input. Pair endpoint sids are
+    partitioned BY row group (explicit partition count — without it AQE
+    coalesces the tiny locator rows into one partition and a single Python
+    worker does every read), and each task reads its row groups directly,
+    emitting only the endpoint payload rows (sid, bytes, caption). Output
+    size is proportional to the CANDIDATE set, not the corpus — the compact
+    slice then feeds the ordinary join+UDF verify. An earlier design
+    partitioned by PAIR and re-read row groups per batch: the right side of a
+    pair list touches nearly every row group, so every worker re-decompressed
+    most of the corpus regardless of parallelism — measured as a ~14 s
+    parallelism-independent floor.
 
     The page-selective read (functions/pagegather) walks the chunk's page
     headers and decompresses only pages covering requested row positions —
@@ -62,17 +65,15 @@ def gather_payloads(
     column: a dict-encoded chunk keeps every payload in its dictionary page,
     which forces a full-chunk decompress regardless of selectivity (synth.py
     writes bytes with use_dictionary off, as production blob writers do).
+    Captions are small and read whole per touched row group.
 
     gather_metrics: optional dict that receives Spark accumulators
     {bytes_read, bytes_total, pages_read, pages_total, fallback_rgs,
     fallback_dense}; *_total = what whole-chunk reads would decompress,
     *_read = what the selective path decompressed. Valid after the gather."""
-    ids = pairs.select(F.col("id_l").alias("image_id")).unionByName(
-        pairs.select(F.col("id_r").alias("image_id"))
-    ).distinct()
-    loc = features.select(
-        "image_id", "src_file", "src_rg", "src_pos", "caption"
-    ).join(ids, "image_id", "left_semi")
+    ends = pairs.select(F.col("id_l").alias("sid")).unionByName(
+        pairs.select(F.col("id_r").alias("sid"))
+    )
     spark = pairs.sparkSession
     n_parts = max(spark.sparkContext.defaultParallelism * 2, 8)
     sc = spark.sparkContext
@@ -92,66 +93,61 @@ def gather_payloads(
         gather_metrics.update(acc)
 
     def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # sorted by row group, so each row group's endpoints arrive as one
+        # run, read once and deduplicated, whatever the Arrow batch cuts
+        for runs in key_runs(batches, "rg_key"):
+            for rg_key, rows in runs.groupby("rg_key", sort=False):
+                sids = np.unique(rows["sid"].to_numpy())
+                yield read_rows(rows["path"].iat[0], int(rg_key) & ROW_MASK, sids)
+
+    def read_rows(f: str, rg: int, sids: np.ndarray) -> pd.DataFrame:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         from dupion_spark.functions import pagegather
 
-        for pdf in batches:
-            needed: dict[tuple[str, int], list[tuple[int, str, str]]] = {}
-            for f, rg, pos, i, cap in zip(pdf["src_file"], pdf["src_rg"],
-                                          pdf["src_pos"], pdf["image_id"],
-                                          pdf["caption"]):
-                needed.setdefault((f, int(rg)), []).append((int(pos), i, cap))
-            out_ids, out_bytes, out_caps = [], [], []
-            for (f, rg), rows in needed.items():
-                rows.sort()
-                positions = [p for p, _, _ in rows]
-                stats = pagegather.GatherStats()
-                try:
-                    blobs = pagegather.read_binary_rows(
-                        f, rg, "bytes", positions, stats
-                    )
-                    acc["pages_total"].add(stats.pages_total)
-                    acc["pages_read"].add(stats.pages_read)
-                    acc["bytes_total"].add(stats.bytes_total)
-                    acc["bytes_read"].add(stats.bytes_read)
-                except pagegather.Unsupported as exc:
-                    if str(exc).startswith("dense:"):
-                        acc["fallback_dense"].add(1)
-                    # whole-row-group fallback: read only the bytes column and
-                    # `take` the needed positions (the pre-round-4 path)
-                    pf = pq.ParquetFile(f)
-                    blobs = [
-                        b.as_py()
-                        for b in pf.read_row_group(rg, columns=["bytes"])
-                        .column("bytes")
-                        .take(pa.array(positions, type=pa.int64()))
-                    ]
-                    chunk_bytes = 0
-                    md = pf.metadata.row_group(rg)
-                    for ci in range(md.num_columns):
-                        col = md.column(ci)
-                        if col.path_in_schema == "bytes":
-                            chunk_bytes = col.total_uncompressed_size
-                    acc["fallback_rgs"].add(1)
-                    acc["bytes_total"].add(chunk_bytes)
-                    acc["bytes_read"].add(chunk_bytes)
-                for (_, i, cap), blob in zip(rows, blobs):
-                    out_ids.append(i)
-                    out_bytes.append(blob)
-                    out_caps.append(cap)
-            yield pd.DataFrame(
-                {"image_id": out_ids, "bytes": out_bytes, "caption": out_caps}
-            )
+        positions = (sids & ROW_MASK).tolist()
+        stats = pagegather.GatherStats()
+        pf = pq.ParquetFile(f)
+        take = pa.array(positions, type=pa.int64())
+        try:
+            blobs = pagegather.read_binary_rows(f, rg, "bytes", positions, stats)
+            acc["pages_total"].add(stats.pages_total)
+            acc["pages_read"].add(stats.pages_read)
+            acc["bytes_total"].add(stats.bytes_total)
+            acc["bytes_read"].add(stats.bytes_read)
+        except pagegather.Unsupported as exc:
+            if str(exc).startswith("dense:"):
+                acc["fallback_dense"].add(1)
+            # whole-row-group fallback: read only the bytes column and
+            # `take` the needed positions (the pre-round-4 path)
+            blobs = pf.read_row_group(rg, columns=["bytes"]).column("bytes").take(
+                take).to_pylist()
+            md = pf.metadata.row_group(rg)
+            chunk_bytes = next(md.column(ci).total_uncompressed_size
+                               for ci in range(md.num_columns)
+                               if md.column(ci).path_in_schema == "bytes")
+            acc["fallback_rgs"].add(1)
+            acc["bytes_total"].add(chunk_bytes)
+            acc["bytes_read"].add(chunk_bytes)
+        captions = pf.read_row_group(rg, columns=["caption"]).column("caption").take(
+            take).to_pylist()
+        return pd.DataFrame({"sid": sids, "bytes": blobs, "caption": captions})
 
-    return loc.repartition(n_parts, "src_file", "src_rg").mapInPandas(
-        fetch, GATHER_SCHEMA
+    # the shuffle moves endpoint sids only; rg_key (the sid over its row
+    # bits) names the row group, and the path joins on after the shuffle
+    return (
+        ends.select("sid", F.shiftright("sid", ROW_BITS).alias("rg_key"))
+        .repartition(n_parts, "rg_key")
+        .join(F.broadcast(files), F.shiftright("rg_key", ROW_BITS) == F.col("file_idx"))
+        .sortWithinPartitions("rg_key")
+        .select("rg_key", "sid", "path")
+        .mapInPandas(fetch, GATHER_SCHEMA)
     )
 
 
 def verified_edges_from_files(
-    pairs: DataFrame, features: DataFrame, cfg: DedupConfig,
+    pairs: DataFrame, files: DataFrame, cfg: DedupConfig,
     gather_metrics: dict | None = None,
 ) -> DataFrame:
     """Worker-side pair verification: gather_payloads fetches only the
@@ -159,24 +155,24 @@ def verified_edges_from_files(
     corpus shuffle), then the compact slice runs through the join+UDF core
     in verified_edges. Both payload joins read the gather, which runs once:
     they share its exchange (ReuseExchange), so it needs no checkpoint."""
-    return verified_edges(pairs, gather_payloads(pairs, features, gather_metrics), cfg)
+    return verified_edges(pairs, gather_payloads(pairs, files, gather_metrics), cfg)
 
 
 def verified_edges(
     pairs: DataFrame, payload: DataFrame, cfg: DedupConfig,
 ) -> DataFrame:
-    """pairs(id_l, id_r, band_src) x payload(image_id, bytes, caption) ->
+    """pairs(id_l, id_r, band_src) x payload(sid, bytes, caption) ->
     verified edge table (id_l, id_r, band_src, psnr, lcs_len, passed).
 
     `payload` is joined as given, once per pair side: callers pass a slice
     already restricted to pair endpoints (gather_payloads)."""
     left = payload.select(
-        F.col("image_id").alias("id_l"),
+        F.col("sid").alias("id_l"),
         F.col("bytes").alias("bytes_l"),
         F.col("caption").alias("caption_l"),
     )
     right = payload.select(
-        F.col("image_id").alias("id_r"),
+        F.col("sid").alias("id_r"),
         F.col("bytes").alias("bytes_r"),
         F.col("caption").alias("caption_r"),
     )

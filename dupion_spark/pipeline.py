@@ -3,6 +3,7 @@
 The staged dataflow (SURVEY.md §3.1 "Spark shape"):
 
     images
+      ├─ features: one worker-side decode pass; each row gets a long sid
       ├─ exact:   feature-pass pixel SHA-256 → shape prune → hash groups
       ├─ reps:    collapse exact-identical rows to one LSH node; each row
       │           carries its exact-group size
@@ -13,9 +14,13 @@ The staged dataflow (SURVEY.md §3.1 "Spark shape"):
       ├─ edges:   PSNR/LCS verification of candidate pairs
       ├─ cc:      connected components (one union-find task when small,
       │           else large-star/small-star rounds)
-      ├─ clusters: rep assignments expanded to all rows + singletons
+      ├─ clusters: rep assignments expanded to all rows + singletons; a
+      │           component's root is its minimum image_id
       ├─ canonical: senpai election per cluster (O6) from clusters + reps
       └─ rollup/shadow: per-partition rollup + duplicated-partition shadows
+
+One id space, like dupion's integer VfsId: the sid keys every table after
+features and locates each payload; string ids come back only in the outputs.
 
 Every stage goes through the CheckpointManager: under a checkpoint root the
 four persisted stages (features, pairs, verified_edges, clusters) resume when
@@ -121,6 +126,18 @@ def _stage_input(
     return out
 
 
+def _named(pairs: DataFrame, reps: DataFrame) -> DataFrame:
+    """A pair table over rep sids with string endpoints, id_l < id_r: the
+    PipelineResult outputs' way out of the sid space."""
+    names = reps.filter(F.col("sid") == F.col("rep_sid"))
+    left = names.select(F.col("sid").alias("id_l"), F.col("rep_id").alias("_l"))
+    right = names.select(F.col("sid").alias("id_r"), F.col("rep_id").alias("_r"))
+    rest = [c for c in pairs.columns if c not in ("id_l", "id_r")]
+    return pairs.join(left, "id_l").join(right, "id_r").select(
+        F.least("_l", "_r").alias("id_l"), F.greatest("_l", "_r").alias("id_r"), *rest
+    )
+
+
 def run_pipeline(
     spark: SparkSession,
     images: DataFrame,
@@ -152,73 +169,61 @@ def run_pipeline(
     # Per-row incremental resume (the reference's defining cache behavior:
     # vfs/entry.rs:173-198 keeps a row iff (ctime,size) match and pass 2
     # rehashes only rows without a valid cached hash). Graft at file-row
-    # granularity: the features manifest stores a per-file fingerprint map;
-    # when the chain is stale but SOME input files are unchanged, the rebuild
-    # reuses their checkpointed feature rows and re-extracts (decodes) ONLY
-    # new/changed files. New and changed files get file indices from the
-    # prior next_file_idx on, so every row with sid >= fresh_sid is fresh
-    # content and every row below it was reused; the verify stage reuses
-    # prior verdicts only between rows below it. At 10^12 rows with daily
-    # appends this is the difference between re-decoding the corpus and
-    # decoding the delta.
+    # granularity: the features manifest stores a per-file fingerprint and
+    # file index map; when the chain is stale but SOME input files are
+    # unchanged, the rebuild reuses their checkpointed feature rows (selected
+    # by sid >> 40, the file index) and re-extracts (decodes) ONLY new or
+    # changed files. An unchanged file keeps its index and a new or changed
+    # one gets an index from the prior next_file_idx on, so a sid never
+    # names two contents: every row with sid >= fresh_sid is fresh content,
+    # and a prior sid names the same content or no current row. At 10^12
+    # rows with daily appends this is the difference between re-decoding the
+    # corpus and decoding the delta.
     prior_feats = mgr.prior_manifest("features")
     incremental = bool(
-        prior_feats and prior_feats.get("files")
-        and prior_feats.get("config_hash") == cfg.config_hash()
+        prior_feats and prior_feats["files"]
+        and prior_feats["config_hash"] == cfg.config_hash()
     )
-    next_idx = (
-        int(prior_feats.get("next_file_idx", len(prior_feats["files"])))
-        if incremental else 0
-    )
-    fresh_sid = next_idx << 40  # sid = file_idx<<40 | rg<<20 | pos
-    incr: dict = {"reused_files": None, "manifest": {}}
+    next_idx = prior_feats["next_file_idx"] if incremental else 0
+    fresh_sid = next_idx << features_op.FILE_SHIFT
+    incr: dict = {"reused": False, "manifest": {}}
 
-    def _files_df(paths) -> DataFrame:
-        """Tiny (src_file) DataFrame for semi-joining row sets by source file.
-        A `Column.isin(<list>)` here would inline up to 10^6 string literals
-        into the plan — driver-side analysis/serialization cost growing with
-        the corpus file count, the exact bottleneck the distributed footer
-        reads avoid. A broadcast semi-join keeps the plan O(1)."""
-        return F.broadcast(
-            spark.createDataFrame([(p,) for p in sorted(paths)], "src_file string")
-        )
+    def _file_table(files: dict[str, int]) -> DataFrame:
+        """Tiny broadcast (file_idx, path) table: a `Column.isin(<list>)`
+        would inline up to 10^6 literals into the plan, a broadcast join
+        keeps it O(1)."""
+        return F.broadcast(spark.createDataFrame(
+            sorted((i, p) for p, i in files.items()), "file_idx long, path string"
+        ))
 
     def _features() -> DataFrame:
         current = file_fingerprints(source_path)
-        if incremental:
-            prior_files = prior_feats["files"]
-            unchanged = sorted(
-                p for p, fp in current.items()
-                if p in prior_files and prior_files[p]["fp"] == fp
-            )
-            prior_df = mgr.prior_output("features") if unchanged else None
-            if prior_df is not None:
-                fresh = sorted(set(current) - set(unchanged))
-                # fresh files get indices past every previously-used one so
-                # their derived sids can never collide with reused rows'
-                fresh_idx = [(p, next_idx + i) for i, p in enumerate(fresh)]
-                incr["manifest"] = {
-                    "files": {
-                        **{p: {"fp": current[p], "idx": prior_files[p]["idx"]}
-                           for p in unchanged},
-                        **{p: {"fp": current[p], "idx": i} for p, i in fresh_idx},
-                    },
-                    "next_file_idx": next_idx + len(fresh),
-                }
-                incr["reused_files"] = set(unchanged)
-                reused = prior_df.join(_files_df(unchanged), "src_file", "left_semi")
-                if not fresh:
-                    return reused
-                new_rows = features_op.extract_features_from_files(
-                    spark, source_path, cfg, files_with_idx=fresh_idx
-                )
-                return reused.unionByName(new_rows)
+        prior_files = prior_feats["files"] if incremental else {}
+        unchanged = {p: prior_files[p]["idx"] for p, fp in current.items()
+                     if p in prior_files and prior_files[p]["fp"] == fp}
+        prior_df = mgr.prior_output("features") if unchanged else None
+        if prior_df is None:
+            unchanged = {}
+        fresh = sorted(set(current) - set(unchanged))
+        files = {**unchanged, **{p: next_idx + i for i, p in enumerate(fresh)}}
         incr["manifest"] = {
-            "files": {p: {"fp": fp, "idx": i}
-                      for i, (p, fp) in enumerate(sorted(current.items()))},
-            "next_file_idx": len(current),
+            "files": {p: {"fp": current[p], "idx": i} for p, i in files.items()},
+            "next_file_idx": next_idx + len(fresh),
         }
-        return features_op.extract_features_from_files(spark, source_path, cfg)
+
+        def extract(paths: list[str]) -> DataFrame:
+            return features_op.extract_features_from_files(
+                spark, source_path, cfg, files_with_idx=[(p, files[p]) for p in paths]
+            )
+
+        if not unchanged:
+            return extract(fresh)
+        incr["reused"] = True
+        reused = prior_df.join(
+            _file_table(unchanged),
+            F.shiftright("sid", features_op.FILE_SHIFT) == F.col("file_idx"), "left_semi",
+        )
+        return reused.unionByName(extract(fresh)) if fresh else reused
 
     # Barrier policy (see CheckpointManager.stage), the same with or without
     # a checkpoint root; under a root the four persisted stages (features,
@@ -239,7 +244,7 @@ def run_pipeline(
     # corpus size, observed in the job that materialized the feature anchor:
     # reused for the A7 metrics AND as the adaptive band-plan hint
     n_images = mgr.record("features").rows_out
-    if incr["reused_files"] is not None:
+    if incr["reused"]:
         # lineage proof of the incremental rebuild: how many feature rows
         # were reused from the prior checkpoint vs actually re-extracted
         n_reused = mgr.record("features").counters["rows_reused"]
@@ -266,9 +271,8 @@ def run_pipeline(
     # was racing recompute, not work)
     reps = mgr.stage("reps", lambda: exact.representatives(hashes), ["hashes"])
 
-    # signatures has two consumers — bands, and the pairs stage's id_map
-    # projection (sid -> rep_id). Both read the same cheap column slice of
-    # the MATERIALIZED feature anchor, so no extra barrier is needed.
+    # signatures feeds bands only: a cheap column slice of the MATERIALIZED
+    # feature anchor, so no extra barrier is needed
     sigs = mgr.stage(
         "signatures",
         lambda: features_op.signatures_from_features(feats, reps),
@@ -281,55 +285,48 @@ def run_pipeline(
     )
     # candidate generation prefilters + dedupes inline (operators/lsh): the
     # materialized pairs table IS the verify input — raw band-collision pairs
-    # never hit a barrier or a shuffle. Band rows carry the long surrogate
-    # sid; the (sid -> image_id) map restores strings on the pair output.
+    # never hit a barrier or a shuffle. Pairs, verified edges and the
+    # connected-components input all key on the reps' sids; string ids come
+    # back only in the outputs (_named).
     # star-recall exposure counter: pairs whose ONLY provenance is hub-star
     # links (band_src 'star_*', operators/lsh) are the population exposed to
     # the documented over-cap star caveat — surfaced per run so saturation
     # degradation is visible instead of latent.
     pairs = mgr.stage(
-        "pairs",
-        lambda: lsh.candidate_pairs(
-            bands, cfg, id_map=sigs.select("sid", "rep_id"), n_reps=n_images
-        ),
+        "pairs", lambda: lsh.candidate_pairs(bands, cfg, n_reps=n_images),
         ["bands"],
         counters={"star_only_pairs": F.count_if(F.col("band_src").startswith("star_"))},
     )
     mgr.extra_lineage.append(
         ("pairs", "star_only_pairs", mgr.record("pairs").counters["star_only_pairs"])
     )
+    # the sid -> path map of the payload gather: this run's file indices,
+    # or the resumed features manifest's
+    files = (incr["manifest"] or prior_feats)["files"]
 
     def _verify() -> DataFrame:
-        # incremental verdict reuse: a prior run's (id_l, id_r) verdict is
-        # valid iff neither endpoint is fresh content (content identical =>
-        # deterministic verify verdict identical) AND the pair was
-        # regenerated by the CURRENT pair stage (so the edge set equals a
-        # from-scratch run's exactly — a stale candidate that no longer
-        # band-collides, or one whose endpoint was deleted, must not
-        # survive). One left join of the current pairs onto the valid prior
-        # verdicts, materialized once, splits them; unmatched pairs are
-        # verified.
+        # incremental verdict reuse: a prior (id_l, id_r) verdict is valid
+        # for a current pair over the same sids, because a prior sid names
+        # the same content or no current row (see above), and the left join
+        # keeps only pairs the CURRENT pair stage generated (so the edge set
+        # equals a from-scratch run's exactly). That holds only for verdicts
+        # computed against the prior features: a run that wrote features and
+        # then failed before verify leaves older verdicts behind, whose
+        # changed files the prior manifest already counts as unchanged, so
+        # the verdicts' features parent must be the prior features manifest.
+        # One left join, materialized once, splits the pairs; unmatched pairs
+        # are verified.
         fresh_pairs, cached = pairs, None
         prior_manifest = mgr.prior_manifest("verified_edges")
         if (
-            incr["reused_files"]
+            incr["reused"]
             and prior_manifest
-            and prior_manifest.get("config_hash") == cfg.config_hash()
+            and prior_manifest["parent_hashes"][-1] == mgr.manifest_hash(prior_feats)
         ):
             prior_edges = mgr.prior_output("verified_edges")
             if prior_edges is not None:
-                fresh_ids = feats.filter(F.col("sid") >= F.lit(fresh_sid)).select(
-                    "image_id"
-                )
-                valid = (
-                    prior_edges
-                    .join(fresh_ids.withColumnRenamed("image_id", "id_l"),
-                          "id_l", "left_anti")
-                    .join(fresh_ids.withColumnRenamed("image_id", "id_r"),
-                          "id_r", "left_anti")
-                    .select("id_l", "id_r", "psnr", "lcs_len", "passed",
-                            F.lit(True).alias("_hit"))
-                )
+                valid = prior_edges.select("id_l", "id_r", "psnr", "lcs_len", "passed",
+                                           F.lit(True).alias("_hit"))
                 hit = F.col("_hit").isNotNull()
                 joined, split = counted_checkpoint(
                     pairs.join(valid, ["id_l", "id_r"], "left"),
@@ -346,10 +343,11 @@ def run_pipeline(
                     "id_l", "id_r", "band_src", "psnr", "lcs_len", "passed"
                 )
                 fresh_pairs = joined.filter(~hit).select("id_l", "id_r", "band_src")
-        # features carry (file, row group) payload locators: verify reads
-        # payloads worker-side — pair bytes never cross the Arrow boundary
+        # the sids locate the payloads: verify reads them worker-side — pair
+        # bytes never cross the Arrow boundary
         out = verify.verified_edges_from_files(
-            fresh_pairs, feats, cfg, gather_metrics=gather_acc
+            fresh_pairs, _file_table({p: f["idx"] for p, f in files.items()}), cfg,
+            gather_metrics=gather_acc,
         )
         return out.unionByName(cached) if cached is not None else out
 
@@ -434,12 +432,12 @@ def run_pipeline(
     )
 
     return PipelineResult(
-        hashes=hashes,
+        hashes=hashes.drop("sid"),
         exact_groups=groups,
         clusters=clusters,
         canonical=canonical,
-        verified_edges=edges,
-        candidate_pairs=pairs,
+        verified_edges=_named(edges, reps),
+        candidate_pairs=_named(pairs, reps),
         rollup=roll,
         shadows=shadows,
         lineage=lineage,

@@ -12,6 +12,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory holding the dupion_spark package
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "dupion_spark",
@@ -42,6 +45,9 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Python workers unpickle every mapInPandas body by module path, so
+        # they import this package wherever the driver was started from
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)

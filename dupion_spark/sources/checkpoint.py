@@ -54,6 +54,13 @@ from dupion_spark.config import DedupConfig
 # module docstring for why these four)
 PERSISTED_STAGES = frozenset({"features", "pairs", "verified_edges", "clusters"})
 
+# the persisted tables' layout, stamped into every manifest. A manifest of
+# another layout counts as absent, so a root written before a schema change
+# rebuilds once instead of resuming, or rebuilding incrementally, into the
+# old schema. Layout 2: features, pairs and verified_edges key on the long
+# sid, and features lost their (src_file, src_rg, src_pos) locator columns.
+LAYOUT = 2
+
 
 @dataclass
 class StageRecord:
@@ -186,16 +193,18 @@ class CheckpointManager:
 
     # -- prior-run access (incremental rebuilds) ------------------------------
     def prior_manifest(self, stage: str) -> dict | None:
-        """The stage's on-disk manifest from the PREVIOUS run, valid or stale.
-        Incremental rebuilds use its per-file map / config hash to decide what
-        is still reusable at row granularity."""
+        """The stage's on-disk manifest from the PREVIOUS run, valid or stale,
+        or None when absent or of another LAYOUT. Incremental rebuilds use its
+        per-file map / config hash to decide what is still reusable at row
+        granularity."""
         if not self.root:
             return None
         path = self._manifest_path(stage)
         if not os.path.exists(path):
             return None
         with open(path) as fh:
-            return json.load(fh)
+            manifest = json.load(fh)
+        return manifest if manifest.get("layout") == LAYOUT else None
 
     def prior_output(self, stage: str) -> DataFrame | None:
         """The stage's previous parquet output (None when absent or when the
@@ -206,8 +215,7 @@ class CheckpointManager:
         prior = self.prior_manifest(stage)
         if not prior:
             return None
-        data_dir = prior.get("data_dir", stage)
-        path = os.path.join(self.root, data_dir)
+        path = os.path.join(self.root, prior["data_dir"])
         if not os.path.isdir(path):
             return None
         return self.spark.read.parquet(path)
@@ -225,10 +233,11 @@ class CheckpointManager:
             # resumed run over different data cannot reuse stale parquet
             "input_hash": self.input_fingerprint if not parents else "",
             "parent_hashes": [self._hashes[p] for p in parents],
+            "layout": LAYOUT,
         }
 
     @staticmethod
-    def _hash_manifest(manifest: dict) -> str:
+    def manifest_hash(manifest: dict) -> str:
         core = {
             k: manifest.get(k, "")
             for k in ("stage", "config_hash", "input_hash", "parent_hashes")
@@ -305,7 +314,7 @@ class CheckpointManager:
         expected_hash = ""
         if self.root:
             expected = self._expected_manifest(name, parents)
-            expected_hash = self._hash_manifest(expected)
+            expected_hash = self.manifest_hash(expected)
             if name in PERSISTED_STAGES:
                 return self._persisted_stage(
                     name, build, expected, expected_hash, manifest_extra,
@@ -333,26 +342,21 @@ class CheckpointManager:
         manifest_path = self._manifest_path(name)
         data_path = self._data_path(name, expected_hash)
 
-        if os.path.exists(manifest_path):
-            with open(manifest_path) as fh:
-                on_disk = json.load(fh)
-            if self._hash_manifest(on_disk) == expected_hash:
-                resume_path = os.path.join(
-                    self.root, on_disk.get("data_dir", name)
-                )
-                df = (
-                    self.spark.read.table(self._table_ident(name))
-                    if self.catalog
-                    else self.spark.read.parquet(resume_path)
-                )
-                values = {"rows": on_disk.get("rows", -1),
-                          **on_disk.get("counters", {})}
-                if any(k not in values for k in counters):
-                    # a manifest written before counters were kept
-                    values = self._count(df, counters)
-                self._hashes[name] = expected_hash
-                self._record(name, values, start, True, expected_hash)
-                return df
+        on_disk = self.prior_manifest(name)
+        if on_disk and self.manifest_hash(on_disk) == expected_hash:
+            resume_path = os.path.join(self.root, on_disk["data_dir"])
+            df = (
+                self.spark.read.table(self._table_ident(name))
+                if self.catalog
+                else self.spark.read.parquet(resume_path)
+            )
+            values = {"rows": on_disk["rows"], **on_disk.get("counters", {})}
+            if any(k not in values for k in counters):
+                # a manifest written before counters were kept
+                values = self._count(df, counters)
+            self._hashes[name] = expected_hash
+            self._record(name, values, start, True, expected_hash)
+            return df
 
         df = build()
         snapshot_id = int(time.time() * 1000)

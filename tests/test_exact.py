@@ -132,10 +132,11 @@ def test_representatives_of_pruned_rows(spark):
     """A pruned row (null pixel_sha256) is its own rep with one copy, and
     an exact group's rows share the minimum member id and the group size."""
     hashes = spark.createDataFrame(
-        [("b", 20, b"s", b"p1"), ("a", 20, b"s", b"p1"), ("c", 30, b"t", b"p2"),
-         ("d", 40, b"u", None), ("e", 40, b"u", None)],
-        "image_id string, byte_len long, byte_sha256 binary, pixel_sha256 binary",
+        [("b", 0, 20, b"s", b"p1"), ("a", 1, 20, b"s", b"p1"), ("c", 2, 30, b"t", b"p2"),
+         ("d", 3, 40, b"u", None), ("e", 4, 40, b"u", None)],
+        "image_id string, sid long, byte_len long, byte_sha256 binary, "
+        "pixel_sha256 binary",
     )
     got = {tuple(r) for r in exact.representatives(hashes).collect()}
-    assert got == {("a", "a", 20, 2), ("b", "a", 20, 2), ("c", "c", 30, 1),
-                   ("d", "d", 40, 1), ("e", "e", 40, 1)}
+    assert got == {("a", 1, "a", 1, 20, 2), ("b", 0, "a", 1, 20, 2), ("c", 2, "c", 2, 30, 1),
+                   ("d", 3, "d", 3, 40, 1), ("e", 4, "e", 4, 40, 1)}

@@ -52,12 +52,18 @@ def _sigs(spark, rows):
 
 def _pairs(sigs, cfg, bands=None, n_reps=None):
     """Collected candidate pairs over string ids (the sid -> rep_id map
-    restores them, as in the pipeline)."""
+    restores them, as the pipeline's outputs do)."""
     if bands is None:
         bands = lsh.band_table(sigs, cfg, n_reps=n_reps)
-    return lsh.candidate_pairs(
-        bands, cfg, id_map=sigs.select("sid", "rep_id"), n_reps=n_reps
-    ).collect()
+    pairs = lsh.candidate_pairs(bands, cfg, n_reps=n_reps)
+    ml = sigs.select(F.col("sid").alias("id_l"), F.col("rep_id").alias("_l"))
+    mr = sigs.select(F.col("sid").alias("id_r"), F.col("rep_id").alias("_r"))
+    return (
+        pairs.join(ml, "id_l").join(mr, "id_r")
+        .select(F.least("_l", "_r").alias("id_l"), F.greatest("_l", "_r").alias("id_r"),
+                "band_src")
+        .collect()
+    )
 
 
 def _signed(v: int) -> int:
@@ -1013,18 +1019,17 @@ def test_bucket_kernel_matches_brute_force(monkeypatch):
 
 def test_candidate_pairs_job_count(spark):
     """candidate_pairs on the planted fixture runs a pinned number of Spark
-    jobs: level 1 checkpointed and counted, level 2, the dedup and the id
-    restore. A change that adds LSH jobs has to change this pin."""
+    jobs: level 1 checkpointed and counted, level 2 and the dedup. A change
+    that adds LSH jobs has to change this pin."""
     sigs = _sigs(spark, _rows())
     bands = lsh.band_table(sigs, CFG)
     sc = spark.sparkContext
     sc.setJobGroup("lsh-job-count", "candidate_pairs job count")
     try:
-        lsh.candidate_pairs(bands, CFG, id_map=sigs.select("sid", "rep_id")).collect()
+        lsh.candidate_pairs(bands, CFG).collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    # 8 here; the SQL cascade it replaced ran 20-21 on the same call
-    assert len(sc.statusTracker().getJobIdsForGroup("lsh-job-count")) == 8
+    assert len(sc.statusTracker().getJobIdsForGroup("lsh-job-count")) == 6
 
 
 def test_overcap_star_bucket_is_linear(spark):
@@ -1034,8 +1039,7 @@ def test_overcap_star_bucket_is_linear(spark):
     bands = spark.range(n).selectExpr(
         "id AS rep_id", "0L AS phash", "0L AS simhash",
         f"{lsh.SIMHASH_BIT | 12345}L AS band_key")
-    id_map = spark.range(n).selectExpr("id AS sid", "format_string('m%05d', id) AS rep_id")
-    got = lsh.candidate_pairs(bands, DedupConfig(), id_map).collect()
+    got = lsh.candidate_pairs(bands, DedupConfig()).collect()
     assert len(got) == n - 1
-    assert {(r["id_l"], r["band_src"]) for r in got} == {("m00000", "star_simhash")}
+    assert {(r["id_l"], r["band_src"]) for r in got} == {(0, "star_simhash")}
     assert len({r["id_r"] for r in got}) == n - 1

@@ -250,3 +250,43 @@ def test_real_codec_six_format_group_clusters(spark):
              for k in ("f_png", "f_jpg", "f_gif", "f_bmp", "f_tif", "f_ppm")}
     assert len(roots) == 1, f"six formats split into {roots}"
     assert roots.pop() not in {assign[f"uniq{i}"] for i in range(6)}
+
+
+# --- Spark jobs per stage: a change that adds jobs has to say so ------------
+# Each stage call runs in its own job group; jobs outside every stage (input
+# staging, lineage) fall in "pipeline", and the clusters + canonical read a
+# caller makes after the run in "read". Plain-composition stages run their
+# jobs inside the first stage that reads them.
+JOBS_PER_STAGE = {
+    "pipeline": 3, "features": 4, "hashes": 3, "exact_groups": 0, "reps": 4,
+    "signatures": 0, "bands": 0, "pairs": 7, "verified_edges": 6,
+    "clusters": 9, "canonical": 0, "rollup": 3, "shadows": 4, "read": 7,
+}
+
+
+def test_jobs_per_stage(spark, images_df, partition_map_df, cfg, monkeypatch):
+    from dupion_spark.sources.checkpoint import CheckpointManager
+
+    sc = spark.sparkContext
+    stage = CheckpointManager.stage
+
+    def grouped(mgr, name, *args, **kwargs):
+        sc.setJobGroup(f"jobs:{name}", name)
+        try:
+            return stage(mgr, name, *args, **kwargs)
+        finally:
+            sc.setJobGroup("jobs:pipeline", "pipeline")
+
+    monkeypatch.setattr(CheckpointManager, "stage", grouped)
+    images_df.count(), partition_map_df.count()  # fill the fixtures' caches
+    sc.setJobGroup("jobs:pipeline", "pipeline")
+    try:
+        result = run_pipeline(spark, images_df, cfg, partition_map=partition_map_df)
+        sc.setJobGroup("jobs:read", "read")
+        result.clusters.select("image_id", "cluster_root").collect()
+        result.canonical.count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    got = {g: len(sc.statusTracker().getJobIdsForGroup(f"jobs:{g}"))
+           for g in JOBS_PER_STAGE}
+    assert got == JOBS_PER_STAGE, f"jobs per stage: {got}"

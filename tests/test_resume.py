@@ -13,6 +13,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import shutil
 
 import pandas as pd
 import pytest
@@ -333,6 +334,123 @@ def test_incremental_resume_add_change_delete(spark, images_df, tmp_path):
     scratch = run_pipeline(spark, spark.read.parquet(src), cfg, source_path=src)
     assert _clusters(second) == _clusters(scratch)
     assert len(_clusters(second)) == n_rows
+
+
+def _edge_set(result) -> set[tuple]:
+    return {
+        (r["id_l"], r["id_r"], r["band_src"], round(r["psnr"], 3), r["lcs_len"], r["passed"])
+        for r in result.verified_edges.collect()
+    }
+
+
+def test_verdicts_of_an_older_features_version_are_not_reused(
+    spark, images_df, tmp_path, monkeypatch
+):
+    """Run 2 rewrites one file's captions and fails inside verify after
+    writing features and pairs, so the root keeps run 1's verdicts beside run
+    2's features. Run 3 appends a file: run 2's manifest counts the rewritten
+    file as unchanged, so run 1's verdicts would bring back the old
+    captions' lcs_len. Verdicts are reused only when their features parent
+    is the prior features manifest."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dupion_spark.operators import verify
+
+    src = str(tmp_path / "src")
+    ckpt = str(tmp_path / "ckpt")
+    cfg = DedupConfig()
+    base = images_df.limit(400)
+    base.repartition(4).write.mode("overwrite").parquet(src)
+    run_pipeline(spark, spark.read.parquet(src), cfg, checkpoint_dir=ckpt, source_path=src)
+
+    part = _parts(src)[0]
+    table = pq.read_table(part)
+    table = table.set_column(table.schema.get_field_index("caption"), "caption",
+                             pa.array([""] * table.num_rows, pa.string()))
+    pq.write_table(table, part)
+    os.remove(os.path.join(src, f".{os.path.basename(part)}.crc"))  # stale checksum
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("verify failed")
+
+    with monkeypatch.context() as m:
+        m.setattr(verify, "verified_edges_from_files", fail)
+        with pytest.raises(RuntimeError, match="verify failed"):
+            run_pipeline(spark, spark.read.parquet(src), cfg,
+                         checkpoint_dir=ckpt, source_path=src)
+
+    extra = images_df.subtract(base.select(*images_df.columns)).limit(100)
+    extra.coalesce(1).write.mode("append").parquet(src)
+    third = run_pipeline(spark, spark.read.parquet(src), cfg,
+                         checkpoint_dir=ckpt, source_path=src)
+    assert _lineage_extras(third, "features") == {"rows_reused": 400, "rows_recomputed": 100}
+    assert _lineage_extras(third, "verified_edges").get("pairs_reused", 0) == 0
+
+    scratch = run_pipeline(spark, spark.read.parquet(src), cfg, source_path=src)
+    assert _edge_set(third) == _edge_set(scratch)
+    assert _clusters(third) == _clusters(scratch)
+
+
+def test_root_of_the_string_id_layout_rebuilds_once(spark, images_df, tmp_path):
+    """A root in the layout before the sid keyed every table — features
+    with (src_file, src_rg, src_pos) columns, pairs and verified edges over
+    string ids, manifests without a layout — is never read. With a changed
+    file, where a current root rebuilds incrementally, the next run rebuilds
+    features, pairs, verified_edges and clusters whole, equal to a
+    from-scratch run, retires the old data and resumes afterwards."""
+    src = str(tmp_path / "src")
+    ckpt = str(tmp_path / "ckpt")
+    cfg = DedupConfig()
+    images_df.limit(300).repartition(3).write.mode("overwrite").parquet(src)
+    first = run_pipeline(spark, spark.read.parquet(src), cfg,
+                         checkpoint_dir=ckpt, source_path=src)
+
+    def manifest(stage: str) -> dict:
+        with open(os.path.join(ckpt, f"{stage}.manifest.json")) as fh:
+            return json.load(fh)
+
+    files = spark.createDataFrame(
+        [(f["idx"], p) for p, f in manifest("features")["files"].items()],
+        "_idx long, src_file string",
+    )
+    feats = spark.read.parquet(os.path.join(ckpt, manifest("features")["data_dir"]))
+    sid = F.col("sid")
+    old_tables = {
+        "features": feats.join(files, F.shiftright(sid, 40) == F.col("_idx")).select(
+            *[c for c in feats.columns if c != "sid"], "src_file",
+            F.shiftright(sid, 20).bitwiseAND(0xFFFFF).cast("int").alias("src_rg"),
+            sid.bitwiseAND(0xFFFFF).cast("int").alias("src_pos"), "sid",
+        ),
+        "pairs": first.candidate_pairs,
+        "verified_edges": first.verified_edges,
+    }
+    for stage, df in old_tables.items():
+        df.write.parquet(os.path.join(ckpt, f"{stage}@01d1ay0u"))
+    for stage in ("features", "pairs", "verified_edges", "clusters"):
+        data = manifest(stage)
+        data.pop("layout")
+        if stage in old_tables:
+            shutil.rmtree(os.path.join(ckpt, data["data_dir"]))
+            data["data_dir"] = f"{stage}@01d1ay0u"
+        with open(os.path.join(ckpt, f"{stage}.manifest.json"), "w") as fh:
+            json.dump(data, fh)
+
+    os.utime(_parts(src)[0])
+    rebuilt = run_pipeline(spark, spark.read.parquet(src), cfg,
+                           checkpoint_dir=ckpt, source_path=src)
+    resumed = _stage_resumed(rebuilt)
+    assert not any(resumed[s] for s in ("features", "pairs", "verified_edges", "clusters"))
+    assert _lineage_extras(rebuilt, "features") == {}
+    assert "pairs_reused" not in _lineage_extras(rebuilt, "verified_edges")
+    scratch = run_pipeline(spark, spark.read.parquet(src), cfg, source_path=src)
+    assert _clusters(rebuilt) == _clusters(scratch)
+    assert _edge_set(rebuilt) == _edge_set(scratch)
+    assert not glob.glob(os.path.join(ckpt, "*@01d1ay0u"))
+
+    again = run_pipeline(spark, spark.read.parquet(src), cfg,
+                         checkpoint_dir=ckpt, source_path=src)
+    assert all(_stage_resumed(again).values()), _stage_resumed(again)
 
 
 def _check_counters(result, n_images: int) -> None:
