@@ -37,7 +37,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -193,18 +193,12 @@ def attach_singletons(assignments: DataFrame, nodes: DataFrame) -> DataFrame:
 
 
 def expand_representatives(assignments: DataFrame, reps: DataFrame) -> DataFrame:
-    """Rep-sid assignments (connected_components over the pipeline's sid
-    edges) -> (image_id, cluster_root) for every row of reps
-    (operators/exact.representatives). cluster_root is the component's
-    minimum rep_id, so its minimum image_id: a window over the assignments,
-    edge-proportional, never the corpus. A rep in no edge is its own root."""
-    names = reps.filter(F.col("sid") == F.col("rep_sid")).select("rep_sid", "rep_id")
-    rep_assign = assignments.select(
-        F.col("image_id").alias("rep_sid"), F.col("cluster_root").alias("_comp")
-    ).join(names, "rep_sid").select(
-        "rep_sid", F.min("rep_id").over(Window.partitionBy("_comp")).alias("cluster_root")
-    )
-    return reps.join(rep_assign, "rep_sid", "left").select(
+    """Rep assignments (connected_components over the reps' names) ->
+    (image_id, cluster_root) for every row of reps
+    (operators/exact.representatives): one left join on rep_id. A rep in no
+    edge is its own root."""
+    rep_assign = assignments.select(F.col("image_id").alias("rep_id"), "cluster_root")
+    return reps.join(rep_assign, "rep_id", "left").select(
         "image_id",
         F.coalesce(F.col("cluster_root"), F.col("rep_id")).alias("cluster_root"),
     )

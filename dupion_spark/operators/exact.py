@@ -50,7 +50,7 @@ def representatives(hashes: DataFrame) -> DataFrame:
     (signatures of identical pixels are identical, so the collapsed graph has
     the same connected components). This is the first skew weapon: an exact
     mega-group becomes ONE LSH node. rep_id is the group's minimum member id,
-    rep_sid (its key in every later table) that member's sid and
+    rep_sid (its key in the LSH and verify tables) that member's sid and
     exact_copies the group size, which the canonical election reads.
 
     groupBy-agg, NOT a window: a window over pixel_sha256 full-sorts each

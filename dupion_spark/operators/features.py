@@ -9,8 +9,8 @@ from storage (object store / table files). Here: each Spark task receives
 parquet file PATHS, reads them with pyarrow directly (no JVM transfer), and
 emits only the small feature columns:
 
-    image_id, byte_len, byte_sha256, pixel_sha256, w, h, fmt, caption_ref,
-    minhash, simhash, phash
+    image_id, byte_len, byte_sha256, pixel_sha256, w, h, minhash, simhash,
+    phash, sid
 
 This single pass replaces the separate hash + signature UDF stages (bytes
 would otherwise cross the boundary twice). It is the only feature path:
@@ -48,7 +48,6 @@ FEATURE_SCHEMA = T.StructType(
         T.StructField("pixel_sha256", T.BinaryType()),
         T.StructField("w", T.IntegerType()),
         T.StructField("h", T.IntegerType()),
-        T.StructField("caption", T.StringType()),
         # int32: minhash values are mod (2^31-1) by construction — halves
         # the dominant column of the feature checkpoint + Arrow transfer
         T.StructField("minhash", T.ArrayType(T.IntegerType())),
@@ -56,10 +55,10 @@ FEATURE_SCHEMA = T.StructType(
         T.StructField("phash", T.LongType()),
         # sid: data-derived LONG id (file_idx<<40 | rg<<20 | pos), the one
         # key of every table from here to the outputs (reps, band rows,
-        # pairs, verified edges, the connected-components input). It is also
+        # pairs, verified edges, verdict reuse). It is also
         # the payload locator: the file index maps to a path through the
         # features manifest, so verify re-reads exactly the rows it needs
-        # worker-side. String ids come back only in the pipeline outputs.
+        # worker-side, names included.
         T.StructField("sid", T.LongType()),
     ]
 )
@@ -67,7 +66,7 @@ FEATURE_SCHEMA = T.StructType(
 
 def _extract_rows(table, cfg: DedupConfig, rg: int, file_idx: int) -> pd.DataFrame:
     out = {k: [] for k in ("image_id", "byte_len", "byte_sha256", "pixel_sha256",
-                           "w", "h", "caption", "minhash", "simhash", "phash")}
+                           "w", "h", "minhash", "simhash", "phash")}
     ids = table.column("image_id").to_pylist()
     blobs = table.column("bytes").to_pylist()
     captions = table.column("caption").to_pylist()
@@ -84,13 +83,10 @@ def _extract_rows(table, cfg: DedupConfig, rg: int, file_idx: int) -> pd.DataFra
     # ~25 small-array numpy calls per image (~20% off the signature term,
     # the largest CPU slice of this stage)
     sim_b, ph_b = signatures.pixel_signatures_batch(decoded, cfg)
-    for image_id, blob, caption, pixels, sh, ph in zip(
-        ids, blobs, captions, decoded, sim_b, ph_b
-    ):
+    for image_id, blob, pixels, sh, ph in zip(ids, blobs, decoded, sim_b, ph_b):
         out["image_id"].append(image_id)
         out["byte_len"].append(len(blob))
         out["byte_sha256"].append(hashlib.sha256(blob).hexdigest())
-        out["caption"].append(caption or "")
         if pixels is None:  # non-image payload (container/corrupt): F4 —
             out["pixel_sha256"].append(None)  # byte-hash-only row
             out["w"].append(0)
@@ -174,7 +170,8 @@ def extract_features_from_files(
             F.explode(F.sequence(F.lit(0), F.col("n_rg") - 1)).alias("row_group"),
         )
     )
-    split_df = splits.repartition(min(n["rows"], 4096))
+    # at least one partition: an input with no row group has no split
+    split_df = splits.repartition(max(min(n["rows"], 4096), 1))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

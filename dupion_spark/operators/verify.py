@@ -7,7 +7,8 @@ pairs that survived LSH banding.
 Scale notes: the sid keys pairs, payloads and verdicts and locates each
 payload, so gather_payloads reads the endpoint rows from the input files with
 no feature join; the two payload joins are sort-merge joins on sid over that
-candidate-sized slice. The verify UDF receives Arrow batches bounded by
+candidate-sized slice; the same read gives every edge its endpoints' names.
+The verify UDF receives Arrow batches bounded by
 spark.sql.execution.arrow.maxRecordsPerBatch so executor memory stays bounded
 (two decoded images per pair in flight per row)."""
 
@@ -30,6 +31,7 @@ from dupion_spark.operators.lsh import key_runs
 GATHER_SCHEMA = T.StructType(
     [
         T.StructField("sid", T.LongType()),
+        T.StructField("image_id", T.StringType()),
         T.StructField("bytes", T.BinaryType()),
         T.StructField("caption", T.StringType()),
     ]
@@ -47,9 +49,9 @@ def gather_payloads(
     partitioned BY row group (explicit partition count — without it AQE
     coalesces the tiny locator rows into one partition and a single Python
     worker does every read), and each task reads its row groups directly,
-    emitting only the endpoint payload rows (sid, bytes, caption). Output
-    size is proportional to the CANDIDATE set, not the corpus — the compact
-    slice then feeds the ordinary join+UDF verify. An earlier design
+    emitting only the endpoint payload rows (sid, image_id, bytes, caption).
+    Output size is proportional to the CANDIDATE set, not the corpus — the
+    compact slice then feeds the ordinary join+UDF verify. An earlier design
     partitioned by PAIR and re-read row groups per batch: the right side of a
     pair list touches nearly every row group, so every worker re-decompressed
     most of the corpus regardless of parallelism — measured as a ~14 s
@@ -65,7 +67,7 @@ def gather_payloads(
     column: a dict-encoded chunk keeps every payload in its dictionary page,
     which forces a full-chunk decompress regardless of selectivity (synth.py
     writes bytes with use_dictionary off, as production blob writers do).
-    Captions are small and read whole per touched row group.
+    Names and captions are small and read whole per touched row group.
 
     gather_metrics: optional dict that receives Spark accumulators
     {bytes_read, bytes_total, pages_read, pages_total, fallback_rgs,
@@ -130,9 +132,11 @@ def gather_payloads(
             acc["fallback_rgs"].add(1)
             acc["bytes_total"].add(chunk_bytes)
             acc["bytes_read"].add(chunk_bytes)
-        captions = pf.read_row_group(rg, columns=["caption"]).column("caption").take(
-            take).to_pylist()
-        return pd.DataFrame({"sid": sids, "bytes": blobs, "caption": captions})
+        small = pf.read_row_group(rg, columns=["image_id", "caption"]).take(take)
+        return pd.DataFrame({
+            "sid": sids, "image_id": small.column("image_id").to_pylist(),
+            "bytes": blobs, "caption": small.column("caption").to_pylist(),
+        })
 
     # the shuffle moves endpoint sids only; rg_key (the sid over its row
     # bits) names the row group, and the path joins on after the shuffle
@@ -161,18 +165,22 @@ def verified_edges_from_files(
 def verified_edges(
     pairs: DataFrame, payload: DataFrame, cfg: DedupConfig,
 ) -> DataFrame:
-    """pairs(id_l, id_r, band_src) x payload(sid, bytes, caption) ->
-    verified edge table (id_l, id_r, band_src, psnr, lcs_len, passed).
+    """pairs(id_l, id_r, band_src) x payload(sid, image_id, bytes, caption)
+    -> verified edge table (id_l, id_r, name_l, name_r, band_src, psnr,
+    lcs_len, passed): the sids stay the edge's key, and name_l/name_r are
+    the endpoints' image_ids.
 
     `payload` is joined as given, once per pair side: callers pass a slice
     already restricted to pair endpoints (gather_payloads)."""
     left = payload.select(
         F.col("sid").alias("id_l"),
+        F.col("image_id").alias("name_l"),
         F.col("bytes").alias("bytes_l"),
         F.col("caption").alias("caption_l"),
     )
     right = payload.select(
         F.col("sid").alias("id_r"),
+        F.col("image_id").alias("name_r"),
         F.col("bytes").alias("bytes_r"),
         F.col("caption").alias("caption_r"),
     )
@@ -201,6 +209,8 @@ def verified_edges(
         .select(
             "id_l",
             "id_r",
+            "name_l",
+            "name_r",
             "band_src",
             F.col("_v.psnr").alias("psnr"),
             F.col("_v.lcs_len").alias("lcs_len"),

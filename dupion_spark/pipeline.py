@@ -11,16 +11,18 @@ The staged dataflow (SURVEY.md §3.1 "Spark shape"):
       ├─ bands:   LSH band explode → band_key
       ├─ pairs:   one bucket kernel per key shuffle (+ hub stars and
       │           sub-bands for over-cap buckets)
-      ├─ edges:   PSNR/LCS verification of candidate pairs
-      ├─ cc:      connected components (one union-find task when small,
-      │           else large-star/small-star rounds)
-      ├─ clusters: rep assignments expanded to all rows + singletons; a
-      │           component's root is its minimum image_id
+      ├─ edges:   PSNR/LCS verification of candidate pairs; the payload
+      │           gather reads each endpoint's image_id too
+      ├─ cc:      connected components over the edges' image_ids (one
+      │           union-find task when small, else large-star/small-star
+      │           rounds); a component's root is its minimum image_id
+      ├─ clusters: rep assignments expanded to all rows + singletons
       ├─ canonical: senpai election per cluster (O6) from clusters + reps
       └─ rollup/shadow: per-partition rollup + duplicated-partition shadows
 
 One id space, like dupion's integer VfsId: the sid keys every table after
-features and locates each payload; string ids come back only in the outputs.
+features and locates each payload. Names enter once, where verify reads rows,
+so no stage joins them back; image_id must be the input's primary key.
 
 Every stage goes through the CheckpointManager: under a checkpoint root the
 four persisted stages (features, pairs, verified_edges, clusters) resume when
@@ -126,15 +128,12 @@ def _stage_input(
     return out
 
 
-def _named(pairs: DataFrame, reps: DataFrame) -> DataFrame:
-    """A pair table over rep sids with string endpoints, id_l < id_r: the
+def _named(edges: DataFrame) -> DataFrame:
+    """Verified edges over their endpoints' names, id_l < id_r: the
     PipelineResult outputs' way out of the sid space."""
-    names = reps.filter(F.col("sid") == F.col("rep_sid"))
-    left = names.select(F.col("sid").alias("id_l"), F.col("rep_id").alias("_l"))
-    right = names.select(F.col("sid").alias("id_r"), F.col("rep_id").alias("_r"))
-    rest = [c for c in pairs.columns if c not in ("id_l", "id_r")]
-    return pairs.join(left, "id_l").join(right, "id_r").select(
-        F.least("_l", "_r").alias("id_l"), F.greatest("_l", "_r").alias("id_r"), *rest
+    return edges.select(
+        F.least("name_l", "name_r").alias("id_l"), F.greatest("name_l", "name_r").alias("id_r"),
+        "band_src", "psnr", "lcs_len", "passed",
     )
 
 
@@ -285,9 +284,8 @@ def run_pipeline(
     )
     # candidate generation prefilters + dedupes inline (operators/lsh): the
     # materialized pairs table IS the verify input — raw band-collision pairs
-    # never hit a barrier or a shuffle. Pairs, verified edges and the
-    # connected-components input all key on the reps' sids; string ids come
-    # back only in the outputs (_named).
+    # never hit a barrier or a shuffle. Pairs and verified edges key on the
+    # reps' sids; the verify gather adds the endpoints' names.
     # star-recall exposure counter: pairs whose ONLY provenance is hub-star
     # links (band_src 'star_*', operators/lsh) are the population exposed to
     # the documented over-cap star caveat — surfaced per run so saturation
@@ -325,8 +323,7 @@ def run_pipeline(
         ):
             prior_edges = mgr.prior_output("verified_edges")
             if prior_edges is not None:
-                valid = prior_edges.select("id_l", "id_r", "psnr", "lcs_len", "passed",
-                                           F.lit(True).alias("_hit"))
+                valid = prior_edges.drop("band_src").withColumn("_hit", F.lit(True))
                 hit = F.col("_hit").isNotNull()
                 joined, split = counted_checkpoint(
                     pairs.join(valid, ["id_l", "id_r"], "left"),
@@ -339,9 +336,7 @@ def run_pipeline(
                     ("verified_edges", "pairs_verified",
                      split["rows"] - split["reused"])
                 )
-                cached = joined.filter(hit).select(
-                    "id_l", "id_r", "band_src", "psnr", "lcs_len", "passed"
-                )
+                cached = joined.filter(hit).drop("_hit")
                 fresh_pairs = joined.filter(~hit).select("id_l", "id_r", "band_src")
         # the sids locate the payloads: verify reads them worker-side — pair
         # bytes never cross the Arrow boundary
@@ -364,7 +359,10 @@ def run_pipeline(
             )
 
     def _cluster() -> DataFrame:
-        near = edges.filter(F.col("passed")).select("id_l", "id_r")
+        # on the reps' names, so a component's root is its minimum image_id
+        near = edges.filter(F.col("passed")).select(
+            F.col("name_l").alias("id_l"), F.col("name_r").alias("id_r")
+        )
         # singletons: expand_representatives makes an unassigned rep its own root
         rep_assign = cc.connected_components(near, cfg.cc_max_iterations)
         return cc.expand_representatives(rep_assign, reps)
@@ -431,13 +429,15 @@ def run_pipeline(
         metric_rows, "metric string, stage string, value double"
     )
 
+    named = _named(edges)
     return PipelineResult(
         hashes=hashes.drop("sid"),
         exact_groups=groups,
         clusters=clusters,
         canonical=canonical,
-        verified_edges=_named(edges, reps),
-        candidate_pairs=_named(pairs, reps),
+        verified_edges=named,
+        # verified_edges holds exactly one row per candidate pair
+        candidate_pairs=named.select("id_l", "id_r", "band_src"),
         rollup=roll,
         shadows=shadows,
         lineage=lineage,

@@ -59,7 +59,9 @@ PERSISTED_STAGES = frozenset({"features", "pairs", "verified_edges", "clusters"}
 # rebuilds once instead of resuming, or rebuilding incrementally, into the
 # old schema. Layout 2: features, pairs and verified_edges key on the long
 # sid, and features lost their (src_file, src_rg, src_pos) locator columns.
-LAYOUT = 2
+# Layout 3: verified_edges carry their endpoints' names (name_l, name_r), and
+# features lost their caption column.
+LAYOUT = 3
 
 
 @dataclass

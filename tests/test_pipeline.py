@@ -260,33 +260,81 @@ def test_real_codec_six_format_group_clusters(spark):
 JOBS_PER_STAGE = {
     "pipeline": 3, "features": 4, "hashes": 3, "exact_groups": 0, "reps": 4,
     "signatures": 0, "bands": 0, "pairs": 7, "verified_edges": 6,
-    "clusters": 9, "canonical": 0, "rollup": 3, "shadows": 4, "read": 7,
+    "clusters": 6, "canonical": 0, "rollup": 3, "shadows": 4, "read": 7,
+}
+# the same run under a checkpoint root, fresh and then resumed: the path both
+# benchmark workloads run
+JOBS_PER_STAGE_FRESH_ROOT = {
+    "pipeline": 5, "features": 5, "hashes": 3, "exact_groups": 0, "reps": 3,
+    "signatures": 0, "bands": 0, "pairs": 6, "verified_edges": 7,
+    "clusters": 6, "canonical": 0, "rollup": 3, "shadows": 4, "read": 5,
+}
+JOBS_PER_STAGE_RESUMED_ROOT = {
+    "pipeline": 2, "features": 1, "hashes": 3, "exact_groups": 0, "reps": 3,
+    "signatures": 0, "bands": 0, "pairs": 1, "verified_edges": 1,
+    "clusters": 1, "canonical": 0, "rollup": 3, "shadows": 4, "read": 5,
 }
 
 
-def test_jobs_per_stage(spark, images_df, partition_map_df, cfg, monkeypatch):
+def _jobs_per_stage(spark, monkeypatch, tag: str, run) -> dict[str, int]:
+    """Spark jobs per job group of `run()` plus the clusters + canonical read."""
     from dupion_spark.sources.checkpoint import CheckpointManager
 
     sc = spark.sparkContext
     stage = CheckpointManager.stage
 
     def grouped(mgr, name, *args, **kwargs):
-        sc.setJobGroup(f"jobs:{name}", name)
+        sc.setJobGroup(f"{tag}:{name}", name)
         try:
             return stage(mgr, name, *args, **kwargs)
         finally:
-            sc.setJobGroup("jobs:pipeline", "pipeline")
+            sc.setJobGroup(f"{tag}:pipeline", "pipeline")
 
-    monkeypatch.setattr(CheckpointManager, "stage", grouped)
+    with monkeypatch.context() as patch:
+        patch.setattr(CheckpointManager, "stage", grouped)
+        sc.setJobGroup(f"{tag}:pipeline", "pipeline")
+        try:
+            result = run()
+            sc.setJobGroup(f"{tag}:read", "read")
+            result.clusters.select("image_id", "cluster_root").collect()
+            result.canonical.count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    return {g: len(sc.statusTracker().getJobIdsForGroup(f"{tag}:{g}"))
+            for g in JOBS_PER_STAGE}
+
+
+def test_jobs_per_stage(spark, images_df, partition_map_df, cfg, monkeypatch):
     images_df.count(), partition_map_df.count()  # fill the fixtures' caches
-    sc.setJobGroup("jobs:pipeline", "pipeline")
-    try:
-        result = run_pipeline(spark, images_df, cfg, partition_map=partition_map_df)
-        sc.setJobGroup("jobs:read", "read")
-        result.clusters.select("image_id", "cluster_root").collect()
-        result.canonical.count()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    got = {g: len(sc.statusTracker().getJobIdsForGroup(f"jobs:{g}"))
-           for g in JOBS_PER_STAGE}
+    got = _jobs_per_stage(spark, monkeypatch, "jobs", lambda: run_pipeline(
+        spark, images_df, cfg, partition_map=partition_map_df))
     assert got == JOBS_PER_STAGE, f"jobs per stage: {got}"
+
+
+def test_jobs_per_stage_under_a_root(
+    spark, images_df, partition_map_df, cfg, monkeypatch, tmp_path
+):
+    images_df.count(), partition_map_df.count()  # fill the fixtures' caches
+    ckpt = str(tmp_path / "ckpt")
+
+    def run():
+        return run_pipeline(spark, images_df, cfg, partition_map=partition_map_df,
+                            checkpoint_dir=ckpt)
+
+    fresh = _jobs_per_stage(spark, monkeypatch, "jobs-fresh-root", run)
+    resumed = _jobs_per_stage(spark, monkeypatch, "jobs-resumed-root", run)
+    assert fresh == JOBS_PER_STAGE_FRESH_ROOT, f"jobs per stage, fresh root: {fresh}"
+    assert resumed == JOBS_PER_STAGE_RESUMED_ROOT, f"jobs per stage, resumed: {resumed}"
+
+
+@pytest.mark.parametrize("with_root", [False, True])
+def test_empty_input_runs_to_empty_outputs(spark, cfg, tmp_path, with_root):
+    """An input with no rows has no row group to split: the run still
+    finishes, with no cluster, canonical row or pair."""
+    empty = spark.createDataFrame([], "image_id string, bytes binary, caption string")
+    result = run_pipeline(spark, empty, cfg,
+                          checkpoint_dir=str(tmp_path / "ckpt") if with_root else None)
+    assert result.metrics["n_images"] == 0
+    assert result.clusters.count() == 0
+    assert result.canonical.count() == 0
+    assert result.candidate_pairs.count() == 0

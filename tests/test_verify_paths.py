@@ -92,7 +92,7 @@ def test_payload_joins_never_broadcast_blob_side(spark, images_df):
         [(a, b, "pixel") for a, b in zip(ids[::2], ids[1::2])],
         "id_l string, id_r string, band_src string",
     )
-    edges = verify.verified_edges(pairs, images_df.withColumnRenamed("image_id", "sid"), cfg)
+    edges = verify.verified_edges(pairs, images_df.withColumn("sid", F.col("image_id")), cfg)
     plan = edges._jdf.queryExecution().executedPlan().toString()
     # both payload joins present as sort-merge; the blob side is never a
     # broadcast build (a broadcast semi-join would carry ids only, never
